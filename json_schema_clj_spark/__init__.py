@@ -8,7 +8,9 @@ multimethods):
 
 * **Column backend** (`plans.compiler`) — schema compiles once on the
   driver into Catalyst Column predicate trees; whole-stage codegen runs
-  them JVM-side over typed tables.  The 100 TB path.
+  them JVM-side over typed tables (the 100 TB path) and over raw-JSON
+  columns parsed to VariantType.  Each keyword is written once against a
+  value view with a typed and a Variant form.
 * **Python backend** (`pyvalidator`) — a from-scratch interpreter for
   arbitrary (schemaless) JSON documents, applied via Arrow-batched pandas
   UDFs.  The draft-suite conformance path and the fallback for constructs

@@ -1,4 +1,4 @@
-"""Schema → Catalyst Column compiler (the fast path).
+"""Schema → Catalyst Column compiler: one keyword registry, two value views.
 
 The analog of the reference's compile-then-validate engine
 (/root/reference/src/json_schema/core.clj:148-181 `compile-schema`): where
@@ -8,12 +8,30 @@ dispatch through the :data:`KEYWORD_COMPILERS` registry to build a tree of
 Spark SQL *Column expressions* — one boolean `ok` plus an
 `array<violation>` per subschema (:class:`~..plans.ir.Compiled`).
 
+Each keyword body is written once, against a *view* of its target value
+(see "the value view" below), and compiles for two kinds of target:
+
+* a **typed column** (:func:`compile_for_table`) — a table row, struct
+  field, array element or map value.  The view answers from the Spark type
+  at compile time, so type tests fold to literals that Catalyst prunes.
+* a **Variant value** (:func:`compile_for_json`) — a raw-JSON string
+  column parsed with ``try_parse_json``.  The view answers per row: a
+  ``schema_of_variant`` type tag, ``try_variant_get`` casts, and objects
+  and arrays exposed as ``map<string,variant>`` / ``array<variant>`` so
+  the MapType/ArrayType branches of the object and array keywords serve
+  both.  JSON numbers keep their identity: ``1`` is BIGINT (an integer),
+  ``1.0`` is DECIMAL (a number, not an integer); an integer beyond int64
+  parses as DECIMAL(p,0) and is treated as a non-integer (documented
+  limitation).
+
 The compiled tree is pure Catalyst: whole-stage codegen evaluates it
-JVM-side with zero per-row Python.  Keywords whose semantics cannot be
-expressed over the target's Spark type raise
-:class:`ColumnBackendUnsupported`; the engine-level API then falls back to
-the Arrow-batched Python backend (json_schema_clj_spark.pyvalidator) for
-that schema.
+JVM-side with zero per-row Python.  A (schema, target) pair the view cannot
+express raises :class:`ColumnBackendUnsupported` and the engine-level API
+falls back to the Arrow-batched Python backend
+(json_schema_clj_spark.pyvalidator).  On a Variant value that covers
+`$data`, non-scalar enum/const members, `$ref` recursion beyond the unroll
+depth, and any keyword registered after import (its compiler expects a
+typed target).
 
 Extension surface: :func:`register_keyword` mirrors the reference's open
 multimethod (custom keywords `discriminator`, `exclusiveProperties`,
@@ -22,7 +40,9 @@ multimethod (custom keywords `discriminator`, `exclusiveProperties`,
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import re
 from dataclasses import replace
 from decimal import Decimal
@@ -33,7 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import formats
-from .ir import Compiled, Ctx, PathSeg, merge, simple_check, violation
+from .ir import Compiled, Ctx, PathSeg, _typed_empty_array, merge, simple_check, violation
 
 # ---------------------------------------------------------------------------
 
@@ -66,12 +86,17 @@ NOOP_KEYWORDS = {
 }
 
 
-def register_keyword(name: str):
+def register_keyword(name: str, fn: Optional[KeywordCompiler] = None):
+    """Register `fn` for `name` (or use as a decorator).  A keyword
+    registered after import compiles on typed columns only: a Variant
+    compile of a schema that uses it raises
+    :class:`ColumnBackendUnsupported`, so the JSON tier validates that
+    schema on the Python backend instead of dropping the keyword."""
     def deco(fn: KeywordCompiler) -> KeywordCompiler:
         KEYWORD_COMPILERS[name] = fn
         return fn
 
-    return deco
+    return deco if fn is None else deco(fn)
 
 
 # ---------------------------------------------------------------------------
@@ -86,19 +111,159 @@ def _is_numeric(dt) -> bool:
     return isinstance(dt, T.NumericType)
 
 
-def _empty() -> Column:
-    from .ir import _typed_empty_array
-
-    return _typed_empty_array()
+_empty = _typed_empty_array
 
 
-def _null_pass(target: Column, c: Compiled) -> Compiled:
+def _guard(skip: Column, c: Compiled) -> Compiled:
     """Non-applicable / absent values pass (comparator ladder,
     core.clj:93-124; properties guard core.clj:367-389)."""
     return Compiled(
-        ok=F.when(target.isNull(), F.lit(True)).otherwise(c.ok),
-        violations=F.when(target.isNull(), _empty()).otherwise(c.violations),
+        ok=F.when(skip, F.lit(True)).otherwise(c.ok),
+        violations=F.when(skip, _empty()).otherwise(c.violations),
     )
+
+
+# ---------------------------------------------------------------------------
+# the value view
+#
+# Keyword bodies reach their target only through these helpers.  On a typed
+# column (any ctx.dtype but VariantType) they answer from the Spark type at
+# compile time: a type test is `isNotNull` or statically inapplicable, and
+# the value is the column itself.  On a Variant value they answer per row:
+# the type test reads the `schema_of_variant` tag, the value is a
+# `try_variant_get` cast, an object is the `map<string,variant>` of its
+# members and an array the `array<variant>` of its elements.
+
+#: JSON type family -> does a typed column of this Spark type hold it
+_FAMILIES = {
+    "string": lambda dt: isinstance(dt, T.StringType),
+    "boolean": lambda dt: isinstance(dt, T.BooleanType),
+    "number": _is_numeric,
+    # 1.0 is NOT an integer (core.clj:238-244; suite numeric-unification
+    # cases are skipped by the reference — do not "fix")
+    "integer": lambda dt: _is_integral(dt) or (isinstance(dt, T.DecimalType) and dt.scale == 0),
+    "object": lambda dt: isinstance(dt, (T.StructType, T.MapType)),
+    "array": lambda dt: isinstance(dt, T.ArrayType),
+}
+
+#: JSON type family -> the Spark type a Variant value of it is read as
+_VARIANT_AS = {
+    "string": T.StringType(),
+    "boolean": T.BooleanType(),
+    "number": T.DoubleType(),
+    "integer": T.LongType(),
+    "object": T.MapType(T.StringType(), T.VariantType()),
+    "array": T.ArrayType(T.VariantType()),
+}
+
+
+def _is_variant(dt) -> bool:
+    return isinstance(dt, T.VariantType)
+
+
+def _vtag_is(family: str, v: Column) -> Column:
+    """Per-row type test of a Variant value by its `schema_of_variant` tag
+    (VOID/BOOLEAN/BIGINT/DECIMAL(p,s)/DOUBLE/STRING/OBJECT<...>/ARRAY<...>;
+    SQL NULL for an absent value)."""
+    t = F.schema_of_variant(v)
+    if family == "number":
+        return (t == "BIGINT") | t.startswith("DECIMAL") | (t == "DOUBLE") | (t == "FLOAT")
+    if family in ("object", "array"):
+        return t.startswith(family.upper())
+    return t == F.lit({"null": "VOID", "string": "STRING", "boolean": "BOOLEAN", "integer": "BIGINT"}[family])
+
+
+def _is(family: str, target: Column, dt) -> Optional[Column]:
+    """The target is a present JSON value of `family`; None when its Spark
+    type rules that out at compile time."""
+    if _is_variant(dt):
+        return _vtag_is(family, target)
+    if dt is None or _FAMILIES[family](dt):
+        return target.isNotNull()
+    return None
+
+
+def _value(target: Column, dt, as_type: T.DataType) -> Column:
+    """Typed accessor: the column itself, or a Variant value cast to
+    `as_type` (NULL when it does not cast)."""
+    if _is_variant(dt):
+        return F.try_variant_get(target, "$", as_type.simpleString())
+    return target
+
+
+def _as(family: str, target: Column, dt, as_type: Optional[T.DataType] = None):
+    """The target seen as a `family` value by a keyword that applies only to
+    that family: ``(value, value dtype, skip)`` where `skip` holds when the
+    value is absent or (Variant) of another JSON type, so the keyword
+    passes.  None when the Spark type rules the family out at compile time
+    (the keyword passes statically)."""
+    if _is_variant(dt):
+        as_type = as_type or _VARIANT_AS[family]
+        return _value(target, dt, as_type), as_type, ~_vtag_is(family, target) | target.isNull()
+    if dt is not None and not _FAMILIES[family](dt):
+        return None
+    return target, dt, target.isNull()
+
+
+def _present(col: Column, dt) -> Column:
+    """has-property?: present AND not nil (core.clj:852-854).  A typed
+    column conflates absent with null; a Variant tells JSON null apart."""
+    if _is_variant(dt):
+        return col.isNotNull() & ~_vtag_is("null", col)
+    return col.isNotNull()
+
+
+def _absent(col: Column, dt) -> Column:
+    return ~_present(col, dt) if _is_variant(dt) else col.isNull()
+
+
+_SCALAR_FAMILIES = ((bool, "boolean"), (int, "integer"), (float, "number"), (str, "string"))
+
+
+def _variant_eq(v: Column, member) -> Column:
+    """Clojure `=` of a Variant value with a scalar JSON literal
+    (json-compare, core.clj:472-478: strict numeric identity, 1 ≠ 1.0)."""
+    if member is None:
+        return _vtag_is("null", v)
+    family = next((f for t, f in _SCALAR_FAMILIES if isinstance(member, t)), None)
+    if family is None:
+        raise ColumnBackendUnsupported(f"non-scalar literal {member!r} on a Variant value")
+    same_type = _vtag_is(family, v)
+    if family == "number":  # a float literal never equals an integer
+        same_type = same_type & ~_vtag_is("integer", v)
+    as_type = _VARIANT_AS[family].simpleString()
+    return same_type & (F.try_variant_get(v, "$", as_type) == F.lit(_i64_guard(member)))
+
+
+def _eq(target: Column, dt, v) -> Column:
+    """Clojure `=` of the target with a scalar JSON literal."""
+    if _is_variant(dt):
+        return _variant_eq(target, v)
+    if _lit_compatible(dt, v):
+        return target.eqNullSafe(_scalar_lit(v))
+    # cross-JSON-type literal (e.g. a registry-shadowed $ref landing a
+    # scalar const on an array column): never equal under Clojure `=`
+    return F.lit(False)
+
+
+def _in(target: Column, dt, members: list) -> Column:
+    """Clojure-`=` membership of the target in scalar JSON literals."""
+    for v in members:
+        _scalar_lit(v)  # reject non-scalar members (Python backend handles those)
+    if _is_variant(dt):
+        ok = F.lit(False)
+        for m in members:
+            ok = ok | _variant_eq(target, m)
+        return ok
+    # drop members that can never equal the typed target (Clojure `=` is
+    # false across JSON types; keeping them would coerce — or abort
+    # analysis on complex-typed targets)
+    lits = [v for v in members if v is not None and _lit_compatible(dt, v)]
+    ok = F.coalesce(target.isin(*lits), F.lit(False)) if lits else F.lit(False)
+    # null is in the enum iff None is a member
+    if any(v is None for v in members):
+        ok = ok | target.isNull()
+    return ok
 
 
 def _const_fail(ctx: Ctx, keyword: str, message: str) -> Compiled:
@@ -194,53 +359,33 @@ def _maybe_data(value, ctx: Ctx):
 
 
 def _type_ok(tname, target: Column, dtype, ctx: Ctx) -> Column:
-    """ok-Column for a single type name against a known Spark dtype.
-    Compile-time dtype knowledge turns most of these into constants that
-    Catalyst folds away."""
-    if isinstance(tname, dict):  # draft-3 union member as inline schema
+    """ok-Column for a single type name.  On a typed column most of these
+    fold to constants that Catalyst prunes."""
+    if isinstance(tname, (dict, bool)):  # draft-3 union member as inline schema
         return _probe_ok(tname, target, ctx)
     t = str(tname)
     if t == "any":
         return F.lit(True)
     if t in ("null", "nil"):
-        return target.isNull()
-    if t == "string":
-        if dtype is None or isinstance(dtype, T.StringType):
+        return _vtag_is("null", target) | target.isNull() if _is_variant(dtype) else target.isNull()
+    if t in _FAMILIES:
+        ok = _is(t, target, dtype)
+        if ok is None:
+            return F.lit(False)
+        if t == "string":
             # non-standard quirk: blank strings are NOT valid strings
             # (core.clj:189-190 "expected not empty string").  str/blank?
             # means ANY-whitespace-only, not space-only — Spark's trim()
             # strips only 0x20, so "\t\n" must use a whitespace class
-            return target.isNotNull() & ~target.rlike(r"^\s*$")
-        return F.lit(False)
-    if t == "boolean":
-        if dtype is None or isinstance(dtype, T.BooleanType):
-            return target.isNotNull()
-        return F.lit(False)
-    if t == "number":
-        if dtype is None or _is_numeric(dtype):
-            return target.isNotNull()
-        return F.lit(False)
-    if t == "integer":
-        # 1.0 is NOT an integer (core.clj:238-244; suite numeric-unification
-        # cases are skipped by the reference — do not "fix")
-        if dtype is None or _is_integral(dtype):
-            return target.isNotNull()
-        if isinstance(dtype, T.DecimalType) and dtype.scale == 0:
-            return target.isNotNull()
-        return F.lit(False)
-    if t == "object":
-        if dtype is None or isinstance(dtype, (T.StructType, T.MapType)):
-            return target.isNotNull()
-        return F.lit(False)
-    if t == "array":
-        if dtype is None or isinstance(dtype, T.ArrayType):
-            return target.isNotNull()
-        return F.lit(False)
+            return ok & ~_value(target, dtype, T.StringType()).rlike(r"^\s*$")
+        return ok
     if t in formats.TYPE_REGEX:
-        if dtype is None or isinstance(dtype, T.StringType):
-            base = target.isNotNull() & target.rlike(formats.TYPE_REGEX[t])
+        ok = _is("string", target, dtype)
+        if ok is not None:
+            s = _value(target, dtype, T.StringType())
+            base = ok & s.rlike(formats.TYPE_REGEX[t])
             if t == "uri":
-                base = base & ~target.rlike(r"^\s*$")
+                base = base & ~s.rlike(r"^\s*$")
             return base
         # a NATIVELY-typed temporal column trivially satisfies the
         # corresponding string-format type: the reference only ever sees
@@ -270,17 +415,16 @@ def _compile_type(value, schema, target: Column, ctx: Ctx) -> Compiled:
             # "Broken schema: unknown type" (core.clj:344-348)
             return _const_fail(ctx, "type", f"Broken schema: unknown type {m}")
         oks.append(ok)
-    ok_all = oks[0]
-    for o in oks[1:]:
-        ok_all = ok_all | o
+    ok_all = functools.reduce(operator.or_, oks)
     if isinstance(value, list):
         msg = f"expected one of types {', '.join(str(m) for m in members)}"
         return simple_check(ok_all, ctx.schema_path, ctx.instance_path, "type", msg, sev)
     t = str(value)
-    if t == "string" and (ctx.dtype is None or isinstance(ctx.dtype, T.StringType)):
+    is_str = _is("string", target, ctx.dtype) if t == "string" else None
+    if is_str is not None:
         # distinguish the blank-string quirk message (core.clj:186-190)
         msg = F.when(
-            target.isNotNull() & F.coalesce(target, F.lit("")).rlike(r"^\s*$"),
+            is_str & F.coalesce(_value(target, ctx.dtype, T.StringType()), F.lit("")).rlike(r"^\s*$"),
             F.lit("expected not empty string"),
         ).otherwise(F.lit("expected type of string"))
         return simple_check(ok_all, ctx.schema_path, ctx.instance_path, "type", msg, sev)
@@ -358,7 +502,9 @@ def _dtype_compatible(a, b) -> bool:
         # of the typed surface (absent/null conflation, module docstring)
         return a == b
     if isinstance(a, T.MapType) and isinstance(b, T.MapType):
-        return _dtype_compatible(a.valueType, b.valueType)
+        return _dtype_compatible(a.keyType, b.keyType) and _dtype_compatible(
+            a.valueType, b.valueType
+        )
     return False
 
 
@@ -411,26 +557,25 @@ def _compile_enum(value, schema, target: Column, ctx: Ctx) -> Compiled:
             # array_contains would be a plan-time DATATYPE_MISMATCH abort
             # (family-wise compat, so string enums still admit temporal
             # targets and nullability metadata never triggers this branch)
-            ok = F.when(ref_col.isNull(), F.lit(True)).otherwise(F.lit(False))
+            # — except an empty array target against an empty array
+            # member, equal whatever the element types, as in `const`
+            member = F.lit(False)
+            if isinstance(ref_dt.elementType, T.ArrayType) and isinstance(ctx.dtype, T.ArrayType):
+                member = F.coalesce(
+                    (F.size(target) == 0) & F.exists(ref_col, lambda m: F.size(m) == 0),
+                    F.lit(False),
+                )
+            ok = F.when(ref_col.isNull(), F.lit(True)).otherwise(member)
         else:
             ok = F.when(ref_col.isNull(), F.lit(True)).otherwise(
                 F.coalesce(F.array_contains(ref_col, target), F.lit(False))
             )
-        # no _null_pass here: a null target = missing property, and the
+        # no null-pass here: a null target = missing property, and the
         # properties/patternProperties compilers already null-pass their
         # children (fixture: data_structures.json "missing target property
         # is not validated"), matching the plain-enum branch below
         return simple_check(ok, ctx.schema_path, ctx.instance_path, "enum", "expected one of $data enum", sev)
-    for v in value:
-        _scalar_lit(v)  # reject non-scalar members (Python backend handles those)
-    # drop members that can never equal the typed target (Clojure `=` is
-    # false across JSON types; keeping them would coerce — or abort
-    # analysis on complex-typed targets)
-    members = [v for v in value if v is not None and _lit_compatible(ctx.dtype, v)]
-    ok = F.coalesce(target.isin(*members), F.lit(False)) if members else F.lit(False)
-    # null is in the enum iff None is a member
-    if any(v is None for v in value):
-        ok = ok | target.isNull()
+    ok = _in(target, ctx.dtype, value)
     msg = "expected one of " + ", ".join(str(v) for v in value)
     return simple_check(ok, ctx.schema_path, ctx.instance_path, "enum", msg, sev)
 
@@ -461,12 +606,8 @@ def _compile_const(keyword: str):
                          F.lit(", but "), F.coalesce(target.cast("string"), F.lit("null"))),
                 sev,
             )
-        if _lit_compatible(ctx.dtype, value):
-            ok = target.eqNullSafe(_scalar_lit(value))
-        else:
-            # cross-JSON-type const (e.g. a registry-shadowed $ref landing a
-            # scalar const on an array column): never equal under Clojure `=`
-            ok = F.lit(False)
+        ok = _eq(target, ctx.dtype, value)
+        # a Variant casts to its JSON text (a string to its bare value)
         msg = F.concat(
             F.lit(f"expected {json.dumps(value) if not isinstance(value, str) else value}, but "),
             F.coalesce(target.cast("string"), F.lit("null")),
@@ -476,8 +617,8 @@ def _compile_const(keyword: str):
     return fn
 
 
-KEYWORD_COMPILERS["const"] = _compile_const("const")
-KEYWORD_COMPILERS["constant"] = _compile_const("constant")
+register_keyword("const", _compile_const("const"))
+register_keyword("constant", _compile_const("constant"))
 
 
 # ---------------------------------------------------------------------------
@@ -488,8 +629,8 @@ KEYWORD_COMPILERS["constant"] = _compile_const("constant")
 def make_comparator(
     keyword: str,
     op: str,  # 'ge' | 'gt' | 'le' | 'lt'
-    applicable_dtypes,  # predicate on dtype: value-applicability
-    value_expr: Callable[[Column], Column],  # e.g. identity or F.length
+    family: str,  # the JSON type family the keyword applies to
+    value_expr: Callable[[Column, Any], Column],  # (value, dtype) -> compared
     bound_is_ok,  # predicate on a literal bound's python type
     message: str,
 ):
@@ -510,17 +651,6 @@ def make_comparator(
         if exclusive is True:
             eff_op = {"ge": "gt", "le": "lt"}[op]
         data = _maybe_data(value, ctx)
-        v = value_expr(target)
-
-        def cmp(bound_col: Column) -> Column:
-            if eff_op == "ge":
-                return v >= bound_col
-            if eff_op == "gt":
-                return v > bound_col
-            if eff_op == "le":
-                return v <= bound_col
-            return v < bound_col
-
         if data is not None:
             bound_col, bound_dt = data
             # cond order mirrors core.clj:106-117: a null runtime bound
@@ -536,28 +666,32 @@ def make_comparator(
                     bound_col.isNull(), ctx.schema_path, ctx.instance_path, keyword,
                     F.lit(f"exclusive flag should be boolean, got {exclusive}"), sev,
                 )
-            if ctx.dtype is not None and not applicable_dtypes(ctx.dtype):
-                return None  # non-applicable values pass (comparator ladder)
-            ok = F.when(bound_col.isNull() | target.isNull(), F.lit(True)).otherwise(cmp(bound_col))
-            msg = F.concat(F.lit(f"expected{message} "), v.cast("string"), F.lit(f" {_op_sym(eff_op)} "), bound_col.cast("string"))
-            return simple_check(ok, ctx.schema_path, ctx.instance_path, keyword, msg, sev)
-        if value is None:
-            return None
-        if not bound_is_ok(value):
-            return simple_check(
-                F.lit(False), ctx.schema_path, ctx.instance_path, keyword,
-                f" could not compare with {value}", sev,
-            )
-        if broken_flag:
-            return simple_check(
-                F.lit(False), ctx.schema_path, ctx.instance_path, keyword,
-                f"exclusive flag should be boolean, got {exclusive}", sev,
-            )
-        if ctx.dtype is not None and not applicable_dtypes(ctx.dtype):
+        else:
+            if value is None:
+                return None
+            if not bound_is_ok(value):
+                return simple_check(
+                    F.lit(False), ctx.schema_path, ctx.instance_path, keyword,
+                    f" could not compare with {value}", sev,
+                )
+            if broken_flag:
+                return simple_check(
+                    F.lit(False), ctx.schema_path, ctx.instance_path, keyword,
+                    f"exclusive flag should be boolean, got {exclusive}", sev,
+                )
+        view = _as(family, target, ctx.dtype)
+        if view is None:
             return None  # non-applicable values pass (comparator ladder)
-        bound_col = F.lit(_i64_guard(value))
-        ok = F.when(target.isNull(), F.lit(True)).otherwise(cmp(bound_col))
-        msg = F.concat(F.lit(f"expected{message} "), v.cast("string"), F.lit(f" {_op_sym(eff_op)} {value}"))
+        val, dt, skip = view
+        v = value_expr(val, dt)
+        if data is not None:
+            shown = [F.lit(f" {_op_sym(eff_op)} "), bound_col.cast("string")]
+            skip = bound_col.isNull() | skip
+        else:
+            bound_col = F.lit(_i64_guard(value))
+            shown = [F.lit(f" {_op_sym(eff_op)} {value}")]
+        ok = F.when(skip, F.lit(True)).otherwise(getattr(operator, eff_op)(v, bound_col))
+        msg = F.concat(F.lit(f"expected{message} "), v.cast("string"), *shown)
         return simple_check(ok, ctx.schema_path, ctx.instance_path, keyword, msg, sev)
 
     return fn
@@ -581,22 +715,33 @@ def _is_str_py(x) -> bool:
     return isinstance(x, str)
 
 
-_ident = lambda c: c  # noqa: E731
+def _count_props(obj: Column, dt) -> Column:
+    """Number of properties; a struct counts its non-null fields (nil =
+    missing, as everywhere in the engine)."""
+    if isinstance(dt, T.StructType):
+        cnt = None
+        for fname in dt.fieldNames():
+            term = obj.getField(fname).isNotNull().cast("int")
+            cnt = term if cnt is None else cnt + term
+        return F.lit(0) if cnt is None else cnt
+    return F.size(F.map_keys(obj))
 
-KEYWORD_COMPILERS["minimum"] = make_comparator("minimum", "ge", _is_numeric, _ident, _is_number_py, "")
-KEYWORD_COMPILERS["maximum"] = make_comparator("maximum", "le", _is_numeric, _ident, _is_number_py, "")
-KEYWORD_COMPILERS["minLength"] = make_comparator(
-    "minLength", "ge", lambda dt: isinstance(dt, T.StringType), F.length, _is_number_py, " string length"
-)
-KEYWORD_COMPILERS["maxLength"] = make_comparator(
-    "maxLength", "le", lambda dt: isinstance(dt, T.StringType), F.length, _is_number_py, " string length"
-)
-KEYWORD_COMPILERS["minItems"] = make_comparator(
-    "minItems", "ge", lambda dt: isinstance(dt, T.ArrayType), F.size, _is_number_py, " array length"
-)
-KEYWORD_COMPILERS["maxItems"] = make_comparator(
-    "maxItems", "le", lambda dt: isinstance(dt, T.ArrayType), F.size, _is_number_py, " array length"
-)
+
+_ident = lambda c, dt: c  # noqa: E731
+_length = lambda c, dt: F.length(c)  # noqa: E731
+_size = lambda c, dt: F.size(c)  # noqa: E731
+
+for _kw, _op, _family, _expr, _msg in [
+    ("minimum", "ge", "number", _ident, ""),
+    ("maximum", "le", "number", _ident, ""),
+    ("minLength", "ge", "string", _length, " string length"),
+    ("maxLength", "le", "string", _length, " string length"),
+    ("minItems", "ge", "array", _size, " array length"),
+    ("maxItems", "le", "array", _size, " array length"),
+    ("minProperties", "ge", "object", _count_props, " number of properties"),
+    ("maxProperties", "le", "object", _count_props, " number of properties"),
+]:
+    register_keyword(_kw, make_comparator(_kw, _op, _family, _expr, _is_number_py, _msg))
 _TIME_TZ_RE = r"(Z|[+-]\d+:\d+)$"
 
 
@@ -606,12 +751,9 @@ def _format_bound(keyword: str, op: str):
     and `format: "time"` strips the trailing timezone from BOTH the value
     and the bound before the lexicographic compare
     (compile-format-coerce, core.clj:1104-1105)."""
-    plain = make_comparator(
-        keyword, op, lambda dt: isinstance(dt, T.StringType), _ident, _is_str_py, ""
-    )
+    plain = make_comparator(keyword, op, "string", _ident, _is_str_py, "")
     timed = make_comparator(
-        keyword, op, lambda dt: isinstance(dt, T.StringType),
-        lambda c: F.regexp_replace(c, _TIME_TZ_RE, ""), _is_str_py, "",
+        keyword, op, "string", lambda c, dt: F.regexp_replace(c, _TIME_TZ_RE, ""), _is_str_py, ""
     )
 
     def fn(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled]:
@@ -630,8 +772,8 @@ def _format_bound(keyword: str, op: str):
     return fn
 
 
-KEYWORD_COMPILERS["formatMinimum"] = _format_bound("formatMinimum", "ge")
-KEYWORD_COMPILERS["formatMaximum"] = _format_bound("formatMaximum", "le")
+register_keyword("formatMinimum", _format_bound("formatMinimum", "ge"))
+register_keyword("formatMaximum", _format_bound("formatMaximum", "le"))
 
 
 def _exclusive_numeric(keyword: str, op: str, absorbed_by: str):
@@ -652,22 +794,24 @@ def _exclusive_numeric(keyword: str, op: str, absorbed_by: str):
                 F.lit(False), ctx.schema_path, ctx.instance_path, keyword,
                 f" could not compare with {str(value).lower()}", ctx.severity(keyword),
             )
-        return make_comparator(keyword, op, _is_numeric, _ident, _is_number_py, "")(
+        return make_comparator(keyword, op, "number", _ident, _is_number_py, "")(
             value, schema, target, ctx
         )
 
     return fn
 
 
-KEYWORD_COMPILERS["exclusiveMinimum"] = _exclusive_numeric("exclusiveMinimum", "gt", "minimum")
-KEYWORD_COMPILERS["exclusiveMaximum"] = _exclusive_numeric("exclusiveMaximum", "lt", "maximum")
+register_keyword("exclusiveMinimum", _exclusive_numeric("exclusiveMinimum", "gt", "minimum"))
+register_keyword("exclusiveMaximum", _exclusive_numeric("exclusiveMaximum", "lt", "maximum"))
 
 
 def _compile_multiple_of(keyword: str):
     def fn(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled]:
         sev = ctx.severity(keyword)
-        if ctx.dtype is not None and not _is_numeric(ctx.dtype):
+        view = _as("number", target, ctx.dtype, T.DecimalType(38, 10))
+        if view is None:
             return None
+        num, dt, skip = view
         data = _maybe_data(value, ctx)
         if data is not None:
             bound_col, bound_dt = data
@@ -696,15 +840,15 @@ def _compile_multiple_of(keyword: str):
         # remainder is exact for the bounds the suite exercises
         # non-negative-ratio quirk (is-divider?, core.clj:419-421): the
         # printed quotient must match ^\d+(\.0)?$, so negative multiples fail
-        sign_ok = (target >= 0) if value >= 0 else (target <= 0)
+        sign_ok = (num >= 0) if value >= 0 else (num <= 0)
         if value == 0:
             # zero divisor: only v == 0 passes — the reference's int path
             # throws on (/ v 0) (ungraded surface); we keep the Python
             # backend's graceful contract (_is_divider: d == 0 -> False)
-            ok = target == F.lit(0)
-        elif _is_integral(ctx.dtype) and isinstance(value, int):
-            ok = (target == F.lit(0)) | (
-                sign_ok & (F.pmod(target, F.lit(_i64_guard(value))) == F.lit(0))
+            ok = num == F.lit(0)
+        elif _is_integral(dt) and isinstance(value, int):
+            ok = (num == F.lit(0)) | (
+                sign_ok & (F.pmod(num, F.lit(_i64_guard(value))) == F.lit(0))
             )
         else:
             if abs(value) >= 10**28:
@@ -714,10 +858,10 @@ def _compile_multiple_of(keyword: str):
                 raise ColumnBackendUnsupported(
                     "multipleOf bound beyond 28 digits needs the Python backend"
                 )
-            dec = target.cast(T.DecimalType(38, 10))
+            dec = num.cast(T.DecimalType(38, 10))
             bdec = F.lit(Decimal(str(value))).cast(T.DecimalType(38, 10))
-            ok = (target == F.lit(0)) | (sign_ok & (dec % bdec == F.lit(0)))
-        ok = F.when(target.isNull(), F.lit(True)).otherwise(ok)
+            ok = (num == F.lit(0)) | (sign_ok & (dec % bdec == F.lit(0)))
+        ok = F.when(skip, F.lit(True)).otherwise(ok)
         verb = "multiple of" if keyword == "multipleOf" else "divisible by"
         msg = F.concat(F.lit("expected "), target.cast("string"), F.lit(f" is {verb} {value}"))
         return simple_check(ok, ctx.schema_path, ctx.instance_path, keyword, msg, sev)
@@ -725,8 +869,8 @@ def _compile_multiple_of(keyword: str):
     return fn
 
 
-KEYWORD_COMPILERS["multipleOf"] = _compile_multiple_of("multipleOf")
-KEYWORD_COMPILERS["divisibleBy"] = _compile_multiple_of("divisibleBy")
+register_keyword("multipleOf", _compile_multiple_of("multipleOf"))
+register_keyword("divisibleBy", _compile_multiple_of("divisibleBy"))
 
 
 # ---------------------------------------------------------------------------
@@ -736,36 +880,40 @@ KEYWORD_COMPILERS["divisibleBy"] = _compile_multiple_of("divisibleBy")
 @register_keyword("pattern")
 def _compile_pattern(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled]:
     sev = ctx.severity("pattern")
-    if ctx.dtype is not None and not isinstance(ctx.dtype, T.StringType):
+    view = _as("string", target, ctx.dtype)
+    if view is None:
         return None  # non-strings pass (core.clj:1363 guard)
+    s, _, skip = view
     data = _maybe_data(value, ctx)
     if data is not None:
         pat_col, _ = data
         # find-semantics regex with a non-foldable pattern (Spark >= 3.0)
-        ok = F.when(pat_col.isNull() | target.isNull(), F.lit(True)).otherwise(F.rlike(target, pat_col))
-        msg = F.concat(F.lit("expected "), F.coalesce(target, F.lit("null")), F.lit(" matches "), pat_col)
+        ok = F.when(pat_col.isNull() | skip, F.lit(True)).otherwise(F.rlike(s, pat_col))
+        msg = F.concat(F.lit("expected "), F.coalesce(s, F.lit("null")), F.lit(" matches "), pat_col)
         return simple_check(ok, ctx.schema_path, ctx.instance_path, "pattern", msg, sev)
     # re-find semantics == rlike (substring match), same java.util.regex
     # dialect as the reference (core.clj:1354-1377)
-    ok = F.when(target.isNull(), F.lit(True)).otherwise(target.rlike(value))
-    msg = F.concat(F.lit("expected "), F.coalesce(target, F.lit("null")), F.lit(f" matches {value}"))
+    ok = F.when(skip, F.lit(True)).otherwise(s.rlike(value))
+    msg = F.concat(F.lit("expected "), F.coalesce(s, F.lit("null")), F.lit(f" matches {value}"))
     return simple_check(ok, ctx.schema_path, ctx.instance_path, "pattern", msg, sev)
 
 
 @register_keyword("format")
 def _compile_format(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled]:
     sev = ctx.severity("format")
-    if ctx.dtype is not None and not isinstance(ctx.dtype, T.StringType):
+    view = _as("string", target, ctx.dtype)
+    if view is None:
         return None  # format applies to strings only (core.clj:1336,1344)
+    s, _, skip = view
     if isinstance(value, dict) and "$data" in value:
         raise ColumnBackendUnsupported("$data format name needs the Python backend")
     fmt = str(value)
-    ok = formats.format_ok(target, fmt)
+    ok = formats.format_ok(s, fmt)
     if ok is None:
         if fmt in formats.FUNCTIONAL_FORMATS:
             raise ColumnBackendUnsupported(f"format {fmt!r} needs the Python backend")
         return _const_fail(ctx, "format", f"Unknown format {fmt}")
-    ok = F.when(target.isNull(), F.lit(True)).otherwise(ok)
+    ok = F.when(skip, F.lit(True)).otherwise(ok)
     return simple_check(
         ok, ctx.schema_path, ctx.instance_path, "format", f"expected format {fmt}", sev
     )
@@ -789,14 +937,18 @@ def _field_or_none(target: Column, dtype, key: str):
 
 @register_keyword("properties")
 def _compile_properties(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled]:
+    view = _as("object", target, ctx.dtype)
+    if view is None or not isinstance(value, dict):
+        return None
+    obj, dt, skip = view
     comps = []
     for key, subschema in value.items():
         # draft-3 per-property {required: true} hoisting (core.clj:375-380)
         sub = subschema
         if isinstance(sub, dict) and sub.get("required") is True:
             sub = {k: v for k, v in sub.items() if k != "required"}
-            fd = _field_or_none(target, ctx.dtype, key)
-            present = F.lit(False) if fd is None else fd[0].isNotNull()
+            fd = _field_or_none(obj, dt, key)
+            present = F.lit(False) if fd is None else _present(*fd)
             comps.append(
                 simple_check(
                     present,
@@ -807,24 +959,24 @@ def _compile_properties(value, schema, target: Column, ctx: Ctx) -> Optional[Com
                     ctx.severity("required"),
                 )
             )
-        fd = _field_or_none(target, ctx.dtype, key)
+        fd = _field_or_none(obj, dt, key)
         if fd is None:
             continue  # statically absent key never violates (presence-guarded)
-        col, dt = fd
+        col, cdt = fd
         child_ctx = replace(
             ctx,
             schema_path=ctx.schema_path + (key,),
             instance_path=ctx.instance_path + (key,),
-            dtype=dt,
+            dtype=cdt,
         )
         child = compile_schema(sub, col, child_ctx)
         # applied only when present AND non-nil (core.clj:367-389)
-        comps.append(_null_pass(col, child))
+        comps.append(_guard(_absent(col, cdt), child))
     if not comps:
         return None
     out = merge(comps)
     # non-objects pass; a null object passes
-    return _null_pass(target, out)
+    return _guard(skip, out)
 
 
 @register_keyword("required")
@@ -835,11 +987,15 @@ def _compile_required(value, schema, target: Column, ctx: Ctx) -> Optional[Compi
     data = _maybe_data(value, ctx)
     if data is not None:
         raise ColumnBackendUnsupported("$data required list needs the Python backend")
+    view = _as("object", target, ctx.dtype)
+    if view is None:
+        return None
+    obj, dt, skip = view
     comps = []
     for key in value:
-        fd = _field_or_none(target, ctx.dtype, key)
+        fd = _field_or_none(obj, dt, key)
         # nil counts as missing (has-property?, core.clj:852-854)
-        present = F.lit(False) if fd is None else F.coalesce(fd[0].isNotNull(), F.lit(False))
+        present = F.lit(False) if fd is None else F.coalesce(_present(*fd), F.lit(False))
         comps.append(
             simple_check(
                 present,
@@ -851,23 +1007,28 @@ def _compile_required(value, schema, target: Column, ctx: Ctx) -> Optional[Compi
             )
         )
     out = merge(comps)
-    return _null_pass(target, out)
+    return _guard(skip, out)
 
 
 @register_keyword("dependencies")
 def _compile_dependencies(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled]:
-    # documented conflation boundary: the reference's `contains?`
-    # (core.clj:564,571,585) counts a nil-VALUED key as present/satisfied,
-    # but Spark structs cannot distinguish absent from null, so this
-    # backend uses isNotNull like every other keyword (the Python backend
-    # carries the exact contains? semantics for map-shaped documents).
+    # the reference's `contains?` (core.clj:564,571,585) counts a
+    # nil-VALUED key as present/satisfied.  A Variant keeps that (a JSON
+    # null member is a non-NULL variant); a typed column cannot tell
+    # absent from null, so there it is a documented conflation boundary,
+    # like every other keyword (the Python backend carries the exact
+    # contains? semantics for map-shaped documents).
     # Error shape also differs deliberately: one violation per missing
     # dep (richer for violation_rows) vs the reference's single
     # aggregated "(…) are required" message.
     sev = ctx.severity("dependencies")
+    view = _as("object", target, ctx.dtype)
+    if view is None:
+        return None
+    obj, dt, skip = view
     comps = []
     for key, dep in value.items():
-        fd = _field_or_none(target, ctx.dtype, key)
+        fd = _field_or_none(obj, dt, key)
         if fd is None:
             continue
         present = fd[0].isNotNull()
@@ -875,7 +1036,7 @@ def _compile_dependencies(value, schema, target: Column, ctx: Ctx) -> Optional[C
             dep = [dep]
         if isinstance(dep, list):
             for d in dep:
-                dfd = _field_or_none(target, ctx.dtype, d)
+                dfd = _field_or_none(obj, dt, d)
                 dep_ok = F.lit(False) if dfd is None else dfd[0].isNotNull()
                 comps.append(
                     simple_check(
@@ -897,25 +1058,29 @@ def _compile_dependencies(value, schema, target: Column, ctx: Ctx) -> Optional[C
             )
     if not comps:
         return None
-    return _null_pass(target, merge(comps))
+    return _guard(skip, merge(comps))
 
 
 @register_keyword("exclusiveProperties")
-def _compile_exclusive_properties(value, schema, target: Column, ctx: Ctx) -> Compiled:
+def _compile_exclusive_properties(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled]:
     """Custom keyword: groups of mutually exclusive keys (core.clj:532-552,
     tests /root/reference/test/json_schema/custom_extensions_test.clj:44-68)."""
     sev = ctx.severity("exclusiveProperties")
+    view = _as("object", target, ctx.dtype)
+    if view is None:
+        return None
+    obj, dt, skip = view
     comps = []
     for group in value:
         props = group.get("properties", [])
         required = group.get("required", False)
         cnt = None
         for p in props:
-            fd = _field_or_none(target, ctx.dtype, p)
+            fd = _field_or_none(obj, dt, p)
             present = F.lit(0) if fd is None else fd[0].isNotNull().cast("int")
             cnt = present if cnt is None else cnt + present
         if cnt is None:
-            continue
+            cnt = F.lit(0)  # an empty group: "required" can never hold
         names = ", ".join(props)
         if required:
             comps.append(
@@ -930,31 +1095,32 @@ def _compile_exclusive_properties(value, schema, target: Column, ctx: Ctx) -> Co
                 f"Properties {names} are mutually exclusive", sev,
             )
         )
-    return _null_pass(target, merge(comps))
+    return _guard(skip, merge(comps))
 
 
 @register_keyword("discriminator")
-def _compile_discriminator(value, schema, target: Column, ctx: Ctx) -> Compiled:
+def _compile_discriminator(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled]:
     """Dispatch on a property's value to #/definitions/<value>
     (core.clj:519-530) — the closed definition set is known at compile time,
     so this compiles to a CASE WHEN chain over inlined child check trees."""
     sev = ctx.severity("discriminator")
     defs = (ctx.root_schema or schema).get("definitions", {})
-    fd = _field_or_none(target, ctx.dtype, value)
+    view = _as("object", target, ctx.dtype)
+    if view is None:
+        return None
+    obj, dt, skip = view
+    fd = _field_or_none(obj, dt, value)
     if fd is None:
         return Compiled.passed()
-    tag_col, _ = fd
-    ok = F.lit(True)
-    viols = _empty()
+    tag_col = _value(fd[0], fd[1], T.StringType())
     # unresolvable tag → error
-    known = list(defs.keys())
     unresolved = violation(
         ctx.schema_path, ctx.instance_path, "discriminator",
         F.concat(F.lit("Could not resolve #/definitions/"), tag_col), sev,
     )
     ok_expr = F.lit(False)
     viol_expr = unresolved
-    for name in reversed(known):
+    for name in reversed(list(defs.keys())):
         child = compile_schema(
             defs[name], target, replace(ctx, schema_path=ctx.schema_path + ("definitions", name))
         )
@@ -963,23 +1129,43 @@ def _compile_discriminator(value, schema, target: Column, ctx: Ctx) -> Compiled:
     # absent tag → pass (core.clj:523 if-let)
     ok = F.when(tag_col.isNull(), F.lit(True)).otherwise(ok_expr)
     viols = F.when(tag_col.isNull(), _empty()).otherwise(viol_expr)
-    return _null_pass(target, Compiled(ok=ok, violations=viols))
+    return _guard(skip, Compiled(ok=ok, violations=viols))
+
+
+def _per_entry(entries: Column, compile_entry: Callable, hit: Callable) -> Compiled:
+    """Validate each map entry whose key is a `hit`, as one HOF pass."""
+
+    def per_entry(e):
+        child = compile_entry(e)
+        h = hit(e["key"])
+        return F.struct(
+            F.when(h, child.ok).otherwise(F.lit(True)).alias("ok"),
+            F.when(h, child.violations).otherwise(_empty()).alias("v"),
+        )
+
+    checked = F.transform(entries, per_entry)
+    return Compiled(
+        ok=F.forall(checked, lambda s: s["ok"]),
+        violations=F.flatten(F.transform(checked, lambda s: s["v"])),
+    )
 
 
 @register_keyword("patternProperties")
 def _compile_pattern_properties(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled]:
     """For each key matching a regex, the value validates (core.clj:590-611).
-    MapType targets get HOF plans; StructType targets resolve the matching
-    keys at compile time (closed world)."""
-    if isinstance(ctx.dtype, T.StructType):
-        import re as _re
-
-        comps = []
+    MapType targets (and Variant objects) get HOF plans; StructType targets
+    resolve the matching keys at compile time (closed world)."""
+    view = _as("object", target, ctx.dtype)
+    if view is None:
+        return None
+    obj, dt, skip = view
+    comps = []
+    if isinstance(dt, T.StructType):
         for pat, sub in value.items():
-            rx = _re.compile(pat)
-            for fname in ctx.dtype.fieldNames():
+            rx = re.compile(pat)
+            for fname in dt.fieldNames():
                 if rx.search(fname):
-                    col = target.getField(fname)
+                    col = obj.getField(fname)
                     child = compile_schema(
                         sub,
                         col,
@@ -987,49 +1173,36 @@ def _compile_pattern_properties(value, schema, target: Column, ctx: Ctx) -> Opti
                             ctx,
                             schema_path=ctx.schema_path + (pat,),
                             instance_path=ctx.instance_path + (fname,),
-                            dtype=ctx.dtype[fname].dataType,
+                            dtype=dt[fname].dataType,
                         ),
                     )
-                    comps.append(_null_pass(col, child))
+                    comps.append(_guard(col.isNull(), child))
         if not comps:
             return None
-        return _null_pass(target, merge(comps))
-    if isinstance(ctx.dtype, T.MapType):
-        comps = []
-
+        return _guard(skip, merge(comps))
+    if isinstance(dt, T.MapType):
         # NB: capture via factory, NOT lambda default args — PySpark infers
         # HOF lambda arity from the parameter count, so default args turn a
         # 1-arg lambda into the (x, i) form and the capture receives the
         # element INDEX column
-        def make_per_entry(_pat, _sub):
-            def per_entry(e):
-                child = compile_schema(
-                    _sub,
-                    e["value"],
-                    replace(
-                        ctx,
-                        schema_path=ctx.schema_path + (_pat,),
-                        instance_path=ctx.instance_path + (e["key"],),
-                        dtype=ctx.dtype.valueType,
-                    ),
-                )
-                hit = e["key"].rlike(_pat)
-                return F.struct(
-                    F.when(hit, child.ok).otherwise(F.lit(True)).alias("ok"),
-                    F.when(hit, child.violations).otherwise(_empty()).alias("v"),
-                )
+        def make_entry(_pat, _sub):
+            return lambda e: compile_schema(
+                _sub,
+                e["value"],
+                replace(
+                    ctx,
+                    schema_path=ctx.schema_path + (_pat,),
+                    instance_path=ctx.instance_path + (e["key"],),
+                    dtype=dt.valueType,
+                ),
+            )
 
-            return per_entry
+        def make_hit(_pat):
+            return lambda k: k.rlike(_pat)
 
         for pat, sub in value.items():
-            checked = F.transform(F.map_entries(target), make_per_entry(pat, sub))
-            comps.append(
-                Compiled(
-                    ok=F.forall(checked, lambda s: s["ok"]),
-                    violations=F.flatten(F.transform(checked, lambda s: s["v"])),
-                )
-            )
-        return _null_pass(target, merge(comps))
+            comps.append(_per_entry(F.map_entries(obj), make_entry(pat, sub), make_hit(pat)))
+        return _guard(skip, merge(comps))
     raise ColumnBackendUnsupported("patternProperties needs a struct or map target")
 
 
@@ -1040,16 +1213,18 @@ def _compile_additional_properties(value, schema, target: Column, ctx: Ctx) -> O
     props = set((schema.get("properties") or {}).keys())
     pats = list(schema.get("patternProperties") or {}) + list(schema.get("patternGroups") or {})
     sev = ctx.severity("additionalProperties")
-    if isinstance(ctx.dtype, T.StructType):
-        import re as _re
-
+    view = _as("object", target, ctx.dtype)
+    if view is None:
+        return None
+    obj, dt, skip = view
+    if isinstance(dt, T.StructType):
         extras = [
-            f for f in ctx.dtype.fieldNames()
-            if f not in props and not any(_re.compile(p).search(f) for p in pats)
+            f for f in dt.fieldNames()
+            if f not in props and not any(re.compile(p).search(f) for p in pats)
         ]
         comps = []
         for fname in extras:
-            col = target.getField(fname)
+            col = obj.getField(fname)
             if value is False:
                 # a present (non-null) extra field is an error; struct columns
                 # conflate absent/null exactly like the reference's maps
@@ -1068,13 +1243,13 @@ def _compile_additional_properties(value, schema, target: Column, ctx: Ctx) -> O
                     value,
                     col,
                     replace(ctx, instance_path=ctx.instance_path + (fname,),
-                            dtype=ctx.dtype[fname].dataType),
+                            dtype=dt[fname].dataType),
                 )
-                comps.append(_null_pass(col, child))
+                comps.append(_guard(col.isNull(), child))
         if not comps:
             return None
-        return _null_pass(target, merge(comps))
-    if isinstance(ctx.dtype, T.MapType):
+        return _guard(skip, merge(comps))
+    if isinstance(dt, T.MapType):
         def is_extra(k):
             cond = F.lit(True)
             for p in props:
@@ -1084,7 +1259,7 @@ def _compile_additional_properties(value, schema, target: Column, ctx: Ctx) -> O
             return cond
 
         if value is False:
-            extras = F.filter(F.map_keys(target), is_extra)
+            extras = F.filter(F.map_keys(obj), is_extra)
 
             def viol_for(k):
                 return F.struct(
@@ -1096,32 +1271,19 @@ def _compile_additional_properties(value, schema, target: Column, ctx: Ctx) -> O
                     F.lit(sev).alias("severity"),
                 )
 
-            return _null_pass(
-                target,
-                Compiled(ok=F.size(extras) == 0, violations=F.transform(extras, viol_for)),
+            return _guard(
+                skip, Compiled(ok=F.size(extras) == 0, violations=F.transform(extras, viol_for))
             )
         if isinstance(value, dict):
-            def per_entry(e):
-                child = compile_schema(
+            def entry(e):
+                return compile_schema(
                     value,
                     e["value"],
                     replace(ctx, instance_path=ctx.instance_path + (e["key"],),
-                            dtype=ctx.dtype.valueType),
-                )
-                hit = is_extra(e["key"])
-                return F.struct(
-                    F.when(hit, child.ok).otherwise(F.lit(True)).alias("ok"),
-                    F.when(hit, child.violations).otherwise(_empty()).alias("v"),
+                            dtype=dt.valueType),
                 )
 
-            checked = F.transform(F.map_entries(target), per_entry)
-            return _null_pass(
-                target,
-                Compiled(
-                    ok=F.forall(checked, lambda s: s["ok"]),
-                    violations=F.flatten(F.transform(checked, lambda s: s["v"])),
-                ),
-            )
+            return _guard(skip, _per_entry(F.map_entries(obj), entry, is_extra))
         return None
     raise ColumnBackendUnsupported("additionalProperties needs a struct or map target")
 
@@ -1130,16 +1292,20 @@ def _compile_additional_properties(value, schema, target: Column, ctx: Ctx) -> O
 def _compile_property_names(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled]:
     """Every key name validates as a string (core.clj:1393-1409)."""
     sev = ctx.severity("propertyNames")
-    if isinstance(ctx.dtype, T.StructType):
+    view = _as("object", target, ctx.dtype)
+    if view is None:
+        return None
+    obj, dt, skip = view
+    if isinstance(dt, T.StructType):
         comps = []
-        for fname in ctx.dtype.fieldNames():
+        for fname in dt.fieldNames():
             child = compile_schema(value, F.lit(fname), replace(ctx, dtype=T.StringType()))
             # struct fields conflate absent/null (the engine's has-property
             # view, mirrored from the reference's nil-is-missing): a NULL
             # field is an ABSENT key, so its name is not checked — found by
             # differential fuzz seed 4000765 (doc {} vs struct<a,b>: the
             # unconditional check flagged the never-present field b)
-            present = target.isNotNull() & target.getField(fname).isNotNull()
+            present = obj.isNotNull() & obj.getField(fname).isNotNull()
             ok = F.when(~present, F.lit(True)).otherwise(child.ok)
             comps.append(
                 simple_check(
@@ -1148,63 +1314,28 @@ def _compile_property_names(value, schema, target: Column, ctx: Ctx) -> Optional
                 )
             )
         return merge(comps)
-    if isinstance(ctx.dtype, T.MapType):
+    if isinstance(dt, T.MapType):
         def name_ok(k):
             return compile_schema(value, k, replace(ctx, dtype=T.StringType())).ok
 
-        bad = F.filter(F.map_keys(target), lambda k: ~name_ok(k))
+        bad = F.filter(F.map_keys(obj), lambda k: ~name_ok(k))
         ok = F.size(bad) == 0
         msg = F.concat(F.lit("Invalid property name - "), F.array_join(bad, ", "))
         c = simple_check(ok, ctx.schema_path, ctx.instance_path, "propertyNames", msg, sev)
-        return _null_pass(target, c)
+        return _guard(skip, c)
     raise ColumnBackendUnsupported("propertyNames needs a struct or map target")
-
-
-def _props_count_comparator(keyword: str, op: str):
-    def fn(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled]:
-        sev = ctx.severity(keyword)
-        if isinstance(ctx.dtype, T.StructType):
-            cnt = None
-            for fname in ctx.dtype.fieldNames():
-                term = target.getField(fname).isNotNull().cast("int")
-                cnt = term if cnt is None else cnt + term
-            if cnt is None:
-                cnt = F.lit(0)
-        elif isinstance(ctx.dtype, T.MapType):
-            cnt = F.size(F.map_keys(target))
-        else:
-            return None  # non-objects pass
-        data = _maybe_data(value, ctx)
-        if data is not None:
-            bound, _ = data
-            cmpc = (cnt <= bound) if op == "le" else (cnt >= bound)
-            ok = F.when(bound.isNull() | target.isNull(), F.lit(True)).otherwise(cmpc)
-        else:
-            if not _is_number_py(value):
-                return None
-            bound = F.lit(_i64_guard(value))
-            cmpc = (cnt <= bound) if op == "le" else (cnt >= bound)
-            ok = F.when(target.isNull(), F.lit(True)).otherwise(cmpc)
-        msg = F.concat(F.lit(f"expected number of properties "), cnt.cast("string"),
-                       F.lit(f" {_op_sym(op)} {value if data is None else '$data'}"))
-        return simple_check(ok, ctx.schema_path, ctx.instance_path, keyword, msg, sev)
-
-    return fn
-
-
-KEYWORD_COMPILERS["maxProperties"] = _props_count_comparator("maxProperties", "le")
-KEYWORD_COMPILERS["minProperties"] = _props_count_comparator("minProperties", "ge")
 
 
 @register_keyword("patternGroups")
 def _compile_pattern_groups(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled]:
     """v5 patternGroups (core.clj:613-646): each key matching a group's
     regex validates against the group schema, and the matching-key count
-    honors the group's minimum/maximum.  Previously the Column backend
-    silently dropped this keyword (it is NOT unknown in the reference) —
-    now it compiles natively, mirroring the Variant backend
-    (variant_compiler.py:526-578) on typed targets."""
+    honors the group's minimum/maximum."""
     sev = ctx.severity("patternGroups")
+    view = _as("object", target, ctx.dtype)
+    if view is None:
+        return None
+    obj, dt, skip = view
 
     def count_checks(cnt: Column, mn, mx) -> list:
         out = []
@@ -1220,65 +1351,48 @@ def _compile_pattern_groups(value, schema, target: Column, ctx: Ctx) -> Optional
                          cnt.cast("string"), F.lit(f" < {mx}")), sev))
         return out
 
-    if isinstance(ctx.dtype, T.StructType):
-        import re as _re
-
-        comps = []
+    comps = []
+    if isinstance(dt, T.StructType):
         for pat, group in value.items():
             sub = group.get("schema", True)
-            rx = _re.compile(pat)
-            matching = [f for f in ctx.dtype.fieldNames() if rx.search(f)]
+            rx = re.compile(pat)
+            matching = [f for f in dt.fieldNames() if rx.search(f)]
             for fname in matching:
-                col = target.getField(fname)
+                col = obj.getField(fname)
                 child = compile_schema(
                     sub, col,
                     replace(ctx, schema_path=ctx.schema_path + (pat,),
                             instance_path=ctx.instance_path + (fname,),
-                            dtype=ctx.dtype[fname].dataType),
+                            dtype=dt[fname].dataType),
                 )
-                comps.append(_null_pass(col, child))
+                comps.append(_guard(col.isNull(), child))
             # presence count (nil = missing, as everywhere in the engine)
             cnt = F.lit(0)
             for fname in matching:
-                cnt = cnt + target.getField(fname).isNotNull().cast("int")
+                cnt = cnt + obj.getField(fname).isNotNull().cast("int")
             comps.extend(count_checks(cnt, group.get("minimum"), group.get("maximum")))
         if not comps:
             return None
-        return _null_pass(target, merge(comps))
-    if isinstance(ctx.dtype, T.MapType):
-        comps = []
-
+        return _guard(skip, merge(comps))
+    if isinstance(dt, T.MapType):
         # factory capture, not lambda defaults — see patternProperties note
-        def make_per_entry(_pat, _sub):
-            def per_entry(e):
-                child = compile_schema(
-                    _sub, e["value"],
-                    replace(ctx, schema_path=ctx.schema_path + (_pat,),
-                            instance_path=ctx.instance_path + (e["key"],),
-                            dtype=ctx.dtype.valueType),
-                )
-                hit = e["key"].rlike(_pat)
-                return F.struct(
-                    F.when(hit, child.ok).otherwise(F.lit(True)).alias("ok"),
-                    F.when(hit, child.violations).otherwise(_empty()).alias("v"),
-                )
+        def make_entry(_pat, _sub):
+            return lambda e: compile_schema(
+                _sub, e["value"],
+                replace(ctx, schema_path=ctx.schema_path + (_pat,),
+                        instance_path=ctx.instance_path + (e["key"],),
+                        dtype=dt.valueType),
+            )
 
-            return per_entry
-
-        def make_count(_pat):
-            return F.size(F.filter(F.map_keys(target), lambda k: k.rlike(_pat)))
+        def make_hit(_pat):
+            return lambda k: k.rlike(_pat)
 
         for pat, group in value.items():
             sub = group.get("schema", True)
-            checked = F.transform(F.map_entries(target), make_per_entry(pat, sub))
-            comps.append(
-                Compiled(
-                    ok=F.forall(checked, lambda s: s["ok"]),
-                    violations=F.flatten(F.transform(checked, lambda s: s["v"])),
-                )
-            )
-            comps.extend(count_checks(make_count(pat), group.get("minimum"), group.get("maximum")))
-        return _null_pass(target, merge(comps))
+            comps.append(_per_entry(F.map_entries(obj), make_entry(pat, sub), make_hit(pat)))
+            cnt = F.size(F.filter(F.map_keys(obj), make_hit(pat)))
+            comps.extend(count_checks(cnt, group.get("minimum"), group.get("maximum")))
+        return _guard(skip, merge(comps))
     raise ColumnBackendUnsupported("patternGroups needs a struct or map target")
 
 
@@ -1286,75 +1400,84 @@ def _compile_pattern_groups(value, schema, target: Column, ctx: Ctx) -> Optional
 def _compile_pattern_required(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled]:
     """Each regex must be matched by some key (core.clj:889-909)."""
     sev = ctx.severity("patternRequired")
+    view = _as("object", target, ctx.dtype)
+    if view is None or not isinstance(view[1], (T.StructType, T.MapType)):
+        return None
+    obj, dt, skip = view
     comps = []
-    if isinstance(ctx.dtype, T.StructType):
-        import re as _re
-
-        for pat in value:
-            rx = _re.compile(pat)
-            matching = [f for f in ctx.dtype.fieldNames() if rx.search(f)]
+    for pat in value:
+        if isinstance(dt, T.StructType):
+            rx = re.compile(pat)
             ok = F.lit(False)
-            for fname in matching:
-                ok = ok | target.getField(fname).isNotNull()
-            comps.append(
-                simple_check(
-                    ok, ctx.schema_path, ctx.instance_path, "patternRequired",
-                    f"no properites, which matches {pat}", sev,
-                )
+            for fname in dt.fieldNames():
+                if rx.search(fname):
+                    ok = ok | obj.getField(fname).isNotNull()
+        else:
+            ok = F.exists(F.map_keys(obj), lambda k: k.rlike(pat))
+        comps.append(
+            simple_check(
+                ok, ctx.schema_path, ctx.instance_path, "patternRequired",
+                f"no properites, which matches {pat}", sev,
             )
-        return _null_pass(target, merge(comps))
-    if isinstance(ctx.dtype, T.MapType):
-        def make_matcher(_p):
-            return lambda k: k.rlike(_p)
-
-        for pat in value:
-            ok = F.exists(F.map_keys(target), make_matcher(pat))
-            comps.append(
-                simple_check(
-                    ok, ctx.schema_path, ctx.instance_path, "patternRequired",
-                    f"no properites, which matches {pat}", sev,
-                )
-            )
-        return _null_pass(target, merge(comps))
-    return None
+        )
+    return _guard(skip, merge(comps))
 
 
 # ---------------------------------------------------------------------------
 # array keywords
 
 
-def _array_elem_dtype(ctx: Ctx):
-    return ctx.dtype.elementType if isinstance(ctx.dtype, T.ArrayType) else None
+def _each(arr: Column, compile_elem: Callable) -> Compiled:
+    """Validate every element `(x, i)` of an array as one HOF pass."""
+
+    def per_elem(x, i):
+        c = compile_elem(x, i)
+        return F.struct(c.ok.alias("ok"), c.violations.alias("v"))
+
+    checked = F.transform(arr, per_elem)
+    return Compiled(
+        ok=F.forall(checked, lambda s: s["ok"]),
+        violations=F.flatten(F.transform(checked, lambda s: s["v"])),
+    )
 
 
 @register_keyword("items")
 def _compile_items(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled]:
     sev = ctx.severity("items")
-    if ctx.dtype is not None and not isinstance(ctx.dtype, T.ArrayType):
+    view = _as("array", target, ctx.dtype)
+    if view is None:
         if isinstance(value, list):
             # reference quirk (core.clj:1451-1452): TUPLE-form items on a
             # non-sequential value is an error (the single-schema form
             # passes through) — a known-non-array column fails every
             # non-null row
-            return _null_pass(
-                target,
+            return _guard(
+                target.isNull(),
                 simple_check(
                     F.lit(False), ctx.schema_path, ctx.instance_path,
                     "items", "expected array", sev,
                 ),
             )
         return None
-    elem_dt = _array_elem_dtype(ctx)
+    arr, dt, skip = view
+    elem_dt = dt.elementType if isinstance(dt, T.ArrayType) else None
     if isinstance(value, list):
-        # tuple form + additionalItems (core.clj:1444-1479)
+        # tuple form + additionalItems (core.clj:1444-1479); a Variant
+        # answers the non-array quirk above per row
+        shape = []
+        if _is_variant(ctx.dtype):
+            shape.append(simple_check(
+                target.isNull() | _vtag_is("array", target), ctx.schema_path,
+                ctx.instance_path, "items", "expected array", sev,
+            ))
         if schema.get("additionalItems") is True:
             # core.clj:1462: `(= true ai)` returns ctx before ANY
             # positional validator runs — additionalItems: true disables
             # tuple validation entirely (array-typed values all pass)
-            return None
+            return merge(shape) if shape else None
         comps = []
         for i, sub in enumerate(value):
-            elem = F.element_at(target, i + 1)
+            elem = F.element_at(arr, i + 1)
             child_ctx = replace(
                 ctx,
                 schema_path=ctx.schema_path + (str(i),),
@@ -1363,17 +1486,13 @@ def _compile_items(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled
             )
             child = compile_schema(sub, elem, child_ctx)
             # position beyond array length → pass
-            guarded = Compiled(
-                ok=F.when(F.size(target) <= F.lit(i), F.lit(True)).otherwise(child.ok),
-                violations=F.when(F.size(target) <= F.lit(i), _empty()).otherwise(child.violations),
-            )
-            comps.append(guarded)
+            comps.append(_guard(F.size(arr) <= F.lit(i), child))
         ai = schema.get("additionalItems")
         n = len(value)
         if ai is False:
             comps.append(
                 simple_check(
-                    F.size(target) <= F.lit(n),
+                    F.size(arr) <= F.lit(n),
                     ctx.schema_path[:-1] + ("additionalItems",),
                     ctx.instance_path,
                     "additionalItems",
@@ -1382,49 +1501,46 @@ def _compile_items(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled
                 )
             )
         elif isinstance(ai, dict):
-            def per_extra(x, i):
-                c = compile_schema(
-                    ai,
-                    x,
-                    replace(
-                        ctx,
-                        schema_path=ctx.schema_path[:-1] + ("additionalItems",),
-                        instance_path=ctx.instance_path + (i + F.lit(n),),
-                        dtype=elem_dt,
-                    ),
-                )
-                return F.struct(c.ok.alias("ok"), c.violations.alias("v"))
+            extras = F.slice(arr, n + 1, F.greatest(F.size(arr) - F.lit(n), F.lit(0)))
+            comps.append(_each(extras, lambda x, i: compile_schema(
+                ai,
+                x,
+                replace(
+                    ctx,
+                    schema_path=ctx.schema_path[:-1] + ("additionalItems",),
+                    instance_path=ctx.instance_path + (i + F.lit(n),),
+                    dtype=elem_dt,
+                ),
+            )))
+        return merge(shape + [_guard(skip, merge(comps))])
+    if not isinstance(value, (dict, bool)):
+        return None  # not a schema: no validator, as in the Python backend
 
-            extras = F.slice(target, n + 1, F.greatest(F.size(target) - F.lit(n), F.lit(0)))
-            checked = F.transform(extras, per_extra)
-            comps.append(
-                Compiled(
-                    ok=F.forall(checked, lambda s: s["ok"]),
-                    violations=F.flatten(F.transform(checked, lambda s: s["v"])),
-                )
-            )
-        return _null_pass(target, merge(comps))
+    out = _each(arr, lambda x, i: compile_schema(
+        value,
+        x,
+        replace(ctx, instance_path=ctx.instance_path + (i,), dtype=elem_dt),
+    ))
+    return _guard(skip, out)
 
-    def per_elem(x, i):
-        c = compile_schema(
-            value,
-            x,
-            replace(ctx, instance_path=ctx.instance_path + (i,), dtype=elem_dt),
-        )
-        return F.struct(c.ok.alias("ok"), c.violations.alias("v"))
 
-    checked = F.transform(target, per_elem)
-    out = Compiled(
-        ok=F.forall(checked, lambda s: s["ok"]),
-        violations=F.flatten(F.transform(checked, lambda s: s["v"])),
-    )
-    return _null_pass(target, out)
+def _canonical(arr: Column, dt) -> Column:
+    """Elements in a form Spark can compare.  Variant equality is not
+    defined, so a Variant element becomes its type tag + JSON text: the
+    tag keeps 1 ≠ 1.0 (both print as "1"), and the variant encoding stores
+    object fields sorted, so key-order-permuted objects print alike at
+    every depth (Clojure `=` map semantics)."""
+    if isinstance(dt, T.ArrayType) and _is_variant(dt.elementType):
+        return F.transform(arr, lambda x: F.concat_ws(":", F.schema_of_variant(x), F.to_json(x)))
+    return arr
 
 
 @register_keyword("uniqueItems")
 def _compile_unique_items(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled]:
-    if ctx.dtype is not None and not isinstance(ctx.dtype, T.ArrayType):
+    view = _as("array", target, ctx.dtype)
+    if view is None:
         return None
+    arr, dt, skip = view
     data = _maybe_data(value, ctx)
     flag_col = None
     if data is not None:
@@ -1433,10 +1549,11 @@ def _compile_unique_items(value, schema, target: Column, ctx: Ctx) -> Optional[C
         return None
     sev = ctx.severity("uniqueItems")
     # structural equality on nested types matches Clojure value equality
-    ok = F.size(F.array_distinct(target)) == F.size(target)
+    arr = _canonical(arr, dt)
+    ok = F.size(F.array_distinct(arr)) == F.size(arr)
     if flag_col is not None:
         ok = F.when(flag_col.isNull() | ~flag_col.cast("boolean"), F.lit(True)).otherwise(ok)
-    ok = F.when(target.isNull(), F.lit(True)).otherwise(ok)
+    ok = F.when(skip, F.lit(True)).otherwise(ok)
     return simple_check(
         ok, ctx.schema_path, ctx.instance_path, "uniqueItems", "expected unique items", sev
     )
@@ -1444,15 +1561,17 @@ def _compile_unique_items(value, schema, target: Column, ctx: Ctx) -> Optional[C
 
 @register_keyword("contains")
 def _compile_contains(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled]:
-    if ctx.dtype is not None and not isinstance(ctx.dtype, T.ArrayType):
+    view = _as("array", target, ctx.dtype)
+    if view is None:
         return None  # non-arrays pass (test/v5/contains.json:23-27)
+    arr, dt, skip = view
     sev = ctx.severity("contains")
-    elem_dt = _array_elem_dtype(ctx)
+    elem_dt = dt.elementType if isinstance(dt, T.ArrayType) else None
 
     def pred(x):
         return compile_schema(value, x, replace(ctx, dtype=elem_dt)).ok
 
-    ok = F.when(target.isNull(), F.lit(True)).otherwise(F.exists(target, pred))
+    ok = F.when(skip, F.lit(True)).otherwise(F.exists(arr, pred))
     return simple_check(
         ok, ctx.schema_path, ctx.instance_path, "contains",
         "expected some element to match the contains schema", sev,
@@ -1464,20 +1583,22 @@ def _compile_subset(value, schema, target: Column, ctx: Ctx) -> Optional[Compile
     """Custom keyword: the value array must be a subset of a reference array,
     usually via $data (core.clj:1411-1419, tests
     custom_extensions_test.clj:218-278)."""
-    if ctx.dtype is not None and not isinstance(ctx.dtype, T.ArrayType):
+    view = _as("array", target, ctx.dtype)
+    if view is None:
         return None
+    arr, dt, skip = view
     sev = ctx.severity("subset")
     data = _maybe_data(value, ctx)
     if data is not None:
         ref_col = data[0]
-        ok = F.when(target.isNull() | ref_col.isNull(), F.lit(True)).otherwise(
-            F.size(F.array_except(target, ref_col)) == F.lit(0)
-        )
+        skip = skip | ref_col.isNull()
+    elif _is_variant(ctx.dtype):
+        # Variant elements compare by their JSON text
+        arr = F.transform(arr, lambda x: F.to_json(x))
+        ref_col = F.array(*[F.lit(json.dumps(m)) for m in value])
     else:
         ref_col = F.array(*[_scalar_lit(v) for v in value])
-        ok = F.when(target.isNull(), F.lit(True)).otherwise(
-            F.size(F.array_except(target, ref_col)) == F.lit(0)
-        )
+    ok = F.when(skip, F.lit(True)).otherwise(F.size(F.array_except(arr, ref_col)) == F.lit(0))
     return simple_check(
         ok, ctx.schema_path, ctx.instance_path, "subset", "expected a subset of the reference array", sev
     )
@@ -1487,7 +1608,7 @@ def _compile_subset(value, schema, target: Column, ctx: Ctx) -> Optional[Compile
 # combinators (core.clj:648-804)
 
 
-def _subschemas(options, target, ctx: Ctx, kw: str):
+def _subschemas(options, target, ctx: Ctx):
     return [
         compile_schema(o, target, replace(ctx, schema_path=ctx.schema_path + (str(i),)))
         for i, o in enumerate(options)
@@ -1496,22 +1617,19 @@ def _subschemas(options, target, ctx: Ctx, kw: str):
 
 @register_keyword("allOf")
 def _compile_all_of(value, schema, target: Column, ctx: Ctx) -> Compiled:
-    return merge(_subschemas(value, target, ctx, "allOf"))
+    return merge(_subschemas(value, target, ctx))
 
 
 @register_keyword("extends")
 def _compile_extends(value, schema, target: Column, ctx: Ctx) -> Compiled:
     opts = value if isinstance(value, list) else [value]
-    return merge(_subschemas(opts, target, ctx, "extends"))
+    return merge(_subschemas(opts, target, ctx))
 
 
 @register_keyword("anyOf")
 def _compile_any_of(value, schema, target: Column, ctx: Ctx) -> Compiled:
     sev = ctx.severity("anyOf")
-    oks = [_probe_ok(o, target, ctx) for o in value]
-    ok = oks[0]
-    for o in oks[1:]:
-        ok = ok | o
+    ok = functools.reduce(operator.or_, [_probe_ok(o, target, ctx) for o in value])
     return simple_check(
         ok, ctx.schema_path, ctx.instance_path, "anyOf", "Non alternatives are valid", sev
     )
@@ -1545,13 +1663,9 @@ def _compile_not(value, schema, target: Column, ctx: Ctx) -> Compiled:
 def _compile_disallow(value, schema, target: Column, ctx: Ctx) -> Compiled:
     sev = ctx.severity("disallow")
     opts = value if isinstance(value, list) else [value]
-    oks = []
-    for o in opts:
-        o = {"type": o} if isinstance(o, str) else o
-        oks.append(_probe_ok(o, target, ctx))
-    any_ok = oks[0]
-    for o in oks[1:]:
-        any_ok = any_ok | o
+    any_ok = functools.reduce(operator.or_, [
+        _probe_ok({"type": o} if isinstance(o, str) else o, target, ctx) for o in opts
+    ])
     return simple_check(
         ~any_ok, ctx.schema_path, ctx.instance_path, "disallow",
         f"Disallowed by {json.dumps(value)}", sev,
@@ -1598,21 +1712,17 @@ def _compile_switch(value, schema, target: Column, ctx: Ctx) -> Compiled:
     # split off leading continue-clauses: they always evaluate
     rest = list(value)
     idx = 0
-    while rest:
-        cl = rest[0]
-        if cl.get("continue") and "if" in cl:
-            cond = _probe_ok(cl["if"], target, ctx)
-            th = clause_then(cl, ctx.schema_path + (str(idx),))
-            comps.append(
-                Compiled(
-                    ok=F.when(cond, th.ok).otherwise(F.lit(True)),
-                    violations=F.when(cond, th.violations).otherwise(_empty()),
-                )
+    while rest and rest[0].get("continue") and "if" in rest[0]:
+        cl = rest.pop(0)
+        cond = _probe_ok(cl["if"], target, ctx)
+        th = clause_then(cl, ctx.schema_path + (str(idx),))
+        comps.append(
+            Compiled(
+                ok=F.when(cond, th.ok).otherwise(F.lit(True)),
+                violations=F.when(cond, th.violations).otherwise(_empty()),
             )
-            rest = rest[1:]
-            idx += 1
-        else:
-            break
+        )
+        idx += 1
 
     # fold the remaining clauses into first-match-wins CASE WHEN
     ok_expr = F.lit(True)
@@ -1780,6 +1890,10 @@ def compile_schema(schema, target: Column, ctx: Ctx) -> Compiled:
             F.lit(False), ctx.schema_path, ctx.instance_path, "schema",
             f"Invalid schema {schema}", ctx.severity("schema"),
         )
+    variant = _is_variant(ctx.dtype)
+    if variant and any(isinstance(v, dict) and "$data" in v for v in schema.values()):
+        # a Variant compile has no typed row to resolve the pointer in
+        raise ColumnBackendUnsupported("$data on a Variant value needs the Python backend")
     comps = []
     for k, v in schema.items():
         if k in NOOP_KEYWORDS:
@@ -1787,48 +1901,52 @@ def compile_schema(schema, target: Column, ctx: Ctx) -> Compiled:
         fn = KEYWORD_COMPILERS.get(k)
         if fn is None:
             continue  # unknown keyword: dropped, as in core.clj:1185-1191
+        if variant and _BUILT_IN.get(k) is not fn:
+            raise ColumnBackendUnsupported(f"registered keyword {k!r} expects a typed target")
         c = fn(v, schema, target, ctx.at_keyword(k))
         if c is not None:
             comps.append(c)
     return merge(comps)
 
 
-_TABLE_COMPILE_CACHE: dict = {}
+def compile_for_json(
+    schema: dict,
+    json_col: Column,
+    config: Optional[dict] = None,
+    parsed_col: Optional[Column] = None,
+) -> Compiled:
+    """Compile a schema against a raw-JSON string column, as Variant values.
+
+    Uses ``try_parse_json`` so one malformed record yields a per-row
+    `$parse` violation instead of failing the whole job (``parse_json``
+    raises MALFORMED_RECORD_IN_PARSING executor-side — at 10^12 rows a
+    single bad record must not abort the run).  A malformed row fails
+    with exactly the parse violation; the schema's checks are suppressed
+    for it (the reference never validates a document that didn't parse).
+
+    ``parsed_col``: pass an attribute that already holds
+    ``try_parse_json(json_col)`` (materialized in its own projection).
+    Without it, Catalyst inlines the parse into EVERY check reference —
+    the check tree then re-parses the JSON string ~1× per keyword per row
+    (measured 5× slower end to end).  ``engine.validate_json_column``
+    always supplies it; direct callers of this function pay the re-parse."""
+    v = parsed_col if parsed_col is not None else F.try_parse_json(json_col)
+    ctx = Ctx(config=config or {}, root_schema=schema, dtype=T.VariantType())
+    inner = compile_schema(schema, v, ctx)
+    malformed = json_col.isNotNull() & v.isNull()
+    parse_check = simple_check(
+        ~malformed, (), (), "$parse", "malformed JSON", "error"
+    )
+    # coalesce: a null ok (3-valued logic on a null doc) always carries a
+    # violation in simple_check, so the row verdict is definitively False
+    return Compiled(
+        ok=F.when(malformed, F.lit(False)).otherwise(F.coalesce(inner.ok, F.lit(False))),
+        violations=F.when(malformed, parse_check.violations).otherwise(inner.violations),
+    )
 
 
-def _registry_fingerprint(reg: dict) -> tuple:
-    """Cache-key component that changes when keywords are (re)registered."""
-    return tuple((k, id(v)) for k, v in sorted(reg.items()))
-
-
-def compile_for_table(schema: dict, table_schema: T.StructType, config: Optional[dict] = None,
-                      extra_root: Optional[dict] = None) -> Compiled:
-    """Compile a schema against a whole table row.
-
-    The row presents as the instance object: columns are its keys.  Returns
-    a :class:`Compiled` whose expressions reference the table's columns
-    directly — Catalyst prunes unused ones.
-
-    Results are memoized per (schema, table schema, config, registry):
-    building a check tree costs one Py4J round trip (~3 ms) per Column op,
-    so a mid-sized schema spends seconds of driver time per compile — paid
-    once per process this way, like the reference's compile-once /
-    validate-many contract (core.clj:1484-1492).  Columns are immutable
-    unresolved expression trees, reusable across DataFrames and sessions
-    within one JVM gateway.
-    """
-    try:
-        key = (
-            json.dumps(schema, sort_keys=True),
-            json.dumps(extra_root, sort_keys=True) if extra_root is not None else None,
-            json.dumps(config, sort_keys=True) if config else "",
-            table_schema.json(),
-            _registry_fingerprint(KEYWORD_COMPILERS),
-        )
-    except TypeError:
-        key = None
-    if key is not None and key in _TABLE_COMPILE_CACHE:
-        return _TABLE_COMPILE_CACHE[key]
+def _compile_table(schema: dict, table_schema: T.StructType, config: Optional[dict],
+                   extra_root: Optional[dict]) -> Compiled:
     row = F.struct(*[F.col(f.name).alias(f.name) for f in table_schema.fields])
     ctx = Ctx(
         schema_path=(),
@@ -1839,7 +1957,82 @@ def compile_for_table(schema: dict, table_schema: T.StructType, config: Optional
         root_col=row,
         root_dtype=table_schema,
     )
-    out = compile_schema(schema, row, ctx)
-    if key is not None:
-        _TABLE_COMPILE_CACHE[key] = out
+    return compile_schema(schema, row, ctx)
+
+
+def parsed_col_name(json_col: str) -> str:
+    """The attribute `engine.validate_json_column` parses `json_col` into."""
+    return f"__parsed_{json_col}"
+
+
+def _build(schema, table_schema, json_col, config, extra_root):
+    """Compile for a table (`table_schema`) or a JSON column (`json_col`);
+    a declined compile comes back as its exception, so it is memoized too."""
+    try:
+        if json_col is not None:
+            return compile_for_json(
+                schema, F.col(json_col), config, parsed_col=F.col(parsed_col_name(json_col))
+            )
+        return _compile_table(schema, table_schema, config, extra_root)
+    except ColumnBackendUnsupported as e:
+        return e
+
+
+#: compiled trees kept per process (least recently used first out)
+COMPILE_MEMO_SIZE = 256
+
+
+@functools.lru_cache(maxsize=COMPILE_MEMO_SIZE)
+def _memo(schema_json: str, table_json: Optional[str], json_col: Optional[str],
+          config_json: str, extra_json: str, registry: tuple):
+    """The compile memo, keyed by JSON text.  `registry` (unused in the
+    body) keys the registered keyword set, so a (re)registration misses."""
+    table = T.StructType.fromJson(json.loads(table_json)) if table_json else None
+    return _build(json.loads(schema_json), table, json_col, json.loads(config_json),
+                  json.loads(extra_json))
+
+
+def _compiled(schema, table_schema=None, json_col=None, config=None, extra_root=None) -> Compiled:
+    """Memoized compile: building a check tree costs one Py4J round trip
+    (~3 ms) per Column op, so a mid-sized schema spends seconds of driver
+    time per compile — paid once per process this way, like the
+    reference's compile-once / validate-many contract (core.clj:1484-1492).
+    Columns are immutable unresolved expression trees, reusable across
+    DataFrames and sessions within one JVM gateway."""
+    try:
+        key = (
+            json.dumps(schema),
+            table_schema.json() if table_schema is not None else None,
+            json_col,
+            json.dumps(config or {}),
+            json.dumps(extra_root),
+            tuple((k, id(v)) for k, v in sorted(KEYWORD_COMPILERS.items())),
+        )
+    except TypeError:  # not JSON-serialisable: compile without the memo
+        out = _build(schema, table_schema, json_col, config, extra_root)
+    else:
+        out = _memo(*key)
+    if isinstance(out, ColumnBackendUnsupported):
+        raise ColumnBackendUnsupported(*out.args)
     return out
+
+
+def compile_for_table(schema: dict, table_schema: T.StructType, config: Optional[dict] = None,
+                      extra_root: Optional[dict] = None) -> Compiled:
+    """Compile a schema against a whole table row (memoized).
+
+    The row presents as the instance object: columns are its keys.  Returns
+    a :class:`Compiled` whose expressions reference the table's columns
+    directly — Catalyst prunes unused ones."""
+    return _compiled(schema, table_schema=table_schema, config=config, extra_root=extra_root)
+
+
+def compile_json_column(schema: dict, json_col: str, config: Optional[dict] = None) -> Compiled:
+    """:func:`compile_for_json` over column `json_col`, reading the parse
+    from :func:`parsed_col_name` (memoized, declines included)."""
+    return _compiled(schema, json_col=json_col, config=config)
+
+
+#: the built-in keyword bodies, written against the value view; a keyword
+#: registered later compiles on typed columns only (see compile_schema)
+_BUILT_IN = dict(KEYWORD_COMPILERS)

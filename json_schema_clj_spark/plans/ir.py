@@ -177,22 +177,6 @@ def merge(compiled: Sequence[Compiled]) -> Compiled:
     return Compiled(ok=ok, violations=viols, unit=unit)
 
 
-def guard_null(target: Column, inner: Compiled) -> Compiled:
-    """Property-level null guard: subschemas only apply when the value is
-    present AND non-nil (reference `properties`, core.clj:367-389)."""
-    if inner.empty:
-        return Compiled(
-            ok=F.when(target.isNull(), F.lit(True)).otherwise(inner.ok),
-            violations=_typed_empty_array(),
-            empty=True,
-        )
-    return Compiled(
-        ok=F.when(target.isNull(), F.lit(True)).otherwise(inner.ok),
-        violations=F.when(target.isNull(), _typed_empty_array()).otherwise(inner.violations),
-        unit=F.when(target.isNotNull(), inner.unit) if inner.unit is not None else None,
-    )
-
-
 @dataclass(frozen=True)
 class Ctx:
     """Compile-time context threaded through keyword compilers — the analog of
@@ -206,7 +190,8 @@ class Ctx:
     config: dict = field(default_factory=dict)
     root_schema: Optional[dict] = None
     # target's Spark DataType when known (struct field / array element) —
-    # enables compile-time type verdicts
+    # enables compile-time type verdicts; VariantType selects the per-row
+    # Variant view (compiler.py, "the value view")
     dtype: Optional[T.DataType] = None
     # the root row struct Column, for $data "#/..." absolute pointers
     root_col: Optional[Column] = None

@@ -1,6 +1,7 @@
-"""Differential fuzz: for seeded random (schema, rows) pairs, the Column
-backend (typed table), the Column backend (from_json path), and the Python
-backend (Arrow UDF + driver-side) must agree on every row's validity.
+"""Differential fuzz: for seeded random (schema, rows) pairs, the Catalyst
+compiler over the typed table, the Catalyst compiler over Variant JSON, and
+the Python backend (Arrow UDF + driver-side) must agree on every row's
+validity.
 
 Null-valued keys are dropped from the JSON docs: Spark structs conflate
 absent/null (exactly the reference's has-property? view), so that is the

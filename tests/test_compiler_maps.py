@@ -192,3 +192,25 @@ def test_property_names_skips_absent_struct_fields(spark):
         .collect()
     )
     assert "b" in bad[0]["v"]["message"]
+
+
+def test_data_const_map_key_types_must_match(spark):
+    """Maps with different key types are never Clojure `=` (a string key
+    never equals an integer key), so a $data const between them is the
+    static-false branch — not a runtime comparison that aborts analysis
+    with DATATYPE_MISMATCH."""
+    from pyspark.sql import types as T
+
+    from json_schema_clj_spark.plans.compiler import _dtype_compatible
+
+    long_vals = T.MapType(T.StringType(), T.LongType())
+    assert not _dtype_compatible(long_vals, T.MapType(T.IntegerType(), T.LongType()))
+    assert _dtype_compatible(long_vals, T.MapType(T.StringType(), T.IntegerType()))
+    schema = {"properties": {"m": {"const": {"$data": "1/n"}}}}
+    vm = _vm(
+        spark,
+        [("both_null", None, None), ("both_set", {"1": 1}, {1: 1})],
+        "k string, m map<string,long>, n map<int,long>",
+        schema,
+    )
+    assert vm == {"both_null": True, "both_set": False}

@@ -434,6 +434,17 @@ def test_const_enum_cross_type_static_false(spark):
     mixed = {"properties": {"n": {"enum": ["x", 3]}}}
     vm5 = _valid_map(spark, [("a", 3), ("b", 4)], "k string, n long", mixed)
     assert vm5 == {"a": True, "b": False}
+    # $data enum of arrays with another element type: only [] == [] holds,
+    # as in the const branch (Clojure `=` ignores the element type of an
+    # empty vector)
+    data_enum = {"properties": {"xs": {"enum": {"$data": "1/opts"}}}}
+    vm6 = _valid_map(
+        spark,
+        [("a", [], [[]]), ("b", [1], [[]]), ("c", [], [["x"]]), ("d", [], [["x"], []])],
+        "k string, xs array<long>, opts array<array<string>>",
+        data_enum,
+    )
+    assert vm6 == {"a": True, "b": False, "c": False, "d": True}
 
 
 def test_enum_data_nil_ref_passes_before_broken_enum(spark):

@@ -1,6 +1,6 @@
-"""Hybrid engine facade: backend dispatch, from_json fast path, parity
-between backends on the same documents, and Catalyst column pruning
-through the validation machinery."""
+"""Hybrid engine facade: backend dispatch between the Variant tier and the
+Python tier, parity between backends on the same documents, the compile
+memo, and Catalyst column pruning through the validation machinery."""
 
 import json
 
@@ -45,8 +45,8 @@ def test_one_doc_api():
 
 def test_backend_dispatch(spark):
     df = _df(spark, DOCS)
-    col_out = engine.validate_json_column(df, CLOSED, force_backend="column")
-    plan = col_out._jdf.queryExecution().executedPlan().toString()
+    var_out = engine.validate_json_column(df, CLOSED)  # Variant tier (default)
+    plan = var_out._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     py_out = engine.validate_json_column(df, DYNAMIC)  # python backend (default)
     plan = py_out._jdf.queryExecution().executedPlan().toString()
@@ -55,13 +55,13 @@ def test_backend_dispatch(spark):
 
 def test_backend_parity(spark):
     df = _df(spark, DOCS)
-    col_valid = [r["valid"] for r in engine.validate_json_column(df, CLOSED, force_backend="column").collect()]
+    var_valid = [r["valid"] for r in engine.validate_json_column(df, CLOSED, force_backend="variant").collect()]
     py_valid = [
         r["valid"]
         for r in engine.validate_json_column(df, CLOSED, force_backend="python").collect()
     ]
     driver_valid = [not engine.validate(CLOSED, d)["errors"] for d in DOCS]
-    assert col_valid == py_valid == driver_valid == [True, False, False, False]
+    assert var_valid == py_valid == driver_valid == [True, False, False, False]
 
 
 def test_column_pruning_through_validation(spark, tmp_path):
@@ -98,8 +98,9 @@ def test_full_table_scan_pruning(spark, tmp_path):
     assert "caption" not in plan.split("ReadSchema:")[-1]
 
 def test_default_backend_catches_type_mismatch(spark):
-    """WHY python is the default for raw JSON: from_json nulls/coerces
-    type-mismatched fields, which would silently pass `type` checks."""
+    """Raw JSON keeps every value's runtime type on both JSON tiers, so a
+    type-mismatched field fails its `type` check (a from_json struct would
+    null or coerce it and silently pass)."""
     docs = [{"name": 5}]  # integer where a string is required
     df = _df(spark, docs)
     out = engine.validate_json_column(df, CLOSED).collect()
@@ -139,3 +140,60 @@ def test_null_ok_custom_check_reads_invalid(spark):
         assert rows[1] == (False, 1)
     finally:
         KEYWORD_COMPILERS.pop("gt3Strict", None)
+
+
+def test_registered_keyword_reaches_json_tier(spark):
+    # a keyword registered after import compiles on typed columns only: the
+    # Variant tier must decline the schema (fall back to the Python tier),
+    # never drop the keyword and pass the document
+    from json_schema_clj_spark.plans.compiler import KEYWORD_COMPILERS
+    from json_schema_clj_spark.plans.ir import simple_check
+    from json_schema_clj_spark.pyvalidator.validator import KEYWORDS, _add_error
+
+    def col_gt3(value, schema, target, ctx):
+        return simple_check(
+            F.when(target.isNull(), F.lit(True)).otherwise(target > 3),
+            ctx.schema_path, ctx.instance_path, "gt3", "expected > 3", "error",
+        )
+
+    def py_gt3(value, schema, cc):
+        def vfn(v, path, run):
+            if isinstance(v, int) and not v > 3:
+                _add_error(run, "gt3", path, "expected > 3")
+
+        return vfn
+
+    schema = {"properties": {"v": {"gt3": True}}}
+    engine.register_keyword("gt3", column_compiler=col_gt3, python_compiler=py_gt3)
+    try:
+        out = engine.validate_json_column(_df(spark, [{"v": 1}, {"v": 5}]), schema)
+        rows = out.collect()
+        assert [r["valid"] for r in rows] == [False, True]
+        assert [v["message"] for v in rows[0]["violations"]] == ["expected > 3"]
+        table = spark.createDataFrame([(1,), (5,)], "v long")
+        assert [r["valid"] for r in engine.with_validation(table, schema).collect()] == [False, True]
+    finally:
+        KEYWORD_COMPILERS.pop("gt3", None)
+        KEYWORDS.pop("gt3", None)
+
+
+def test_compile_memo_bounded_and_remembers_declines(spark):
+    from json_schema_clj_spark.plans import compiler
+
+    df = _df(spark, DOCS)
+    for schema in (CLOSED, DYNAMIC):  # a Variant compile and a decline
+        engine.validate_json_column(df, schema)
+        misses = compiler._memo.cache_info().misses
+        engine.validate_json_column(df, schema)
+        assert compiler._memo.cache_info().misses == misses  # compiled nothing
+    bound = compiler.COMPILE_MEMO_SIZE
+    for i in range(bound + 8):  # distinct schemas, declined without Spark work
+        try:
+            compiler.compile_json_column({"enum": [{"i": i}]}, "data_json")
+        except compiler.ColumnBackendUnsupported:
+            pass
+    info = compiler._memo.cache_info()
+    assert info.currsize <= info.maxsize == bound
+    # least recently used out: CLOSED compiles again
+    engine.validate_json_column(df, CLOSED)
+    assert compiler._memo.cache_info().misses == info.misses + 1
