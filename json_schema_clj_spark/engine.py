@@ -23,6 +23,7 @@ the distributed surface:
 
 from __future__ import annotations
 
+import uuid
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
@@ -54,7 +55,10 @@ def validate_json_column(
     1. **variant** — ``try_parse_json`` into a VariantType value keeps
        every value's runtime JSON type, so the Catalyst keyword compiler
        dispatches on exact types and the whole check tree stays pure
-       Catalyst.  Used whenever the schema compiles on the Variant view.
+       Catalyst.  Each statically addressed value and its type tag are
+       bound once per row, and `valid` derives from the violations array
+       (see ``compiler.compile_for_json``).  Used whenever the schema
+       compiles on the Variant view.
        It declines `$data`, `$ref` recursion beyond the unroll depth,
        non-scalar enum/const members, bignum bounds and keywords
        registered after import.
@@ -75,29 +79,35 @@ def validate_json_column(
             if force_backend == "variant":
                 raise
         else:
-            # parse ONCE in a dedicated projection: the non-cheap parse stays
-            # an attribute reference inside the check tree instead of being
-            # inlined (and re-parsed) at every keyword — ~5× at 20 checks
+            # parse once, then bind each statically addressed value and its
+            # type tag once, each in its own projection; the check tree
+            # reads them as attributes
             tmp = parsed_col_name(json_col)
-            out = df.withColumn(tmp, F.try_parse_json(F.col(json_col))).withColumn(
-                "violations", compiled.violations
+            out = df.withColumn(tmp, F.try_parse_json(F.col(json_col)))
+            for layer in compiled.bindings:
+                out = out.withColumns(dict(layer))
+            out = _fence(out.withColumn("violations", compiled.violations))
+            # one tree: the verdict is "no error-severity violation"
+            out = out.withColumn(
+                "valid",
+                F.size(F.filter(F.col("violations"), lambda v: v["severity"] == F.lit("error"))) == 0,
             )
-            if not config:
-                # coalesce: any residual NULL ok must read as invalid so
-                # valid == (empty? violations) holds (reference contract)
-                out = out.withColumn("valid", F.coalesce(compiled.ok, F.lit(False)))
-            else:
-                out = out.withColumn(
-                    "valid",
-                    F.size(F.filter(F.col("violations"), lambda v: v["severity"] == F.lit("error"))) == 0,
-                )
-            return out.drop(tmp)
-    res = validate_json_df(df, schema, json_col=json_col, config=config, loader=loader)
-    return (
-        res.withColumn("valid", F.col("validation.valid"))
-        .withColumn("violations", F.col("validation.violations"))
-        .drop("validation")
-    )
+            return out.drop(tmp, *(name for layer in compiled.bindings for name, _ in layer))
+    res = _fence(validate_json_df(df, schema, json_col=json_col, config=config, loader=loader))
+    return res.withColumns(
+        {"valid": F.col("validation.valid"), "violations": F.col("validation.violations")}
+    ).drop("validation")
+
+
+def _fence(checked: DataFrame) -> DataFrame:
+    """`checked` behind one observe node (Spark's CollectMetrics, counting
+    rows).  Filter pushdown does not cross it, so a predicate on the verdict
+    stays above it and reads the checked columns, instead of re-deriving
+    them below: the Variant tree with its parse and bindings inlined at
+    each reference, or a second run of the Arrow-Python UDF.  One name per
+    call: two validations in one plan must not clash."""
+    return checked.observe(f"validate_json_column_{uuid.uuid4().hex}",
+                           F.count(F.lit(1)).alias("rows"))
 
 
 def register_keyword(name: str, column_compiler: Optional[Callable] = None,

@@ -94,12 +94,6 @@ def _ckpt_release(df) -> None:
             jmap.get(rid).unpersist(False)
 
 
-def resident_checkpoint_rdds(spark) -> int:
-    """Observability: count of currently-persisted RDDs (tests assert the
-    CC loops hold at most 2 checkpointed edge/label sets mid-loop)."""
-    return int(spark.sparkContext._jsc.getPersistentRDDs().size())
-
-
 def _splitmix64(x: np.ndarray) -> np.ndarray:
     """Vectorized splitmix64 finalizer (public-domain mixing constants):
     derives independent hash families from one base hash, pure uint64 ops."""
@@ -606,23 +600,6 @@ def cross_contamination(
 # MinHash + LSH
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 64, seed: int = 42) -> Column:
-    """num_hashes-wide MinHash signature (array<bigint>).
-
-    One pass over the shingle array per row: fold with an array accumulator,
-    each step zip_with-min'ing the accumulator against the shingle's
-    num_hashes keyed hashes.  Pure HOFs → whole-stage codegen, no Python.
-    """
-    init = F.array_repeat(F.lit(2**63 - 1).cast("long"), num_hashes)
-    seeds = F.sequence(F.lit(seed), F.lit(seed + num_hashes - 1))
-
-    def step(acc, sh):
-        hashes = F.transform(seeds, lambda j: F.xxhash64(j, sh))
-        return F.zip_with(acc, hashes, lambda a, h: F.least(a, h))
-
-    return F.aggregate(shingles, init, step)
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -635,11 +612,7 @@ def minhash_signatures(
     runs as ONE Arrow-batched mapInPandas stage with NO shuffle: shingling,
     hashing (stable keyed string hash + splitmix64-derived families) and the
     num_hashes mins are all vectorized numpy.  At 10^12 rows this is scan →
-    map, nothing else.
-
-    (The explode → groupBy(id) → num_hashes-way MIN agg alternative —
-    minhash_signatures_grouped — shuffles one row per (doc, shingle): the
-    right shape only if signatures must be built in pure SQL.)"""
+    map, nothing else."""
     out_schema = "id long, sig array<long>"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -690,30 +663,6 @@ def minhash_signatures(
     return df.select(F.col(id_col).alias(id_col), F.col(text_col)).mapInPandas(
         run, schema=out_schema
     )
-
-
-def minhash_signatures_grouped(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """Pure-SQL alternative: explode → num_hashes-way MIN aggregate (map-side
-    partial mins compress the shuffle to |docs| rows)."""
-    ex = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(F.col(text_col), k)).alias("sh"),
-    )
-    # F.expr strings, not per-op Column building: constructing num_hashes
-    # agg Columns through Py4J costs ~3 ms per JVM round-trip (seconds of
-    # driver latency per plan); one SQL parse per agg is one round-trip.
-    # SQL int literals are int32 like F.lit(int) — hash parity holds.
-    aggs = [F.expr(f"min(xxhash64({seed + j}, sh)) AS h{j}") for j in range(num_hashes)]
-    sums = ex.groupBy("id").agg(*aggs)
-    arr = "array(" + ", ".join(f"h{j}" for j in range(num_hashes)) + ")"
-    return sums.select("id", F.expr(arr).alias("sig"))
 
 
 def lsh_near_duplicates(
@@ -943,8 +892,8 @@ def minhash_md5_near_duplicates(
         F.col(id_col).alias("id"),
         F.explode(word_shingles(F.col(text_col), k)).alias("sh"),
     )
-    # F.expr strings, not per-op Column building — see minhash_signatures
-    # on Py4J round-trip cost
+    # F.expr strings, not per-op Column building: each Column op is one
+    # Py4J round trip (~3 ms), one SQL parse per agg is one round trip
     aggs = [F.expr(f"min(md5(concat('{j}:', sh))) AS h{j}") for j in range(bands)]
     sig_arr = "array(" + ", ".join(f"h{j}" for j in range(bands)) + ")"
     # persist: the signature agg feeds both sides of the bucket self-join
@@ -1001,37 +950,6 @@ def minhash_md5_near_duplicates(
 # SimHash
 
 
-def simhash(text: Column, bits: int = 64, seed: int = 7) -> Column:
-    """Sign-aggregated word-hash fingerprint as a bigint.
-
-    For each bit b: sum over words of ±1 by word-hash bit b; result bit = 1
-    iff the sum is positive.  One fold over the word array with a bit-count
-    array accumulator; the bit loop is unrolled at compile time (shift
-    amounts must be literals) — still a single whole-stage-codegen'd
-    expression, no Python at runtime.
-    """
-    words = F.array_distinct(F.split(normalized(text), " "))
-    init = F.array_repeat(F.lit(0).cast("long"), bits)
-
-    def step(acc, w):
-        h = F.xxhash64(F.lit(seed), w)
-        contrib = F.array(
-            *[
-                (F.shiftright(h, b).bitwiseAND(F.lit(1)) * 2 - 1).cast("long")
-                for b in range(bits)
-            ]
-        )
-        return F.zip_with(acc, contrib, lambda a, c: a + c)
-
-    counts = F.aggregate(words, init, step)
-    # assemble the bigint: 2^b for positive bits; bit 63 is the sign bit
-    out = F.lit(0).cast("long")
-    for b in range(bits):
-        weight = F.shiftleft(F.lit(1).cast("long"), b)
-        out = out + F.when(F.element_at(counts, b + 1) > 0, weight).otherwise(F.lit(0).cast("long"))
-    return out
-
-
 def simhash_df(
     df: DataFrame,
     text_col: str = "text",
@@ -1043,8 +961,8 @@ def simhash_df(
     Arrow-batched mapInPandas stage with NO shuffle: tokenize, stable word
     hash, unpack to a (words × 64) bit matrix, per-doc popcount, sign rule
     2·popcount > n — all vectorized numpy.  Scan → map at any scale.
-
-    (simhash_df_grouped keeps the pure-SQL explode → 64-way agg shape.)"""
+    The pure-SQL grouped shape (explode → conditional-sum agg) lives in
+    :func:`simhash_md5_candidates`."""
     assert bits == 64, "packed fingerprint is 64-bit"
     out_schema = "id long, sh long"
 
@@ -1077,37 +995,6 @@ def simhash_df(
     return df.select(F.col(id_col).alias(id_col), F.col(text_col)).mapInPandas(
         run, schema=out_schema
     )
-
-
-def simhash_df_grouped(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 64,
-    seed: int = 7,
-) -> DataFrame:
-    """Pure-SQL alternative: one row per (doc, distinct word) feeding 64
-    conditional sums in a single partial+final hash agg; map-side combine
-    keeps the shuffle at |docs| rows."""
-    ex = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(F.split(normalized(F.col(text_col)), " "))).alias("w"),
-    )
-    # pre-project the word hash once; the bits aggs then read a plain
-    # attribute instead of re-hashing per agg expression
-    ex = ex.select("id", F.expr(f"xxhash64({seed}, w)").alias("h"))
-    # popcount form: bit b of the fingerprint is 1 iff Σ±1 > 0, i.e. iff
-    # 2·(count of set bits) > (word count).  Built via F.expr strings — see
-    # minhash_signatures on Py4J round-trip cost.
-    aggs = [
-        F.expr(f"sum((h >> {b}) & 1) AS p{b}") for b in range(bits)
-    ] + [F.expr("count(*) AS n")]
-    sums = ex.groupBy("id").agg(*aggs)
-    packed = " + ".join(
-        f"(CASE WHEN 2 * p{b} > n THEN CAST({1 << b if b < 63 else -(1 << 63)} AS BIGINT) ELSE 0L END)"
-        for b in range(bits)
-    )
-    return sums.select("id", F.expr(packed).alias("sh"))
 
 
 def simhash_md5_candidates(

@@ -15,6 +15,8 @@ fully pipeline-able with whatever else reads the text column.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -39,6 +41,24 @@ def _occurrences(col: Column, token: str) -> Column:
     ).cast("int")
 
 
+def _check_placeholder_safe(name: str, pat: str, token: str) -> None:
+    """Raise if `pat` can match any part of `token` (alone or between word
+    and digit neighbours).  The check runs Python's `re`; a pattern only
+    the JVM dialect accepts is left to the caller."""
+    try:
+        rx = re.compile(pat)
+    except re.error:
+        return
+    for probe in (token, f" {token} ", f"a{token}a", f"0{token}0"):
+        start = probe.index(token)
+        for m in rx.finditer(probe):
+            if m.start() < start + len(token) and m.end() > start:
+                raise ValueError(
+                    f"PII pattern {name!r} matches its own placeholder {token}; "
+                    "the staged hit count would be wrong"
+                )
+
+
 def pii_counts(text: Column, patterns: dict[str, str] | None = None) -> dict[str, Column]:
     """Per-type hit count, STAGED: each pattern counts against the text
     with all PRIOR patterns already redacted, so the counts are exactly
@@ -54,14 +74,17 @@ def pii_counts(text: Column, patterns: dict[str, str] | None = None) -> dict[str
     (extract + replace), and the delta is exact for arbitrary input —
     pre-existing literal ``[EMAIL]`` text survives every stage untouched
     (no default pattern can match '[' or ']') and each replacement
-    inserts exactly one non-self-overlapping token.  Precondition for
-    CUSTOM pattern sets: a pattern must not match text containing its own
-    bracket placeholder (true for anything in the default charsets)."""
+    inserts exactly one non-self-overlapping token.  Precondition, checked
+    here: no pattern matches inside or across its own bracket placeholder
+    (true for anything in the default charsets); a pattern that does would
+    rewrite a placeholder already in the text and skew the delta silently,
+    so it raises ValueError instead."""
     pats = patterns or PII_PATTERNS
     out: dict[str, Column] = {}
     staged = text
     for name, pat in pats.items():
         token = f"[{name.upper()}]"
+        _check_placeholder_safe(name, pat, token)
         before = _occurrences(staged, token)
         staged = F.regexp_replace(staged, pat, token)
         out[name] = _occurrences(staged, token) - before

@@ -51,6 +51,7 @@ from typing import Any, Callable, Optional
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.classic.column import Column as _ClassicColumn
 
 from ..functions import formats
 from .ir import Compiled, Ctx, PathSeg, _typed_empty_array, merge, simple_check, violation
@@ -114,6 +115,16 @@ def _is_numeric(dt) -> bool:
 _empty = _typed_empty_array
 
 
+def _merge(comps, ctx: Ctx) -> Compiled:
+    """:func:`~.ir.merge` for the view of `ctx`.  A Variant value joins
+    single checks with ``concat``, not a ``filter`` higher-order function:
+    Spark interprets a HOF and everything below it, and the Variant tier
+    builds its violations on every row (its verdict derives from them).  A
+    typed column keeps the ``filter`` form; its verdict reads the `ok` tree,
+    so violations are built for failing rows only."""
+    return merge(comps, units=not _is_variant(ctx.dtype))
+
+
 def _guard(skip: Column, c: Compiled) -> Compiled:
     """Non-applicable / absent values pass (comparator ladder,
     core.clj:93-124; properties guard core.clj:367-389)."""
@@ -133,6 +144,85 @@ def _guard(skip: Column, c: Compiled) -> Compiled:
 # the type test reads the `schema_of_variant` tag, the value is a
 # `try_variant_get` cast, an object is the `map<string,variant>` of its
 # members and an array the `array<variant>` of its elements.
+#
+# A Variant value reached by a static path from the parse root (the root
+# itself, and what `properties`/`required` and `$ref` unrolls reach from
+# it) is a :class:`_Bound`: it, its tag and its typed casts are attributes
+# projected once per row, so every check reads them instead of
+# re-extracting the member from a whole-object map cast and re-rendering
+# its tag at each use.  Values inside array/map HOFs (lambda variables)
+# are not bound.
+
+
+class _Binder:
+    """The bound Variant values of one compile.  Each static path is bound
+    once: the value ``try_variant_get(parsed, path, 'variant')`` and, on
+    first use, its ``schema_of_variant`` tag and each typed cast a check
+    reads, under names derived from the parse attribute `parsed`."""
+
+    def __init__(self, parsed: str):
+        self.parsed = parsed
+        self.values: list[tuple[str, Column]] = []
+        self.tags: list[tuple[str, Column]] = []
+        self._bound: dict[str, _Bound] = {}
+
+    def bind(self, path: str) -> "_Bound":
+        b = self._bound.get(path)
+        if b is None:
+            value = F.col(self.parsed) if path == "$" else self.bind_value(path, "variant")
+            b = self._bound[path] = _Bound(value, path, self)
+        return b
+
+    def bind_value(self, path: str, as_type: str) -> Column:
+        name = f"{self.parsed}__v{len(self.values)}"
+        self.values.append((name, F.try_variant_get(F.col(self.parsed), path, as_type)))
+        return F.col(name)
+
+    def bind_tag(self, value: Column) -> Column:
+        name = f"{self.parsed}__t{len(self.tags)}"
+        self.tags.append((name, F.schema_of_variant(value)))
+        return F.col(name)
+
+    def layers(self) -> tuple:
+        """The bindings as projection layers: values, then their tags."""
+        return tuple(tuple(layer) for layer in (self.values, self.tags) if layer)
+
+
+class _Bound(_ClassicColumn):
+    """A Variant value read from its bound attribute, `path` its JSONPath
+    from the parse root.  Column operations on it return plain Columns, so
+    only a keyword body's own target is ever seen as bound."""
+
+    def __init__(self, value: Column, path: str, binder: _Binder):
+        super().__init__(value._jc)
+        self.path = path
+        self._binder = binder
+        self._tag: Optional[Column] = None
+        self._casts: dict[str, Column] = {}
+
+    @property
+    def tag(self) -> Column:
+        """The attribute holding this value's `schema_of_variant` tag."""
+        if self._tag is None:
+            self._tag = self._binder.bind_tag(self)
+        return self._tag
+
+    def typed(self, as_type: T.DataType) -> Column:
+        """The attribute holding this value cast to `as_type` (NULL when it
+        does not cast)."""
+        t = as_type.simpleString()
+        if t not in self._casts:
+            self._casts[t] = self._binder.bind_value(self.path, t)
+        return self._casts[t]
+
+    def member(self, key) -> Optional["_Bound"]:
+        """The bound object member `key`; None when the path syntax cannot
+        spell the key (it has no escapes for a key holding both quotes)."""
+        if not isinstance(key, str) or ("'" in key and '"' in key):
+            return None
+        seg = f"['{key}']" if "'" not in key else f'["{key}"]'
+        return self._binder.bind(self.path + seg)
+
 
 #: JSON type family -> does a typed column of this Spark type hold it
 _FAMILIES = {
@@ -165,9 +255,9 @@ def _vtag_is(family: str, v: Column) -> Column:
     """Per-row type test of a Variant value by its `schema_of_variant` tag
     (VOID/BOOLEAN/BIGINT/DECIMAL(p,s)/DOUBLE/STRING/OBJECT<...>/ARRAY<...>;
     SQL NULL for an absent value)."""
-    t = F.schema_of_variant(v)
-    if family == "number":
-        return (t == "BIGINT") | t.startswith("DECIMAL") | (t == "DOUBLE") | (t == "FLOAT")
+    t = v.tag if isinstance(v, _Bound) else F.schema_of_variant(v)
+    if family == "number":  # DECIMAL(p,s) carries its precision
+        return F.substring(t, 1, 3).isin("BIG", "DEC", "DOU", "FLO")
     if family in ("object", "array"):
         return t.startswith(family.upper())
     return t == F.lit({"null": "VOID", "string": "STRING", "boolean": "BOOLEAN", "integer": "BIGINT"}[family])
@@ -185,10 +275,14 @@ def _is(family: str, target: Column, dt) -> Optional[Column]:
 
 def _value(target: Column, dt, as_type: T.DataType) -> Column:
     """Typed accessor: the column itself, or a Variant value cast to
-    `as_type` (NULL when it does not cast)."""
-    if _is_variant(dt):
-        return F.try_variant_get(target, "$", as_type.simpleString())
-    return target
+    `as_type` (NULL when it does not cast).  A bound value's cast is bound
+    too, except an object's map: objects are read member by member, so
+    the map cast stays an expression, present only where a check uses it."""
+    if not _is_variant(dt):
+        return target
+    if isinstance(target, _Bound) and not isinstance(as_type, T.MapType):
+        return target.typed(as_type)
+    return F.try_variant_get(target, "$", as_type.simpleString())
 
 
 def _as(family: str, target: Column, dt, as_type: Optional[T.DataType] = None):
@@ -231,8 +325,7 @@ def _variant_eq(v: Column, member) -> Column:
     same_type = _vtag_is(family, v)
     if family == "number":  # a float literal never equals an integer
         same_type = same_type & ~_vtag_is("integer", v)
-    as_type = _VARIANT_AS[family].simpleString()
-    return same_type & (F.try_variant_get(v, "$", as_type) == F.lit(_i64_guard(member)))
+    return same_type & (_value(v, T.VariantType(), _VARIANT_AS[family]) == F.lit(_i64_guard(member)))
 
 
 def _eq(target: Column, dt, v) -> Column:
@@ -935,6 +1028,16 @@ def _field_or_none(target: Column, dtype, key: str):
     return target.getField(key), None
 
 
+def _member(target: Column, obj: Column, dtype, key: str):
+    """:func:`_field_or_none` of `obj`, the object view of `target`; a bound
+    Variant target hands out its member's bound attribute instead."""
+    if isinstance(target, _Bound):
+        m = target.member(key)
+        if m is not None:
+            return m, T.VariantType()
+    return _field_or_none(obj, dtype, key)
+
+
 @register_keyword("properties")
 def _compile_properties(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled]:
     view = _as("object", target, ctx.dtype)
@@ -947,7 +1050,7 @@ def _compile_properties(value, schema, target: Column, ctx: Ctx) -> Optional[Com
         sub = subschema
         if isinstance(sub, dict) and sub.get("required") is True:
             sub = {k: v for k, v in sub.items() if k != "required"}
-            fd = _field_or_none(obj, dt, key)
+            fd = _member(target, obj, dt, key)
             present = F.lit(False) if fd is None else _present(*fd)
             comps.append(
                 simple_check(
@@ -959,7 +1062,7 @@ def _compile_properties(value, schema, target: Column, ctx: Ctx) -> Optional[Com
                     ctx.severity("required"),
                 )
             )
-        fd = _field_or_none(obj, dt, key)
+        fd = _member(target, obj, dt, key)
         if fd is None:
             continue  # statically absent key never violates (presence-guarded)
         col, cdt = fd
@@ -974,7 +1077,7 @@ def _compile_properties(value, schema, target: Column, ctx: Ctx) -> Optional[Com
         comps.append(_guard(_absent(col, cdt), child))
     if not comps:
         return None
-    out = merge(comps)
+    out = _merge(comps, ctx)
     # non-objects pass; a null object passes
     return _guard(skip, out)
 
@@ -993,7 +1096,7 @@ def _compile_required(value, schema, target: Column, ctx: Ctx) -> Optional[Compi
     obj, dt, skip = view
     comps = []
     for key in value:
-        fd = _field_or_none(obj, dt, key)
+        fd = _member(target, obj, dt, key)
         # nil counts as missing (has-property?, core.clj:852-854)
         present = F.lit(False) if fd is None else F.coalesce(_present(*fd), F.lit(False))
         comps.append(
@@ -1006,7 +1109,7 @@ def _compile_required(value, schema, target: Column, ctx: Ctx) -> Optional[Compi
                 sev,
             )
         )
-    out = merge(comps)
+    out = _merge(comps, ctx)
     return _guard(skip, out)
 
 
@@ -1028,7 +1131,7 @@ def _compile_dependencies(value, schema, target: Column, ctx: Ctx) -> Optional[C
     obj, dt, skip = view
     comps = []
     for key, dep in value.items():
-        fd = _field_or_none(obj, dt, key)
+        fd = _member(target, obj, dt, key)
         if fd is None:
             continue
         present = fd[0].isNotNull()
@@ -1036,7 +1139,7 @@ def _compile_dependencies(value, schema, target: Column, ctx: Ctx) -> Optional[C
             dep = [dep]
         if isinstance(dep, list):
             for d in dep:
-                dfd = _field_or_none(obj, dt, d)
+                dfd = _member(target, obj, dt, d)
                 dep_ok = F.lit(False) if dfd is None else dfd[0].isNotNull()
                 comps.append(
                     simple_check(
@@ -1058,7 +1161,7 @@ def _compile_dependencies(value, schema, target: Column, ctx: Ctx) -> Optional[C
             )
     if not comps:
         return None
-    return _guard(skip, merge(comps))
+    return _guard(skip, _merge(comps, ctx))
 
 
 @register_keyword("exclusiveProperties")
@@ -1076,7 +1179,7 @@ def _compile_exclusive_properties(value, schema, target: Column, ctx: Ctx) -> Op
         required = group.get("required", False)
         cnt = None
         for p in props:
-            fd = _field_or_none(obj, dt, p)
+            fd = _member(target, obj, dt, p)
             present = F.lit(0) if fd is None else fd[0].isNotNull().cast("int")
             cnt = present if cnt is None else cnt + present
         if cnt is None:
@@ -1095,7 +1198,7 @@ def _compile_exclusive_properties(value, schema, target: Column, ctx: Ctx) -> Op
                 f"Properties {names} are mutually exclusive", sev,
             )
         )
-    return _guard(skip, merge(comps))
+    return _guard(skip, _merge(comps, ctx))
 
 
 @register_keyword("discriminator")
@@ -1109,7 +1212,7 @@ def _compile_discriminator(value, schema, target: Column, ctx: Ctx) -> Optional[
     if view is None:
         return None
     obj, dt, skip = view
-    fd = _field_or_none(obj, dt, value)
+    fd = _member(target, obj, dt, value)
     if fd is None:
         return Compiled.passed()
     tag_col = _value(fd[0], fd[1], T.StringType())
@@ -1132,8 +1235,18 @@ def _compile_discriminator(value, schema, target: Column, ctx: Ctx) -> Optional[
     return _guard(skip, Compiled(ok=ok, violations=viols))
 
 
-def _per_entry(entries: Column, compile_entry: Callable, hit: Callable) -> Compiled:
-    """Validate each map entry whose key is a `hit`, as one HOF pass."""
+def _per_entry(entries: Column, compile_entry: Callable, hit: Callable, ctx: Ctx) -> Compiled:
+    """Validate each map entry whose key is a `hit`, as one HOF pass (two
+    on a Variant value, see :func:`_each`)."""
+    if _is_variant(ctx.dtype):
+        return Compiled(
+            ok=F.forall(
+                entries, lambda e: F.when(hit(e["key"]), compile_entry(e).ok).otherwise(F.lit(True))
+            ),
+            violations=F.flatten(F.transform(
+                entries, lambda e: F.when(hit(e["key"]), compile_entry(e).violations).otherwise(_empty())
+            )),
+        )
 
     def per_entry(e):
         child = compile_entry(e)
@@ -1179,7 +1292,7 @@ def _compile_pattern_properties(value, schema, target: Column, ctx: Ctx) -> Opti
                     comps.append(_guard(col.isNull(), child))
         if not comps:
             return None
-        return _guard(skip, merge(comps))
+        return _guard(skip, _merge(comps, ctx))
     if isinstance(dt, T.MapType):
         # NB: capture via factory, NOT lambda default args — PySpark infers
         # HOF lambda arity from the parameter count, so default args turn a
@@ -1201,8 +1314,8 @@ def _compile_pattern_properties(value, schema, target: Column, ctx: Ctx) -> Opti
             return lambda k: k.rlike(_pat)
 
         for pat, sub in value.items():
-            comps.append(_per_entry(F.map_entries(obj), make_entry(pat, sub), make_hit(pat)))
-        return _guard(skip, merge(comps))
+            comps.append(_per_entry(F.map_entries(obj), make_entry(pat, sub), make_hit(pat), ctx))
+        return _guard(skip, _merge(comps, ctx))
     raise ColumnBackendUnsupported("patternProperties needs a struct or map target")
 
 
@@ -1248,7 +1361,7 @@ def _compile_additional_properties(value, schema, target: Column, ctx: Ctx) -> O
                 comps.append(_guard(col.isNull(), child))
         if not comps:
             return None
-        return _guard(skip, merge(comps))
+        return _guard(skip, _merge(comps, ctx))
     if isinstance(dt, T.MapType):
         def is_extra(k):
             cond = F.lit(True)
@@ -1283,7 +1396,7 @@ def _compile_additional_properties(value, schema, target: Column, ctx: Ctx) -> O
                             dtype=dt.valueType),
                 )
 
-            return _guard(skip, _per_entry(F.map_entries(obj), entry, is_extra))
+            return _guard(skip, _per_entry(F.map_entries(obj), entry, is_extra, ctx))
         return None
     raise ColumnBackendUnsupported("additionalProperties needs a struct or map target")
 
@@ -1313,7 +1426,7 @@ def _compile_property_names(value, schema, target: Column, ctx: Ctx) -> Optional
                     f"Invalid property name - {fname}", sev,
                 )
             )
-        return merge(comps)
+        return _merge(comps, ctx)
     if isinstance(dt, T.MapType):
         def name_ok(k):
             return compile_schema(value, k, replace(ctx, dtype=T.StringType())).ok
@@ -1373,7 +1486,7 @@ def _compile_pattern_groups(value, schema, target: Column, ctx: Ctx) -> Optional
             comps.extend(count_checks(cnt, group.get("minimum"), group.get("maximum")))
         if not comps:
             return None
-        return _guard(skip, merge(comps))
+        return _guard(skip, _merge(comps, ctx))
     if isinstance(dt, T.MapType):
         # factory capture, not lambda defaults — see patternProperties note
         def make_entry(_pat, _sub):
@@ -1389,10 +1502,10 @@ def _compile_pattern_groups(value, schema, target: Column, ctx: Ctx) -> Optional
 
         for pat, group in value.items():
             sub = group.get("schema", True)
-            comps.append(_per_entry(F.map_entries(obj), make_entry(pat, sub), make_hit(pat)))
+            comps.append(_per_entry(F.map_entries(obj), make_entry(pat, sub), make_hit(pat), ctx))
             cnt = F.size(F.filter(F.map_keys(obj), make_hit(pat)))
             comps.extend(count_checks(cnt, group.get("minimum"), group.get("maximum")))
-        return _guard(skip, merge(comps))
+        return _guard(skip, _merge(comps, ctx))
     raise ColumnBackendUnsupported("patternGroups needs a struct or map target")
 
 
@@ -1420,15 +1533,24 @@ def _compile_pattern_required(value, schema, target: Column, ctx: Ctx) -> Option
                 f"no properites, which matches {pat}", sev,
             )
         )
-    return _guard(skip, merge(comps))
+    return _guard(skip, _merge(comps, ctx))
 
 
 # ---------------------------------------------------------------------------
 # array keywords
 
 
-def _each(arr: Column, compile_elem: Callable) -> Compiled:
-    """Validate every element `(x, i)` of an array as one HOF pass."""
+def _each(arr: Column, compile_elem: Callable, ctx: Ctx) -> Compiled:
+    """Validate every element `(x, i)` of an array as one HOF pass, whose
+    (ok, violations) structs feed both trees.  On a Variant value the two
+    trees get a pass each: the verdict reads only the violations, and an
+    element's shared struct would also evaluate its ok tree, at interpreted
+    speed (Spark runs a HOF's lambda without generated code)."""
+    if _is_variant(ctx.dtype):
+        return Compiled(
+            ok=F.forall(F.transform(arr, lambda x, i: compile_elem(x, i).ok), lambda ok: ok),
+            violations=F.flatten(F.transform(arr, lambda x, i: compile_elem(x, i).violations)),
+        )
 
     def per_elem(x, i):
         c = compile_elem(x, i)
@@ -1474,7 +1596,7 @@ def _compile_items(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled
             # core.clj:1462: `(= true ai)` returns ctx before ANY
             # positional validator runs — additionalItems: true disables
             # tuple validation entirely (array-typed values all pass)
-            return merge(shape) if shape else None
+            return _merge(shape, ctx) if shape else None
         comps = []
         for i, sub in enumerate(value):
             elem = F.element_at(arr, i + 1)
@@ -1511,8 +1633,8 @@ def _compile_items(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled
                     instance_path=ctx.instance_path + (i + F.lit(n),),
                     dtype=elem_dt,
                 ),
-            )))
-        return merge(shape + [_guard(skip, merge(comps))])
+            ), ctx))
+        return _merge(shape + [_guard(skip, _merge(comps, ctx))], ctx)
     if not isinstance(value, (dict, bool)):
         return None  # not a schema: no validator, as in the Python backend
 
@@ -1520,7 +1642,7 @@ def _compile_items(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled
         value,
         x,
         replace(ctx, instance_path=ctx.instance_path + (i,), dtype=elem_dt),
-    ))
+    ), ctx)
     return _guard(skip, out)
 
 
@@ -1617,13 +1739,13 @@ def _subschemas(options, target, ctx: Ctx):
 
 @register_keyword("allOf")
 def _compile_all_of(value, schema, target: Column, ctx: Ctx) -> Compiled:
-    return merge(_subschemas(value, target, ctx))
+    return _merge(_subschemas(value, target, ctx), ctx)
 
 
 @register_keyword("extends")
 def _compile_extends(value, schema, target: Column, ctx: Ctx) -> Compiled:
     opts = value if isinstance(value, list) else [value]
-    return merge(_subschemas(opts, target, ctx))
+    return _merge(_subschemas(opts, target, ctx), ctx)
 
 
 @register_keyword("anyOf")
@@ -1738,7 +1860,7 @@ def _compile_switch(value, schema, target: Column, ctx: Ctx) -> Compiled:
             ok_expr = th.ok
             viol_expr = th.violations
     comps.append(Compiled(ok=ok_expr, violations=viol_expr))
-    return merge(comps)
+    return _merge(comps, ctx)
 
 
 @register_keyword("$ref")
@@ -1906,14 +2028,14 @@ def compile_schema(schema, target: Column, ctx: Ctx) -> Compiled:
         c = fn(v, schema, target, ctx.at_keyword(k))
         if c is not None:
             comps.append(c)
-    return merge(comps)
+    return _merge(comps, ctx)
 
 
 def compile_for_json(
     schema: dict,
     json_col: Column,
     config: Optional[dict] = None,
-    parsed_col: Optional[Column] = None,
+    parsed_name: Optional[str] = None,
 ) -> Compiled:
     """Compile a schema against a raw-JSON string column, as Variant values.
 
@@ -1924,13 +2046,23 @@ def compile_for_json(
     with exactly the parse violation; the schema's checks are suppressed
     for it (the reference never validates a document that didn't parse).
 
-    ``parsed_col``: pass an attribute that already holds
-    ``try_parse_json(json_col)`` (materialized in its own projection).
-    Without it, Catalyst inlines the parse into EVERY check reference —
-    the check tree then re-parses the JSON string ~1× per keyword per row
-    (measured 5× slower end to end).  ``engine.validate_json_column``
-    always supplies it; direct callers of this function pay the re-parse."""
-    v = parsed_col if parsed_col is not None else F.try_parse_json(json_col)
+    ``parsed_name``: the attribute the caller projects
+    ``try_parse_json(json_col)`` into.  With it, the trees read the parse
+    and every statically addressed value (the root, and what `properties`,
+    `required` and `$ref` unrolls reach from it) from attributes: each
+    value ``try_variant_get(parse, path, 'variant')``, its
+    ``schema_of_variant`` tag and the typed casts the checks read are bound
+    once, listed on ``Compiled.bindings`` for the caller to project between
+    the parse and the trees.  The caller must also fence those projections
+    (see ``engine.validate_json_column``): a Filter on the verdict is
+    otherwise pushed below them and inlines the parse and every binding at
+    each reference.  Without `parsed_name` the trees stand alone and
+    re-derive each value at every use (test and probe use only)."""
+    if parsed_name is None:
+        v, binder = F.try_parse_json(json_col), None
+    else:
+        binder = _Binder(parsed_name)
+        v = binder.bind("$")
     ctx = Ctx(config=config or {}, root_schema=schema, dtype=T.VariantType())
     inner = compile_schema(schema, v, ctx)
     malformed = json_col.isNotNull() & v.isNull()
@@ -1942,6 +2074,7 @@ def compile_for_json(
     return Compiled(
         ok=F.when(malformed, F.lit(False)).otherwise(F.coalesce(inner.ok, F.lit(False))),
         violations=F.when(malformed, parse_check.violations).otherwise(inner.violations),
+        bindings=binder.layers() if binder is not None else (),
     )
 
 
@@ -1971,7 +2104,7 @@ def _build(schema, table_schema, json_col, config, extra_root):
     try:
         if json_col is not None:
             return compile_for_json(
-                schema, F.col(json_col), config, parsed_col=F.col(parsed_col_name(json_col))
+                schema, F.col(json_col), config, parsed_name=parsed_col_name(json_col)
             )
         return _compile_table(schema, table_schema, config, extra_root)
     except ColumnBackendUnsupported as e:
@@ -2029,7 +2162,8 @@ def compile_for_table(schema: dict, table_schema: T.StructType, config: Optional
 
 def compile_json_column(schema: dict, json_col: str, config: Optional[dict] = None) -> Compiled:
     """:func:`compile_for_json` over column `json_col`, reading the parse
-    from :func:`parsed_col_name` (memoized, declines included)."""
+    from :func:`parsed_col_name` and the bound values from attributes named
+    after it (memoized, declines included)."""
     return _compiled(schema, json_col=json_col, config=config)
 
 

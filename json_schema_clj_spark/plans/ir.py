@@ -65,12 +65,17 @@ class Compiled:
     ``filter(array(struct_or_null...), notnull)`` instead of
     ``flatten(array(when-array...))`` — the nested form allocates an array
     per check per failing row and measured ~4× slower on the violation
-    sink."""
+    sink.
+
+    ``bindings`` (set on a Variant-tier root only) lists the attributes the
+    trees read, as projection layers of ``(name, Column)`` pairs; a layer
+    may read the layers before it."""
 
     ok: Column
     violations: Column  # array<VIOLATION_TYPE>
     unit: Optional[Column] = None  # struct-or-null form, when single-check
     empty: bool = False  # violations is the literal empty array
+    bindings: tuple = ()
 
     @staticmethod
     def passed() -> "Compiled":
@@ -148,13 +153,14 @@ def simple_check(
     return Compiled(ok=F.coalesce(ok, F.lit(False)), violations=viol, unit=unit)
 
 
-def merge(compiled: Sequence[Compiled]) -> Compiled:
+def merge(compiled: Sequence[Compiled], units: bool = True) -> Compiled:
     """AND-combine: all must pass; violations accumulate (reference keyword
     reduction, core.clj:167-171 — no short-circuit, errors accumulate).
 
     Assembly: literally-empty children are pruned at compile time; runs of
     single-violation checks collapse into one
-    ``filter(array(struct_or_null...), notnull)``; array-valued children
+    ``filter(array(struct_or_null...), notnull)`` (with ``units=False``:
+    their violation arrays, in the same order); array-valued children
     (nested items/HOF results) join via varargs ``concat``."""
     comps = [c for c in compiled if c is not None]
     if not comps:
@@ -165,15 +171,17 @@ def merge(compiled: Sequence[Compiled]) -> Compiled:
     nonempty = [c for c in comps if not c.empty]
     if not nonempty:
         return Compiled(ok=ok, violations=_typed_empty_array(), empty=True)
-    units = [c.unit for c in nonempty if c.unit is not None]
+    singles = [c for c in nonempty if c.unit is not None]
     arrays = [c.violations for c in nonempty if c.unit is None]
     parts = []
-    if units:
-        parts.append(F.filter(F.array(*units), lambda x: x.isNotNull()))
+    if singles and units:
+        parts.append(F.filter(F.array(*[c.unit for c in singles]), lambda x: x.isNotNull()))
+    elif singles:
+        parts.extend(c.violations for c in singles)
     parts.extend(arrays)
     viols = parts[0] if len(parts) == 1 else F.concat(*parts)
     # a single surviving unit stays unit-shaped for further merging upstream
-    unit = units[0] if (len(nonempty) == 1 and units and not arrays) else None
+    unit = singles[0].unit if (len(nonempty) == 1 and singles and not arrays) else None
     return Compiled(ok=ok, violations=viols, unit=unit)
 
 

@@ -47,6 +47,14 @@ RESULT_TYPE = T.StructType(
 )
 
 
+#: the record of a document that does not parse, as on the Variant tier
+PARSE_VIOLATION = ([], [], "$parse", "malformed JSON", "error")
+
+
+def _reject_constant(name: str):
+    raise ValueError(f"{name} is not JSON")
+
+
 def make_validate_udf(schema: dict, config: Optional[dict] = None, loader=None):
     """Compile once on the driver → a pandas UDF over a JSON-string column."""
     validator = compile_schema(schema, config=config, loader=loader)
@@ -60,7 +68,15 @@ def make_validate_udf(schema: dict, config: Optional[dict] = None, loader=None):
                 violations.append(None)
                 deferreds.append(None)
                 continue
-            value = json.loads(doc)
+            try:
+                value = json.loads(doc, parse_constant=_reject_constant)
+            except (ValueError, RecursionError):
+                # not strict JSON (NaN/Infinity included) or nested beyond
+                # the recursion limit: a per-row record, never a job abort
+                valids.append(False)
+                violations.append([PARSE_VIOLATION])
+                deferreds.append([])
+                continue
             res = validator(value)
             valids.append(len(res["errors"]) == 0)
             viol = [

@@ -104,6 +104,17 @@ def test_pii_overlapping_spans_not_double_counted(spark):
     assert (s["n_email"], s["n_ipv4"], s["n_phone"], s["n_pii"]) == (2, 0, 0, 2)
 
 
+def test_pii_pattern_matching_its_placeholder_is_rejected(spark):
+    # `\w+` matches the ID inside "[ID]": a placeholder already in the text
+    # would be rewritten to "[[ID]]" and the staged delta would read 0 for a
+    # real replacement, so the pattern set is refused up front
+    df = spark.createDataFrame([(1, "id [ID] here")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="placeholder"):
+        PII.pii_scan(df, patterns={"id": r"\w+"})
+    # the default set passes the same check
+    assert PII.pii_scan(df).collect()[0]["n_pii"] == 0
+
+
 def test_repetition_rejects_colliding_ns(spark):
     df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     with pytest.raises(ValueError):

@@ -197,3 +197,34 @@ def test_compile_memo_bounded_and_remembers_declines(spark):
     # least recently used out: CLOSED compiles again
     engine.validate_json_column(df, CLOSED)
     assert compiler._memo.cache_info().misses == info.misses + 1
+
+
+#: documents that are not strict JSON, plus one that is
+HOSTILE = [
+    "{oops", "", "   ", "[1,", "'a'", '{"k": 01}', "1.", "tru",
+    "NaN", '{"k": NaN}', '{"k": Infinity}', "-Infinity",
+    "[" * 5000 + "]" * 5000,  # deeper than either parser nests
+    '{"k": 1}',
+]
+
+
+def test_hostile_rows_are_records_on_both_tiers(spark):
+    """A batch of bad documents neither aborts the job on the Arrow-Python
+    tier (no PythonException escapes) nor reads NaN/Infinity as numbers:
+    each bad row gets the Variant tier's `$parse` record, so both tiers
+    give equal records."""
+    from pyspark.errors import PythonException
+
+    df = spark.createDataFrame(list(enumerate(HOSTILE)), "i int, data_json string")
+    schema = {"type": "object", "properties": {"k": {"type": "integer"}}}
+    got = {}
+    for backend in ("python", "variant"):
+        try:
+            rows = engine.validate_json_column(df, schema, force_backend=backend).collect()
+        except PythonException as e:
+            raise AssertionError(f"{backend} tier aborted on a hostile row: {e}")
+        got[backend] = {r["i"]: (r["valid"], [tuple(v) for v in r["violations"]]) for r in rows}
+    assert got["python"] == got["variant"]
+    parse = (False, [([], [], "$parse", "malformed JSON", "error")])
+    assert [got["python"][i] for i in range(len(HOSTILE) - 1)] == [parse] * (len(HOSTILE) - 1)
+    assert got["python"][len(HOSTILE) - 1] == (True, [])

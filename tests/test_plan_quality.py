@@ -407,6 +407,24 @@ def test_pii_scan_is_filter_free_single_scan(spark):
     assert plan.count("Exchange") == 1 and "rangepartitioning" in plan, plan
 
 
+@pytest.mark.parametrize("query", ["q_pii_scan", "q_pii_redact"])
+def test_pii_queries_sort_once_below_the_regex_pass(spark, query):
+    # both queries get their global doc_id order from ONE range exchange
+    # under the regex projection; the order surviving the narrow projections
+    # above it is observed Spark behaviour, not a contract, so any further
+    # shuffle inside pii_scan/pii_redact must fail here loudly
+    from json_schema_clj_spark import queries
+
+    plan = executed(getattr(queries, query)(spark, SF_DIR))
+    lines = plan.splitlines()
+    exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+    assert len(exchanges) == 1, plan
+    assert "rangepartitioning(doc_id" in lines[exchanges[0]], plan
+    regex = [i for i, ln in enumerate(lines) if "regexp_replace" in ln]
+    # parents print first: the regex projection sits above the sort
+    assert regex and max(regex) < exchanges[0], plan
+
+
 def test_corpus_mix_expansion_is_shuffle_free(spark):
     # after the (collected) totals pass, the expansion itself is
     # Generate-over-Filter-over-Scan — no shuffle, no Python
@@ -519,3 +537,68 @@ def test_image_health_profile_single_agg_partial(spark):
     # the only Python stages are the generator (MapInPandas over Range) and
     # the decode leg (MapInPandas); no row-at-a-time eval
     assert "BatchEvalPython" not in phys, phys
+
+
+# the shape of the JSON-docs benchmark schema: required keys plus one
+# typed subschema per property, one of them an array of strings
+PLAIN_JSON_SCHEMA = {
+    "type": "object",
+    "required": ["id", "name", "score", "tags", "lo", "hi"],
+    "properties": {
+        "id": {"type": "integer", "minimum": 0},
+        "name": {"type": "string", "minLength": 1, "maxLength": 24, "pattern": "^[a-z][a-z0-9_]*$"},
+        "score": {"type": "number", "minimum": 0, "maximum": 100},
+        "tags": {"type": "array", "maxItems": 4, "items": {"type": "string", "maxLength": 12}},
+        "lo": {"type": "integer", "minimum": 0},
+        "hi": {"type": "integer", "minimum": 0},
+    },
+}
+
+
+def test_variant_tier_evaluates_each_json_value_once(spark):
+    """On the Variant tier each statically addressed value is derived once
+    per row: the parse appears once (the verdict filter does not inline it),
+    members are read by path instead of from a whole-object map cast, and
+    each bound value's type tag is rendered once.  Tags of array elements
+    (lambda variables) are not bound and not counted."""
+    import re
+
+    from json_schema_clj_spark.engine import validate_json_column
+    from json_schema_clj_spark.operators.validate import violation_rows
+
+    docs = spark.createDataFrame(
+        [(0, '{"id": 1, "name": "a", "score": 2.5, "tags": ["x"], "lo": 1, "hi": 2}'),
+         (1, '{"id": -1, "name": "Q", "tags": ["a", "b", "c", "d", "e"]}'),
+         (2, "{oops")],
+        "ingest_id long, doc_json string",
+    )
+    out = validate_json_column(docs, PLAIN_JSON_SCHEMA, json_col="doc_json")
+    verdict = out.where(~F.col("valid"))
+    sink = violation_rows(out, ["ingest_id"], prefilter=~F.col("valid"))
+    for q in (verdict, sink):
+        plan = optimized(q)
+        assert plan.count("parseJson(") == 1, plan
+        assert "MapType(StringType,VariantType" not in plan, plan
+        tagged = re.findall(r"schemaOfVariant\(([^()]+)\)", plan)
+        bound = [t for t in tagged if not t.startswith("lambda ")]
+        # the root and its six members, one tag each
+        assert len(bound) == len(set(bound)) == 7, tagged
+    assert sorted(r["ingest_id"] for r in verdict.collect()) == [1, 2]
+    # row 1: minimum, pattern, three required, maxItems; row 2: $parse
+    assert sink.count() == 7
+
+
+def test_python_tier_runs_its_udf_once(spark):
+    """The same fence holds on the Arrow-Python tier: the sink's verdict
+    filter reads the UDF result instead of running the UDF again below it."""
+    from json_schema_clj_spark.engine import validate_json_column
+    from json_schema_clj_spark.operators.validate import violation_rows
+
+    docs = spark.createDataFrame(
+        [(0, '{"lo": 1, "hi": 2}'), (1, '{"lo": 3, "hi": 2}')], "ingest_id long, doc_json string"
+    )
+    schema = {"properties": {"lo": {"maximum": {"$data": "1/hi"}}}}  # $data: Python tier
+    out = validate_json_column(docs, schema, json_col="doc_json")
+    sink = violation_rows(out, ["ingest_id"], prefilter=~F.col("valid"))
+    assert executed(sink).count("ArrowEvalPython") == 1, executed(sink)
+    assert [r["ingest_id"] for r in sink.collect()] == [1]

@@ -163,3 +163,28 @@ def test_unique_items_object_key_order(spark):
         ).collect()
     ]
     assert var == py
+
+
+def test_two_validations_in_one_plan(spark):
+    """Each call fences its plan with an observation of its own name, so
+    two validated frames, or one frame with itself, meet in one plan."""
+    schema = {"type": "object", "properties": {"k": {"type": "integer"}}}
+    df = spark.createDataFrame([('{"k": 1}',), ('{"k": "x"}',)], "data_json string")
+    a = engine.validate_json_column(df, schema)
+    b = engine.validate_json_column(df.where(F.col("data_json") == '{"k": 1}'), schema)
+    got = [r["valid"] for r in a.union(b).union(a).collect()]
+    assert sorted(got) == [False, False, True, True, True]
+
+
+def test_variant_members_with_awkward_keys(spark):
+    """Members are read by JSONPath: keys holding a quote, dots, brackets or
+    nothing at all still reach their values (a key holding both quote kinds
+    has no path spelling and is read from the object's map instead)."""
+    keys = ["a'b", 'a"b', "a'\"b", "a.b", "[0]", "", "é"]
+    schema = {"required": keys, "properties": {k: {"type": "integer"} for k in keys}}
+    docs = [json.dumps({k: 1 for k in keys}), json.dumps({k: "x" for k in keys}), "{}"]
+    df = spark.createDataFrame(list(enumerate(docs)), "i int, data_json string")
+    rows = {r["i"]: r for r in engine.validate_json_column(df, schema, force_backend="variant").collect()}
+    assert rows[0]["valid"] and rows[0]["violations"] == []
+    assert sorted(v["instance_path"][0] for v in rows[1]["violations"]) == sorted(keys)
+    assert [v["keyword"] for v in rows[2]["violations"]] == ["required"] * len(keys)
