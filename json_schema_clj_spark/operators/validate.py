@@ -19,6 +19,7 @@ violation sink is filter-pushdown-friendly (violations are rare).
 
 from __future__ import annotations
 
+from collections.abc import Mapping
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame
@@ -39,9 +40,12 @@ def with_validation(
     `valid` counts only error-severity violations, matching the reference's
     `valid == (empty? errors)` contract (warnings and deferreds don't fail
     a document — utils.clj:50-71, custom_extensions_test.clj:91-128).
+
+    Without `config` both columns are added in one projection (one
+    analysis of the check tree); with `config`, `valid` reads the added
+    violations column, so it is a second step.
     """
     compiled: Compiled = compile_for_table(schema, df.schema, config=config)
-    annotated = df.withColumn(out_col, compiled.violations)
     if not config:
         # no warnings rerouting → every violation is error-severity, so the
         # compiled ok-conjunction IS validity.  Consumers that only read
@@ -51,7 +55,10 @@ def with_validation(
         # coalesce: a residual NULL ok (custom register_keyword checks
         # under 3VL) must read as invalid, or valid=NULL rows escape every
         # ~valid prefilter while carrying violations
-        return annotated.withColumn("valid", F.coalesce(compiled.ok, F.lit(False)))
+        return df.withColumns(
+            {out_col: compiled.violations, "valid": F.coalesce(compiled.ok, F.lit(False))}
+        )
+    annotated = df.withColumn(out_col, compiled.violations)
     return annotated.withColumn(
         "valid",
         F.size(F.filter(F.col(out_col), lambda v: v["severity"] == F.lit("error"))) == F.lit(0),
@@ -83,23 +90,12 @@ def violation_rows(
     """
     cond = prefilter if prefilter is not None else (F.size(F.col(out_col)) > 0)
     filtered = validated.where(cond)
-    if with_ordinal:
-        exploded = filtered.select(
-            *id_cols, F.posexplode(F.col(out_col)).alias("v_ord", "v")
-        )
-        extra = [F.col("v_ord")]
-    else:
-        exploded = filtered.select(*id_cols, F.explode(F.col(out_col)).alias("v"))
-        extra = []
-    return exploded.select(
-        *id_cols,
-        *extra,
-        F.col("v.keyword_path").alias("keyword_path"),
-        F.col("v.instance_path").alias("instance_path"),
-        F.col("v.keyword").alias("keyword"),
-        F.col("v.message").alias("message"),
-        F.col("v.severity").alias("severity"),
-    )
+    if not with_ordinal:
+        # the violation struct's fields are the output columns, in order
+        return filtered.select(*id_cols, F.inline(F.col(out_col)))
+    return filtered.select(
+        *id_cols, F.posexplode(F.col(out_col)).alias("v_ord", "v")
+    ).select(*id_cols, "v_ord", "v.*")
 
 
 def violation_examples(
@@ -261,12 +257,8 @@ def keyword_breakdown(
     cond = prefilter if prefilter is not None else (F.size(F.col(out_col)) > 0)
     return (
         validated.where(cond)
-        .select(F.explode(F.col(out_col)).alias("v"))
-        .groupBy(
-            F.array_join(F.col("v.keyword_path"), "/").alias("keyword_path"),
-            F.col("v.keyword").alias("keyword"),
-            F.col("v.severity").alias("severity"),
-        )
+        .select(F.inline(F.col(out_col)))
+        .groupBy(F.array_join("keyword_path", "/").alias("keyword_path"), "keyword", "severity")
         .agg(F.count(F.lit(1)).alias("n_violations"))
     )
 
@@ -356,15 +348,42 @@ def _schema_has_deferred(schema) -> bool:
     return False
 
 
+class _Frames(Mapping):
+    """Read-only mapping of named DataFrames, each built by its builder on
+    first read and then kept for this mapping's life (a DataFrame is a
+    plan, not a result: reads of the same key share one plan)."""
+
+    def __init__(self, builders: dict):
+        self._builders = builders
+        self._built: dict = {}
+
+    def __getitem__(self, key: str) -> DataFrame:
+        if key not in self._built:
+            self._built[key] = self._builders[key]()
+        return self._built[key]
+
+    def __iter__(self):
+        return iter(self._builders)
+
+    def __len__(self) -> int:
+        return len(self._builders)
+
+
 def validate(
     df: DataFrame,
     schema: dict,
     id_cols: list[str],
     part_col: Optional[str] = None,
     config: Optional[dict] = None,
-) -> dict:
-    """One-call API: returns dict of lazy DataFrames
-    {annotated, violations, verdicts?, keywords, examples}."""
+) -> Mapping[str, DataFrame]:
+    """One-call API: a read-only mapping of lazy DataFrames
+    {annotated, violations, keywords, examples, verdicts?} — `verdicts`
+    only when `part_col` is given.
+
+    The schema is compiled and `annotated` built at the call; every other
+    frame is built from that one `annotated` frame the first time it is
+    read, so a caller pays the driver-side analysis only of the frames it
+    reads (`dict(res)` builds them all)."""
     annotated = with_validation(df, schema, config=config)
     # when validity and violation-emptiness coincide (no warning rerouting,
     # no deferred annotations), ~valid is a cheap prefilter that skips
@@ -372,15 +391,15 @@ def validate(
     prefilter = None
     if not config and not _schema_has_deferred(schema):
         prefilter = ~F.col("valid")
-    out = {
-        "annotated": annotated,
-        "violations": violation_rows(annotated, id_cols, prefilter=prefilter),
-        "keywords": keyword_breakdown(annotated, prefilter=prefilter),
-        "examples": violation_examples(annotated, id_cols, prefilter=prefilter),
+    builders = {
+        "annotated": lambda: annotated,
+        "violations": lambda: violation_rows(annotated, id_cols, prefilter=prefilter),
+        "keywords": lambda: keyword_breakdown(annotated, prefilter=prefilter),
+        "examples": lambda: violation_examples(annotated, id_cols, prefilter=prefilter),
     }
     if part_col is not None:
-        out["verdicts"] = verdicts(annotated, part_col)
-    return out
+        builders["verdicts"] = lambda: verdicts(annotated, part_col)
+    return _Frames(builders)
 
 
 def write_quarantined(

@@ -63,13 +63,9 @@ def make_validate_udf(schema: dict, config: Optional[dict] = None, loader=None):
     def validate_json(docs: pd.Series) -> pd.DataFrame:
         valids, violations, deferreds = [], [], []
         for doc in docs:
-            if doc is None:
-                valids.append(None)
-                violations.append(None)
-                deferreds.append(None)
-                continue
             try:
-                value = json.loads(doc, parse_constant=_reject_constant)
+                # a NULL document is the JSON null, as on the Variant tier
+                value = None if doc is None else json.loads(doc, parse_constant=_reject_constant)
             except (ValueError, RecursionError):
                 # not strict JSON (NaN/Infinity included) or nested beyond
                 # the recursion limit: a per-row record, never a job abort

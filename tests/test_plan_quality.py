@@ -602,3 +602,79 @@ def test_python_tier_runs_its_udf_once(spark):
     sink = violation_rows(out, ["ingest_id"], prefilter=~F.col("valid"))
     assert executed(sink).count("ArrowEvalPython") == 1, executed(sink)
     assert [r["ingest_id"] for r in sink.collect()] == [1]
+
+
+#: flagship plant rule (sources/images.py): part_id = i mod 64, schema
+#: failures at i mod 200 in this set, ten violations per 200 rows
+FLAGSHIP_FAIL_RESIDUES = {7, 23, 57, 87, 91, 123, 141, 173}
+
+
+def test_validate_builds_only_the_frames_it_reads(spark, monkeypatch):
+    """`validate()` builds a frame on its first read: a caller that reads
+    verdicts and violations never builds the examples or keyword views."""
+    from json_schema_clj_spark.operators import validate as vmod
+    from json_schema_clj_spark.sources.images import FLAGSHIP_SCHEMA, images_df
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("built a frame nobody read")
+
+    monkeypatch.setattr(vmod, "violation_examples", refuse)
+    monkeypatch.setattr(vmod, "keyword_breakdown", refuse)
+    n = 2000
+    res = vmod.validate(images_df(spark, n), FLAGSHIP_SCHEMA, ["image_id"], "part_id")
+    assert set(res) == {"annotated", "violations", "keywords", "examples", "verdicts"}
+    assert len(res) == 5 and res["verdicts"] is res["verdicts"]
+    got = {r["part_id"]: (r["n_rows"], r["n_fail"], r["pass"]) for r in res["verdicts"].collect()}
+    want = {}
+    for i in range(n):
+        rows, fail, _ = want.get(i % 64, (0, 0, True))
+        fail += (i % 200) in FLAGSHIP_FAIL_RESIDUES
+        want[i % 64] = (rows + 1, fail, fail == 0)
+    assert got == want
+    assert res["violations"].count() == 10 * n // 200
+    with pytest.raises(AssertionError, match="nobody read"):
+        dict(res)
+
+    monkeypatch.undo()
+    res = vmod.validate(images_df(spark, 100), FLAGSHIP_SCHEMA, ["image_id"])
+    assert "verdicts" not in res
+    assert set(res) == {"annotated", "violations", "keywords", "examples"}
+    with pytest.raises(KeyError):
+        res["verdicts"]
+    res = vmod.validate(images_df(spark, 100), FLAGSHIP_SCHEMA, ["image_id"], "part_id")
+    built = dict(res)
+    assert list(built) == list(res) and len(built) == 5
+    assert all(built[k] is res[k] for k in built)
+
+
+def test_with_validation_adds_both_columns_in_one_projection(spark):
+    from json_schema_clj_spark.operators.validate import with_validation
+    from json_schema_clj_spark.sources.images import FLAGSHIP_SCHEMA, images_df
+
+    def analyzed(df) -> str:
+        return df._jdf.queryExecution().analyzed().toString()
+
+    df = images_df(spark, 100)
+    out = with_validation(df, FLAGSHIP_SCHEMA)
+    assert out.columns == df.columns + ["violations", "valid"]
+    assert analyzed(out).count("Project [") == analyzed(df).count("Project [") + 1
+
+
+def test_violation_sink_is_one_inline_generate(spark):
+    """The sink unpacks the violation structs in the Generate itself: one
+    `inline` node, no struct-field projection over an `explode`, and the
+    columns of the explode-then-select shape it replaces."""
+    from json_schema_clj_spark.operators.validate import violation_rows, with_validation
+    from json_schema_clj_spark.plans.ir import VIOLATION_FIELDS
+    from json_schema_clj_spark.sources.images import FLAGSHIP_SCHEMA, images_df
+
+    out = with_validation(images_df(spark, 2000), FLAGSHIP_SCHEMA)
+    sink = violation_rows(out, ["image_id"], prefilter=~F.col("valid"))
+    plan = executed(sink)
+    assert plan.count("Generate ") == 1 and "inline(" in plan and "explode(" not in plan, plan
+    exploded = out.where(~F.col("valid")).select(
+        "image_id", F.explode("violations").alias("v")
+    ).select("image_id", *(F.col(f"v.{n}").alias(n) for n, _ in VIOLATION_FIELDS))
+    assert sink.schema == exploded.schema
+    assert sorted(sink.collect()) == sorted(exploded.collect())
+    assert sink.count() == 10 * 2000 // 200
