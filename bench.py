@@ -4,8 +4,8 @@
 Prints ONE JSON line: {"metric", "value" (total sec), "unit": "sec",
 "queries": {name: sec}, "sf": ...}.  The flagship image-validation job
 (deterministic synthetic table, FIXTURES.md §1) is included with its
-rows/sec; tools/bench_scaling.py runs this file at two parallelism levels
-for the N→4N scaling-efficiency evidence.
+rows/sec.  perfbench/run.py is the layered harness (per-workload
+end-to-end and per-layer figures).
 """
 
 from __future__ import annotations

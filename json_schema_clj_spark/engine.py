@@ -34,7 +34,7 @@ from .operators.validate import with_validation  # noqa: F401
 from .plans import compiler as _col_compiler
 from .plans.compiler import ColumnBackendUnsupported, compile_json_column, parsed_col_name
 from .pyvalidator import validator as _py_validator
-from .pyvalidator.udf import validate_json_df
+from .pyvalidator.udf import make_validate_udf
 from .pyvalidator.validator import compile_schema as compile  # noqa: A001
 from .pyvalidator.validator import validate  # noqa: F401
 
@@ -86,28 +86,26 @@ def validate_json_column(
             out = df.withColumn(tmp, F.try_parse_json(F.col(json_col)))
             for layer in compiled.bindings:
                 out = out.withColumns(dict(layer))
-            out = _fence(out.withColumn("violations", compiled.violations))
-            # one tree: the verdict is "no error-severity violation"
-            out = out.withColumn(
-                "valid",
-                F.size(F.filter(F.col("violations"), lambda v: v["severity"] == F.lit("error"))) == 0,
-            )
+            out = _verdict(out.withColumn("violations", compiled.violations))
             return out.drop(tmp, *(name for layer in compiled.bindings for name, _ in layer))
-    res = _fence(validate_json_df(df, schema, json_col=json_col, config=config, loader=loader))
-    return res.withColumns(
-        {"valid": F.col("validation.valid"), "violations": F.col("validation.violations")}
-    ).drop("validation")
+    udf = make_validate_udf(schema, config=config, loader=loader)
+    return _verdict(df.withColumn("violations", udf(F.col(json_col))))
 
 
-def _fence(checked: DataFrame) -> DataFrame:
+def _verdict(checked: DataFrame) -> DataFrame:
     """`checked` behind one observe node (Spark's CollectMetrics, counting
-    rows).  Filter pushdown does not cross it, so a predicate on the verdict
-    stays above it and reads the checked columns, instead of re-deriving
-    them below: the Variant tree with its parse and bindings inlined at
-    each reference, or a second run of the Arrow-Python UDF.  One name per
-    call: two validations in one plan must not clash."""
-    return checked.observe(f"validate_json_column_{uuid.uuid4().hex}",
-                           F.count(F.lit(1)).alias("rows"))
+    rows), then `valid`: no error-severity violation.  Filter pushdown does
+    not cross the node, so a predicate on the verdict stays above it and
+    reads the checked violations, instead of re-deriving them below: the
+    Variant tree with its parse and bindings inlined at each reference, or
+    a second run of the Arrow-Python UDF.  One name per call: two
+    validations in one plan must not clash."""
+    fenced = checked.observe(f"validate_json_column_{uuid.uuid4().hex}",
+                             F.count(F.lit(1)).alias("rows"))
+    return fenced.withColumn(
+        "valid",
+        F.size(F.filter(F.col("violations"), lambda v: v["severity"] == F.lit("error"))) == 0,
+    )
 
 
 def register_keyword(name: str, column_compiler: Optional[Callable] = None,

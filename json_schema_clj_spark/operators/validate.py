@@ -24,6 +24,7 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..plans.compiler import compile_for_table
 from ..plans.ir import Compiled
@@ -116,22 +117,17 @@ def violation_examples(
     element), so reruns and different partitionings return bit-identical
     output — same contract as the min-id keeper in exact dedup.
 
-    Scale shape (the reason this isn't a window function): a global
-    `row_number() OVER (PARTITION BY keyword_path)` shuffles EVERY
-    violation row onto |keyword_paths| reducers — low-cardinality keys,
-    maximal skew.  Instead:
-
-    1. explode failing rows only (violation_rows' filter-first plan),
-    2. per-Arrow-batch prune to k smallest per path (mapInPandas — the
-       stream never holds more than |paths|·k rows per batch),
-    3. bucketed fold: top-k per (partition-id mod 64, path), then top-k
-       per path over the ≤ 64·k survivors.
-
-    The final aggregate sees a CONSTANT ≤ 64·k candidates per path at any
-    table size, and the intermediate reduce spreads over 64 reducers per
-    path (no hot single-reducer key).  Output: (keyword_path, keyword,
-    severity, rank 1..k, *id_cols, instance_path, message), rank ordered
-    by the id tuple.
+    Scale shape: failing rows only are exploded (violation_rows'
+    filter-first plan), then one `row_number() <= k` over the path key.
+    Spark plans that as a two-phase top-k: a `WindowGroupLimit Partial`
+    keeps at most k rows per path in each task BEFORE the exchange on the
+    path, and a `WindowGroupLimit Final` after it — so the low-cardinality
+    path key (one reducer per path, DS2-style skew) receives at most
+    k·|tasks| rows per path, never the whole violation set.  The partial
+    limit needs k ≤ `spark.sql.optimizer.windowGroupLimitThreshold`
+    (default 1000); above it Spark plans a plain window.  Output:
+    (keyword_path, keyword, severity, rank 1..k, *id_cols, instance_path,
+    message), rank ordered by the id tuple.
     """
     rows = violation_rows(validated, id_cols, out_col=out_col, prefilter=prefilter)
     return violation_examples_from_rows(rows, id_cols, k=k)
@@ -149,79 +145,19 @@ def violation_examples_from_rows(
     needs the violation_rows shape: *id_cols, keyword_path (array or
     pre-joined string), keyword, severity, instance_path, message."""
     group_cols = ["keyword_path", "keyword", "severity"]
-    kp = rows.schema["keyword_path"].dataType.typeName()
-    ip = rows.schema["instance_path"].dataType.typeName()
-    keyed = rows.select(
-        (
-            F.array_join("keyword_path", "/") if kp == "array" else F.col("keyword_path")
-        ).alias("keyword_path"),
-        "keyword",
-        "severity",
-        *id_cols,
-        (
-            F.array_join("instance_path", "/") if ip == "array" else F.col("instance_path")
-        ).alias("instance_path"),
-        "message",
-    )
-    sort_cols = list(id_cols) + ["instance_path", "message"]
 
-    def prune(batches):
-        import pandas as pd
-        import pyarrow as pa
+    def joined(c: str) -> Column:
+        is_array = rows.schema[c].dataType.typeName() == "array"
+        return (F.array_join(c, "/") if is_array else F.col(c)).alias(c)
 
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            # ArrowDtype-backed pandas: a nullable int64 id column stays
-            # int64 (Spark's default Arrow→pandas conversion would float64
-            # it, silently rounding ids above 2^53 before the sort).
-            # na_position="first" matches Spark's struct ordering in the
-            # merge phase (null field < any value) — otherwise a NULL id
-            # could be pruned locally yet win the global array_sort,
-            # making output partitioning-dependent.
-            pdf = batch.to_pandas(types_mapper=pd.ArrowDtype)
-            out = (
-                pdf.sort_values(sort_cols, na_position="first")
-                .groupby(group_cols, dropna=False, sort=False)
-                .head(k)
-            )
-            yield pa.RecordBatch.from_pandas(
-                out.reset_index(drop=True), schema=batch.schema
-            )
-
-    pruned = keyed.mapInArrow(prune, keyed.schema)
-    ex = F.struct(
-        *[F.col(c) for c in id_cols], F.col("instance_path"), F.col("message")
-    )
-    # bucketed intermediate top-k: the batch prune emits ≤ |paths|·k rows
-    # PER ARROW BATCH, so a direct collect_list per path would still grow
-    # with |batches|.  Folding through 64 (bucket, path) groups first —
-    # each sliced back to k — caps the final aggregate at 64·k candidates
-    # per path, constant in table size, and spreads the intermediate
-    # reduce over 64 reducers per path instead of one.
-    n_buckets = 64
-    lvl1 = (
-        pruned.select(
-            F.pmod(F.spark_partition_id(), F.lit(n_buckets)).alias("_b"),
-            *group_cols,
-            ex.alias("ex"),
-        )
-        .groupBy("_b", *group_cols)
-        .agg(F.slice(F.array_sort(F.collect_list("ex")), 1, k).alias("exs"))
-    )
-    merged = (
-        lvl1.select(*group_cols, F.explode("exs").alias("ex"))
-        .groupBy(*group_cols)
-        .agg(F.slice(F.array_sort(F.collect_list("ex")), 1, k).alias("exs"))
-    )
-    return merged.select(
-        *group_cols, F.posexplode("exs").alias("_r", "ex")
-    ).select(
-        *group_cols,
-        (F.col("_r") + 1).cast("long").alias("rank"),
-        *[F.col(f"ex.{c}").alias(c) for c in id_cols],
-        F.col("ex.instance_path").alias("instance_path"),
-        F.col("ex.message").alias("message"),
+    # ascending order puts NULLs first, so a NULL id ranks before any value
+    w = Window.partitionBy(*group_cols).orderBy(*id_cols, "instance_path", "message")
+    return (
+        rows.select(joined("keyword_path"), "keyword", "severity", *id_cols,
+                    joined("instance_path"), "message")
+        .select(*group_cols, F.row_number().over(w).cast("long").alias("rank"),
+                *id_cols, "instance_path", "message")
+        .where(F.col("rank") <= F.lit(k))
     )
 
 
@@ -252,12 +188,10 @@ def keyword_breakdown(
     prefilter=None,
 ) -> DataFrame:
     """Violation counts per violated keyword path — the aggregate view a
-    100 TB run actually reads first.  Explodes only failing rows, then a
-    partial-aggregated groupBy on a low-cardinality key."""
-    cond = prefilter if prefilter is not None else (F.size(F.col(out_col)) > 0)
+    100 TB run actually reads first.  `violation_rows` (failing rows
+    only), then a partial-aggregated groupBy on a low-cardinality key."""
     return (
-        validated.where(cond)
-        .select(F.inline(F.col(out_col)))
+        violation_rows(validated, [], out_col, prefilter)
         .groupBy(F.array_join("keyword_path", "/").alias("keyword_path"), "keyword", "severity")
         .agg(F.count(F.lit(1)).alias("n_violations"))
     )

@@ -157,10 +157,10 @@ EXAMPLES_SCHEMA = {
 
 def q_violation_examples_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 example rows per violated keyword path, examples = the 3
-    smallest o_orderkey values violating that check.  The bounded
-    per-batch prune + partial-agg merge keeps the shuffle at
-    |paths|·k rows per task regardless of table size (see
-    operators/validate.py violation_examples)."""
+    smallest o_orderkey values violating that check.  The two-phase
+    `WindowGroupLimit` top-k keeps the shuffle at |paths|·k rows per task
+    regardless of table size (see operators/validate.py
+    violation_examples)."""
     df = t(spark, sf_dir, "orders")
     validated = with_validation(df, EXAMPLES_SCHEMA)
     return (

@@ -231,13 +231,13 @@ def test_hostile_rows_are_records_on_both_tiers(spark):
     assert got["python"][len(HOSTILE) - 1] == (True, [])
 
 
-def _both_tiers(spark, docs, schema):
+def _both_tiers(spark, docs, schema, config=None):
     """{backend: [(valid, violation records)]} over `docs` in order."""
     df = spark.createDataFrame(list(enumerate(docs)), "i int, data_json string")
     return {
         backend: [
             (r["valid"], [tuple(v) for v in r["violations"]])
-            for r in engine.validate_json_column(df, schema, force_backend=backend)
+            for r in engine.validate_json_column(df, schema, config=config, force_backend=backend)
             .orderBy("i")
             .collect()
         ]
@@ -258,6 +258,19 @@ def test_null_document_is_json_null_on_both_tiers(spark, schema):
     assert strip["python"][0] == strip["python"][1]
     expected = (False, [([], "expected object", "error")]) if schema else (True, [])
     assert strip["python"][0] == expected
+
+
+def test_warnings_config_agrees_on_both_tiers(spark):
+    """A keyword routed to warnings leaves the document valid on both
+    tiers, with the same warning records.  Records are compared without
+    keyword_path/keyword, which the Arrow-Python tier does not fill yet."""
+    schema = {"type": "object", "properties": {"age": {"minimum": 0}}}
+    docs = ['{"age": -1}', '{"age": 5}']
+    got = _both_tiers(spark, docs, schema, config={"minimum": "warnings"})
+    strip = {b: [(ok, [(ip, sev) for _, ip, _, _, sev in vs]) for ok, vs in rows]
+             for b, rows in got.items()}
+    assert strip["python"] == strip["variant"]
+    assert strip["python"] == [(True, [(["age"], "warning")]), (True, [])]
 
 
 @pytest.mark.xfail(strict=True, reason="try_parse_json accepts trailing text after a value")

@@ -471,7 +471,7 @@ def test_violation_examples_k_exceeds_population(spark):
     assert sorted((r["rank"], r["id"]) for r in out) == [(1, 2), (2, 3)]
 
 
-def test_violation_examples_plan_has_no_window(spark):
+def test_violation_examples_plan_is_two_phase_topk(spark):
     from json_schema_clj_spark.operators.validate import violation_examples, with_validation
 
     schema = {"type": "object", "properties": {"v": {"minimum": 1}}}
@@ -480,10 +480,17 @@ def test_violation_examples_plan_has_no_window(spark):
         violation_examples(with_validation(df, schema), ["id"], k=3)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    # the scale contract: bounded two-phase top-k, never a global window
-    # over the violation set (low-cardinality partition keys = skew)
-    assert "Window" not in plan
-    assert "HashAggregate" in plan or "ObjectHashAggregate" in plan
+    # the scale contract: bounded two-phase top-k, never an unbounded
+    # window over the violation set (low-cardinality path key = skew).
+    # Each task keeps k rows per path before the one exchange on the path.
+    lines = plan.splitlines()
+    exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+    assert len(exchanges) == 1
+    assert "hashpartitioning(keyword_path" in lines[exchanges[0]]
+    partial = [i for i, ln in enumerate(lines) if "WindowGroupLimit" in ln and ln.endswith("Partial")]
+    assert partial and partial[0] > exchanges[0]
+    # pure Catalyst: no Python worker
+    assert "MapInArrow" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_sampled_validation_profile_wilson_bounds(spark):

@@ -103,10 +103,10 @@ CALLOUTS = {
     "stats_profile_by_priority": "keyed one-pass profile: single scan, "
     "partial+final HashAggregate on the partition key, stack on the "
     "aggregate output only",
-    "violation_examples_orders": "bounded top-k fold: per-Arrow-batch "
-    "prune (one MapInArrow, ArrowDtype-safe int64 ids) then a bucketed "
-    "(pid mod 64, path) partial top-k and a final top-k over ≤64·k "
-    "candidates per path — no Window over the low-cardinality key",
+    "violation_examples_orders": "two-phase top-k: Sort + WindowGroupLimit "
+    "Partial (k rows per path per task) below the one Exchange on the path, "
+    "WindowGroupLimit Final + Window above it — pure Catalyst, no Python "
+    "worker and no unbounded Window over the low-cardinality key",
     "sampled_validation_orders": "md5-bucket sample is Filter-on-Scan; one "
     "partial+final agg for the breakdown, BroadcastExchange for the 1-row "
     "totals join",
