@@ -17,7 +17,7 @@ Workload (the same one benchmarked in BENCH/BASELINE.md):
 1. resumable per-chunk schema validation — violation rows + per-partition
    verdict metrics, one manifest commit per chunk (kill anywhere; re-run
    skips committed partitions),
-2. salted uniqueness on image_id and phash,
+2. uniqueness on image_id and phash,
 3. magic-number format conformance on (bytes, fmt),
 4. per-column stats profile,
 5. KS/PSI drift of each partition's width distribution vs the corpus.

@@ -17,10 +17,10 @@ multimethods):
   Columns can't express (unbounded recursion, dynamic object shapes).
 
 Table-level operators (`operators/`) extend the same violation model to
-whole-table invariants: per-column stats, uniqueness (salted two-stage
-agg), referential integrity (broadcast/SMJ anti-join), distribution drift
-(KS/PSI on histogram sketches), dedup, similarity search and text/
-multimodal analysis for training-data pipelines.
+whole-table invariants: per-column stats, uniqueness (one partial+final
+count per key), referential integrity (broadcast/SMJ anti-join),
+distribution drift (KS/PSI on histogram sketches), dedup, similarity
+search and text/multimodal analysis for training-data pipelines.
 """
 
 from .operators.curation import (  # noqa: F401

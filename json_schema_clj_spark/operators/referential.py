@@ -28,9 +28,10 @@ def dangling(
     Composite foreign keys: pass equal-length column lists for
     `fact_key`/`dim_key`; the anti-join runs on the full tuple and a row
     with ANY null key component passes (it cannot positively mismatch —
-    the same guard as the single-key form).  The dimension side is still
-    a distinct projection of only the key columns, so broadcast size is
-    |distinct key tuples|, not the dimension row count."""
+    the same guard as the single-key form).  The dimension side is a
+    projection of only the key columns, broadcast as it stands: an anti-join
+    only asks whether a key exists, so repeated dim keys change nothing and
+    a distinct would cost a shuffle of the dimension before the broadcast."""
     fact_keys = [fact_key] if isinstance(fact_key, str) else list(fact_key)
     dim_cols = [dim_key] if isinstance(dim_key, str) else list(dim_key)
     if len(fact_keys) != len(dim_cols):
@@ -39,9 +40,7 @@ def dangling(
         raise ValueError(
             f"fact_key/dim_key arity mismatch: {fact_keys} vs {dim_cols}"
         )
-    dim_keys = dim.select(
-        *[F.col(d).alias(f) for d, f in zip(dim_cols, fact_keys)]
-    ).distinct()
+    dim_keys = dim.select(*dim_cols).toDF(*fact_keys)
     if broadcast is True:
         dim_keys = F.broadcast(dim_keys)
     present = fact

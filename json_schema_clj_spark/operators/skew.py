@@ -1,18 +1,18 @@
 """Key-skew profiling — the planning half of the north rule's "skew
 handled explicitly; adaptive salting on hot phash buckets".
 
-The salted two-stage aggregation in `operators/uniqueness.py` and the
-hot-bucket guards in `operators/dedup.py`/`similarity.py` all take a
-fan-out factor as an input.  This module measures the quantity those
-knobs are sized against: the per-key row distribution of a join/agg key.
-At 10^12 rows you run the profile once per ingest batch (it is itself a
-salted two-stage count, so profiling a skewed key never recreates the
-hot-reducer problem it is diagnosing) and feed `plan_salt_buckets` into
-the salted operators; AQE skew-join splitting then only has to catch
-what the plan missed.
+The hot-bucket guards in `operators/dedup.py` take a frequency cap as an
+input (`max_bucket_size`, `max_window_freq`).  This module measures the
+quantity such knobs are sized against: the per-key row distribution of a
+join/agg key, run once per ingest batch at 10^12 rows.  `plan_salt_buckets`
+turns the hottest key into a fan-out factor for per-key work that cannot be
+combined map-side; a count can (see `operators/uniqueness.py`), so the
+profile itself is a plain `key_counts` whose partial aggregation sends each
+reducer at most one row per key per map task — profiling a skewed key never
+recreates the hot-reducer problem it is diagnosing.
 
-Spark-first shape: both stages are plain groupBy aggregations with
-map-side partial aggregation; the top-k is a `row_number` window over the
+Spark-first shape: the count is one groupBy aggregation with map-side
+partial aggregation; the top-k is a `row_number` window over the
 (already key-collapsed) count frame — its shuffle carries one row per
 distinct key, not per input row.
 """
@@ -34,7 +34,7 @@ def plan_salt_buckets(max_key_rows: int, target_rows_per_reducer: int = 1000, ca
     return int(min(cap, -(-max_key_rows // target_rows_per_reducer)))
 
 
-def hot_keys(df: DataFrame, keys: list[str], top_k: int = 10, salted: bool = True) -> DataFrame:
+def hot_keys(df: DataFrame, keys: list[str], top_k: int = 10) -> DataFrame:
     """Top-k hottest key tuples: (keys..., n, rnk), deterministic ordering
     (count desc, then key asc) so ties at the top-k boundary are stable.
 
@@ -43,7 +43,7 @@ def hot_keys(df: DataFrame, keys: list[str], top_k: int = 10, salted: bool = Tru
     row_number window, which would collapse the whole count frame onto one
     reducer; the rank window only ever sees the k survivors."""
     order = [F.desc("n"), *[F.asc(k) for k in keys]]
-    top = key_counts(df, keys, salted=salted).orderBy(*order).limit(top_k)
+    top = key_counts(df, keys).orderBy(*order).limit(top_k)
     w = Window.orderBy(*order)
     return top.withColumn("rnk", F.row_number().over(w)).select(*keys, "n", "rnk")
 
@@ -52,7 +52,6 @@ def skew_profile(
     df: DataFrame,
     keys: list[str],
     target_rows_per_reducer: int = 1000,
-    salted: bool = True,
 ) -> DataFrame:
     """One-row skew summary of a key column: total rows, distinct keys,
     hottest-key row count, the hottest key itself (ties → smallest key),
@@ -66,7 +65,7 @@ def skew_profile(
     if len(keys) != 1:
         raise ValueError("skew_profile takes a single key column; use hot_keys for composites")
     k = keys[0]
-    counts = key_counts(df, keys, salted=salted)
+    counts = key_counts(df, keys)
     target = int(target_rows_per_reducer)
     agg = counts.agg(
         F.sum("n").cast("long").alias("total_rows"),

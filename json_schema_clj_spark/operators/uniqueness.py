@@ -4,14 +4,12 @@ array value to a 10^12-row key column (north rule: "uniqueness on image_id
 and phash via salted repartition + hash aggregation").
 
 Skew story: `phash` clusters (near-duplicate images) make some keys hot.
-A plain groupBy(key).count() already does map-side partial aggregation —
-each task emits one row per distinct key it saw, so a key appearing 10^6
-times in one task costs one shuffle row.  The residual hot spot is a key
-spread across MANY tasks; `salted=True` makes the two-stage shape explicit:
-stage 1 aggregates on (key, salt) — salt fans each key over S reducers —
-stage 2 merges the S partials.  With AQE skew handling enabled this is
-belt-and-braces, but it is the shape that survives a 1000-executor run
-where a single reducer would otherwise own the hottest phash bucket.
+A plain groupBy(key).count() already bounds them: the partial
+HashAggregate on the map side emits one row per distinct key per task, so
+a key appearing 10^6 times costs its reducer at most one row per map task.
+A count is decomposable, so that is the whole of the skew bound; a salted
+second stage would only add a shuffle (and a salt drawn per row defeats the
+map-side combine).
 """
 
 from __future__ import annotations
@@ -20,41 +18,31 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def key_counts(df: DataFrame, keys: list[str], salted: bool = True, salt_buckets: int = 64) -> DataFrame:
-    """Count of rows per key tuple, skew-safe."""
-    if not salted:
-        return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
-    # stage 1: partial count per (key, salt); salt derived from the full row
-    # hash so it's deterministic and uniform
-    salt = F.pmod(F.xxhash64(*[F.col(k) for k in keys], F.monotonically_increasing_id()), F.lit(salt_buckets))
-    partial = (
-        df.select(*keys, salt.alias("_salt"))
-        .groupBy(*keys, "_salt")
-        .agg(F.count(F.lit(1)).alias("_pn"))
-    )
-    # stage 2: merge partials per key — at most salt_buckets rows per key
-    return partial.groupBy(*keys).agg(F.sum("_pn").alias("n"))
+def key_counts(df: DataFrame, keys: list[str]) -> DataFrame:
+    """Count of rows per key tuple: (keys..., n), one exchange."""
+    return df.groupBy(*keys).agg(F.expr("count(1) AS n"))
 
 
-def duplicates(df: DataFrame, keys: list[str], salted: bool = True, salt_buckets: int = 64) -> DataFrame:
+def duplicates(df: DataFrame, keys: list[str]) -> DataFrame:
     """Keys violating uniqueness: (keys..., n) with n > 1."""
-    return key_counts(df, keys, salted=salted, salt_buckets=salt_buckets).where(F.col("n") > 1)
+    return key_counts(df, keys).where("n > 1")
 
 
 def uniqueness_violations(
     df: DataFrame,
     keys: list[str],
     id_cols: list[str],
-    salted: bool = True,
+    salted: bool | None = None,
 ) -> DataFrame:
     """Violation rows in the engine's standard shape: every row whose key
     tuple is duplicated, tagged keyword_path ['uniqueItems', <key>].
 
     The dup-key set is usually tiny relative to the table → Spark/AQE picks
     a broadcast join of the duplicates back onto the fact side; no second
-    full shuffle of the big table.
+    full shuffle of the big table.  `salted` is accepted and ignored (the
+    count needs no salt stage; see the module docstring).
     """
-    dups = duplicates(df, keys, salted=salted).select(*keys)
+    dups = duplicates(df, keys).select(*keys)
     joined = df.join(F.broadcast(dups), on=keys, how="left_semi")
     return joined.select(
         *id_cols,

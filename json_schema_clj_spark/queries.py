@@ -418,12 +418,12 @@ SELECT * FROM (
 
 
 # ---------------------------------------------------------------------------
-# 4. uniqueness (salted two-stage agg)
+# 4. uniqueness (one partial+final count per key)
 
 
 def q_duplicates_orders_custkey(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = t(spark, sf_dir, "orders")
-    return U.duplicates(df, ["o_custkey"], salted=True).orderBy("o_custkey")
+    return U.duplicates(df, ["o_custkey"]).orderBy("o_custkey")
 
 
 SQL_DUPLICATES_ORDERS_CUSTKEY = """
@@ -2150,12 +2150,12 @@ def q_images_uniqueness_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.images import images_df
 
     df = images_df(spark, 100_000)
-    phash_dups = U.duplicates(df, ["phash"], salted=True).agg(
+    phash_dups = U.duplicates(df, ["phash"]).agg(
         F.count(F.lit(1)).alias("n_dup_keys"),
         F.sum("n").alias("n_rows_in_dups"),
         F.max("n").alias("hottest_key_rows"),
     ).withColumn("key", F.lit("phash"))
-    id_dups = U.duplicates(df, ["image_id"], salted=True).agg(
+    id_dups = U.duplicates(df, ["image_id"]).agg(
         F.count(F.lit(1)).alias("n_dup_keys"),
         F.sum("n").alias("n_rows_in_dups"),
         F.max("n").alias("hottest_key_rows"),
@@ -2796,13 +2796,14 @@ ORDER BY id_a
 
 # ---------------------------------------------------------------------------
 # 18. skew profiling (north rule: "skew handled explicitly; adaptive salting
-# on hot buckets") — the measurement that sizes the salted operators
+# on hot buckets") — the measurement that sizes the hot-bucket guards
 
 
 def q_skew_profile_custkey(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row skew summary of orders.o_custkey: total/distinct/max rows per
     key, the hottest key (ties → smallest), and the salt fan-out
-    `plan_salt_buckets` feeds into the salted uniqueness/dedup operators.
+    `plan_salt_buckets` would choose for per-key work that cannot combine
+    map-side.
     Single pass over the key-collapsed count frame (argmax via
     max-of-struct, no self-join)."""
     from .operators import skew as SK
@@ -5432,7 +5433,7 @@ ORACLES = {
     "images_uniqueness_skewed": SQL_IMAGES_UNIQUENESS,
     "images_curation_funnel": SQL_IMAGES_CURATION_FUNNEL,
     "images_magic_conformance": SQL_IMAGES_MAGIC_CONFORMANCE,
-    # skew profiling (salted count frame mirrored by plain GROUP BY)
+    # skew profiling (the count frame is a plain GROUP BY)
     "skew_profile_orders_custkey": SQL_SKEW_PROFILE_CUSTKEY,
     "skew_hot_keys_orders_custkey": SQL_SKEW_HOT_KEYS_CUSTKEY,
     # winnow sketch over the salted-clone corpus (see q_minhash_lsh block)

@@ -1,9 +1,12 @@
-"""Table-level operators: stats, uniqueness (salted), referential, drift —
+"""Table-level operators: stats, uniqueness, referential, drift —
 golden expectations derived from the seeded images generator."""
+
+import math
+from collections import Counter, defaultdict
 
 from pyspark.sql import functions as F
 
-from json_schema_clj_spark.operators.drift import detect_drift
+from json_schema_clj_spark.operators.drift import detect_drift, drift_scores, histogram_sketch
 from json_schema_clj_spark.operators.referential import coverage, dangling, referential_violations
 from json_schema_clj_spark.operators.stats import column_profile
 from json_schema_clj_spark.operators.uniqueness import duplicates, uniqueness_violations
@@ -30,9 +33,13 @@ def test_uniqueness_duplicates(spark):
     dups = duplicates(df, ["image_id"]).collect()
     assert len(dups) == 2
     assert all(r["n"] == 2 for r in dups)
-    # salted and unsalted agree
-    dups2 = duplicates(df, ["image_id"], salted=False).collect()
-    assert sorted(r["image_id"] for r in dups) == sorted(r["image_id"] for r in dups2)
+    # a hot key spread over every partition: its per-task partial counts
+    # merge to one exact row
+    hot = spark.range(1000).repartition(8).selectExpr(
+        "CASE WHEN id % 3 = 0 THEN 42 ELSE id + 1000 END AS k"
+    )
+    assert hot.where("k = 42").select(F.spark_partition_id()).distinct().count() > 1
+    assert [(r["k"], r["n"]) for r in duplicates(hot, ["k"]).collect()] == [(42, 334)]
     # phash is massively duplicated by construction (hot buckets)
     ph = duplicates(df, ["phash"]).agg(F.sum("n")).collect()[0][0]
     assert ph == N  # every phash value is shared by ~997 rows
@@ -145,6 +152,131 @@ def test_drift_detection(spark):
     assert len(flags) == 64
     drifted = {g for g, d in flags.items() if d}
     assert drifted == {g for g in flags if int(g) >= 32}, sorted(drifted)
+
+
+def _drift_reference(base, cur, eps=1e-6):
+    """Pure-Python KS/PSI per group from {group: Counter(bucket -> n)}
+    baseline and current counts: missing buckets count 0, CDFs summed in
+    bucket order."""
+    out = {}
+    for g in set(base) | set(cur):
+        b, c = base.get(g, Counter()), cur.get(g, Counter())
+        tb, tc = max(sum(b.values()), 1), max(sum(c.values()), 1)
+        cdf_b = cdf_c = ks = psi = 0.0
+        for k in sorted(set(b) | set(c)):
+            p, q = b[k] / tb, c[k] / tc
+            cdf_b += p
+            cdf_c += q
+            ks = max(ks, abs(cdf_b - cdf_c))
+            psi += (p - q) * math.log((p + eps) / (q + eps))
+        out[g] = (ks, psi)
+    return out
+
+
+def test_drift_matches_python_reference_on_edge_rows(spark):
+    """detect_drift and drift_scores against a pure-Python KS/PSI: a NULL
+    group feeds the pooled baseline but is not scored, NULL values count
+    nowhere, a NULL baseline flag is not baseline, out-of-range values clamp
+    into the edge buckets, and a group may lack baseline buckets."""
+    lo, hi, nb = 0.0, 10.0, 5
+    rows = (
+        [("a", float(v), True) for v in (0.5, 1.5, 1.7, 3.2, 9.9)]
+        + [("a", 4.4, None), ("a", None, True), ("a", 2.5, False)]
+        + [("b", v, False) for v in (-3.0, 0.1, 10.0, 25.0, 2.2, 2.3)]
+        + [("b", 6.0, True), ("b", None, None)]
+        + [(None, 7.5, True), (None, -1.0, True), (None, 5.5, False)]
+        + [("c", 1.0, None), ("c", 8.0, False)]
+    )
+    df = spark.createDataFrame(rows, "g string, v double, base boolean")
+
+    def bucket(v):
+        return min(max(math.floor((v - lo) / ((hi - lo) / nb)), 0), nb - 1)
+
+    pooled = Counter(bucket(v) for g, v, is_base in rows if v is not None and is_base)
+    cur = defaultdict(Counter)
+    for g, v, _ in rows:
+        if v is not None and g is not None:
+            cur[g][bucket(v)] += 1
+    want = _drift_reference({g: pooled for g in cur}, cur)
+    assert set(want) == {"a", "b", "c"}
+
+    got = detect_drift(
+        df, "v", "g", baseline_filter=F.col("base"), lo=lo, hi=hi, buckets=nb,
+        ks_threshold=0.5, psi_threshold=100.0,
+    )
+    assert got.columns == ["group", "ks", "psi", "drifted"]
+    assert [f.dataType.simpleString() for f in got.schema.fields] == ["string", "double", "double", "boolean"]
+    by_group = {r["group"]: r for r in got.collect()}
+    assert set(by_group) == set(want)
+    for g, (ks, psi) in want.items():
+        r = by_group[g]
+        assert abs(r["ks"] - ks) <= 1e-12 and abs(r["psi"] - psi) <= 1e-12, (g, r, ks, psi)
+        assert r["drifted"] == (ks > 0.5 or psi > 100.0)
+
+    # drift_scores on two sketches: per-group baselines, one group present
+    # only in the baseline, and NULL groups on both sides
+    sk = histogram_sketch(df, "v", "g", lo, hi, nb)
+    base_sk = sk.where("`group` IS NULL OR `group` <> 'c'").selectExpr(
+        "coalesce(`group`, 'z') AS `group`", "bucket", "n"
+    ).unionByName(sk.where("`group` IS NULL"))
+    base = defaultdict(Counter)
+    for g, v, _ in rows:
+        if v is not None and g != "c":
+            base[g or "z"][bucket(v)] += 1
+    want = _drift_reference(base, cur)
+    got = {r["group"]: (r["ks"], r["psi"]) for r in drift_scores(base_sk, sk).collect()}
+    assert set(got) == {"a", "b", "c", "z"} == set(want)
+    for g, (ks, psi) in want.items():
+        assert abs(got[g][0] - ks) <= 1e-12 and abs(got[g][1] - psi) <= 1e-12, (g, got[g], ks, psi)
+
+
+def _final_plan(df) -> str:
+    """The executed physical plan after an action (AQE's final plan)."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+
+
+def _subtree(plan: str, marker: str) -> str:
+    """The lines of the first plan node containing `marker` and its children."""
+    lines = plan.splitlines()
+    start = next(i for i, line in enumerate(lines) if marker in line)
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out = [lines[start]]
+    for line in lines[start + 1:]:
+        if depth(line) <= depth(lines[start]):
+            break
+        out.append(line)
+    return "\n".join(out)
+
+
+def test_detect_drift_plan_reads_the_table_once(spark, tmp_path):
+    path = str(tmp_path / "images")
+    images_df(spark, 4_000, drift=True).write.parquet(path)
+    scores = detect_drift(
+        spark.read.parquet(path), "w", "part_id", baseline_filter=F.col("part_id") < 32,
+        lo=0.0, hi=5200.0, buckets=64,
+    )
+    plan = _final_plan(scores)
+    assert plan.count("FileScan") == 1, plan
+    assert "SortMergeJoin" not in plan, plan
+
+
+def test_duplicates_plan_is_one_exchange(spark):
+    plan = duplicates(images_df(spark, N), ["phash"])._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "_salt" not in plan, plan
+
+
+def test_dangling_broadcasts_the_dim_keys_as_scanned(spark):
+    fact = spark.range(98).selectExpr("CAST(id % 7 AS STRING) AS fmt")
+    dim = spark.createDataFrame([("1",), ("2",), ("2",), ("3",)], "fmt string")
+    bad = dangling(fact, "fmt", dim, "fmt")
+    build = _subtree(_final_plan(bad), "BroadcastExchange")
+    assert "HashAggregate" not in build and "Exchange" not in build.split("\n", 1)[1], build
+    assert bad.count() == 98 - 3 * 14  # residues 1, 2, 3 match
 
 
 def test_hll_partition_sketches_merge_to_global(spark):
@@ -525,8 +657,8 @@ def test_sampled_validation_profile_wilson_bounds(spark):
 def test_violation_examples_null_ids_rank_first(spark):
     from json_schema_clj_spark.operators.validate import violation_examples, with_validation
 
-    # a NULL id must win rank 1 under ANY partitioning (pandas prune and
-    # Spark struct sort must agree that null < any value)
+    # a NULL id must win rank 1 under ANY partitioning (the row_number
+    # window's ascending id order puts null before any value)
     schema = {"type": "object", "properties": {"v": {"maximum": 0}}}
     df = spark.createDataFrame(
         [(None, 5), (7, 5), (1, 5), (9, 5)], "id int, v int"
@@ -621,8 +753,8 @@ def test_sampled_validation_profile_multiviolation_rows(spark):
 def test_violation_examples_preserves_big_int64_ids(spark):
     from json_schema_clj_spark.operators.validate import violation_examples, with_validation
 
-    # nullable int64 above 2^53: the default Arrow→pandas conversion would
-    # float64-round these ids in the prune; the ArrowDtype path must not
+    # nullable int64 above 2^53: the ids must come back exact, never
+    # float64-rounded on their way through the top-k
     big1, big2 = (1 << 53) + 1, (1 << 53) + 3
     schema = {"type": "object", "properties": {"v": {"maximum": 0}}}
     df = spark.createDataFrame(

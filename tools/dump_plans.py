@@ -55,12 +55,17 @@ HEADLINE = [
 CALLOUTS = {
     "validate_lineitem_keywords": "whole-stage codegen over the compiled "
     "check tree; no BatchEvalPython/ArrowEvalPython in the predicate path",
-    "uniqueness_orders_custkey": "two-stage salted agg: partial on "
-    "(key, salt), final on key",
+    "uniqueness_orders_custkey": "one exchange for the count: partial count "
+    "on the map side, final count and n > 1 filter per key (the other "
+    "Exchange is the query's ORDER BY)",
     "referential_dangling_partkeys": "BroadcastHashJoin LeftAnti — the dim "
-    "side broadcasts",
+    "key projection broadcasts as scanned, no aggregate or exchange",
     "referential_bloom_dangling": "distributed bit_or bitmap build + "
     "broadcast probes; exact SMJ anti-join only on bloom survivors",
+    "drift_ks_psi_orders": "one (group, bucket) sketch counts all rows and "
+    "baseline rows together; its subtree shows twice here (per-group scores "
+    "and the pooled one-row broadcast), AQE runs its exchange once and "
+    "reuses it; no SortMergeJoin",
     "tpch_q1_pricing_summary": "PushedFilters + partial/final HashAggregate",
     "join_revenue_by_nation": "broadcast dims, shuffle only on the fact agg",
     "dedup_minhash_lsh": "single ArrowEvalPython/MapInPandas stage for "
