@@ -58,10 +58,13 @@ def validate_json_column(
        Catalyst.  Each statically addressed value and its type tag are
        bound once per row, and `valid` derives from the violations array
        (see ``compiler.compile_for_json``).  Used whenever the schema
-       compiles on the Variant view.
-       It declines `$data`, `$ref` recursion beyond the unroll depth,
-       non-scalar enum/const members, bignum bounds and keywords
-       registered after import.
+       compiles on the Variant view.  A `$data` comparator bound
+       (minimum/maximum and the other numeric and size bounds) at a
+       static path is bound like any other value.
+       It declines every other `$data` consumer, a `$data` pointer
+       through an array element checked inside a higher-order function,
+       `$ref` recursion beyond the unroll depth, non-scalar enum/const
+       members, bignum bounds and keywords registered after import.
     2. **python** — the Arrow-batched interpreter, full conformance for
        everything else.
 

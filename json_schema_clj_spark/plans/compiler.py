@@ -29,9 +29,13 @@ JVM-side with zero per-row Python.  A (schema, target) pair the view cannot
 express raises :class:`ColumnBackendUnsupported` and the engine-level API
 falls back to the Arrow-batched Python backend
 (json_schema_clj_spark.pyvalidator).  On a Variant value that covers
-`$data`, non-scalar enum/const members, `$ref` recursion beyond the unroll
-depth, and any keyword registered after import (its compiler expects a
-typed target).
+`$data` outside the numeric and size comparators, a `$data` pointer
+through an array element checked inside a higher-order function,
+non-scalar enum/const members, `$ref` recursion beyond the unroll depth,
+and any keyword registered after import (its compiler expects a typed
+target).  A comparator's `$data` bound at a static path is the bound
+Variant value of that path (:func:`_resolve_data_pointer`), type-tested
+per row like any other value.
 
 Extension surface: :func:`register_keyword` mirrors the reference's open
 multimethod (custom keywords `discriminator`, `exclusiveProperties`,
@@ -217,11 +221,20 @@ class _Bound(_ClassicColumn):
 
     def member(self, key) -> Optional["_Bound"]:
         """The bound object member `key`; None when the path syntax cannot
-        spell the key (it has no escapes for a key holding both quotes)."""
-        if not isinstance(key, str) or ("'" in key and '"' in key):
-            return None
-        seg = f"['{key}']" if "'" not in key else f'["{key}"]'
-        return self._binder.bind(self.path + seg)
+        spell the key."""
+        seg = _path_seg(key) if isinstance(key, str) else None
+        return None if seg is None else self._binder.bind(self.path + seg)
+
+
+def _path_seg(key) -> Optional[str]:
+    """A Variant path step: ``[i]`` for an array index, ``['k']`` for an
+    object key; None for a key the path syntax cannot spell (it has no
+    escapes for a key holding both quotes)."""
+    if isinstance(key, int):
+        return f"[{key}]"
+    if "'" in key and '"' in key:
+        return None
+    return f"['{key}']" if "'" not in key else f'["{key}"]'
 
 
 #: JSON type family -> does a typed column of this Spark type hold it
@@ -371,9 +384,11 @@ def _probe_ok(schema, target: Column, ctx: Ctx) -> Column:
 
 def _resolve_data_pointer(ref: str, ctx: Ctx):
     """$data relative-JSON-pointer resolution (reference compile-pointer,
-    core.clj:65-91): returns (Column, DataType|None) or a literal string for
-    the `N#` key form.  Walks from the root row struct for absolute `#/...`
-    pointers, or from instance_path minus N for relative `N/...` ones."""
+    core.clj:65-91): returns (Column, DataType|None); the `N#` key form
+    gives the key itself, a literal.  Walks from the root (`ctx.root_col`)
+    for absolute `#/...` pointers, or from instance_path minus N for
+    relative `N/...` ones.  On a Variant root the path must be static and
+    the value is its bound Variant (:func:`_variant_at`)."""
     is_root = ref.startswith("#")
     is_key = ref.endswith("#")
     body = ref
@@ -389,25 +404,32 @@ def _resolve_data_pointer(ref: str, ctx: Ctx):
     if is_root:
         base_path: tuple = ()
     else:
-        if not segs:
-            raise ColumnBackendUnsupported(f"empty relative $data pointer {ref!r}")
+        if not segs or not segs[0].isdigit():
+            raise ColumnBackendUnsupported(f"relative $data pointer {ref!r} has no step count")
         steps_back = int(segs[0])
         segs = segs[1:]
         if steps_back > len(ctx.instance_path):
             raise ColumnBackendUnsupported(f"$data pointer {ref!r} escapes the row")
         base_path = ctx.instance_path[: len(ctx.instance_path) - steps_back]
 
-    full = list(base_path) + [decode(s) if not s.isdigit() else int(s) for s in segs]
+    rel = [decode(s) if not s.isdigit() else int(s) for s in segs]
+    full = list(base_path) + rel
     if is_key:
         if not full:
             raise ColumnBackendUnsupported(f"$data key pointer {ref!r} at root")
         last = full[-1]
         if isinstance(last, Column):
+            if _is_variant(ctx.root_dtype):
+                raise ColumnBackendUnsupported(f"$data key pointer {ref!r} names a lambda variable")
             return last.cast("string"), T.StringType()
+        if isinstance(last, int):  # an array index is a number, as in the Python backend
+            return F.lit(last), T.LongType()
         return F.lit(str(last)), T.StringType()
 
     if ctx.root_col is None:
         raise ColumnBackendUnsupported("$data requires root_col in compile context")
+    if _is_variant(ctx.root_dtype):
+        return _variant_at(ctx.root_col, base_path, rel, ref), T.VariantType()
     col = ctx.root_col
     dt = ctx.root_dtype
     for seg in full:
@@ -439,10 +461,42 @@ def _resolve_data_pointer(ref: str, ctx: Ctx):
     return col, dt
 
 
-def _maybe_data(value, ctx: Ctx):
+def _variant_at(root: Column, base: tuple, rel: list, ref: str) -> Column:
+    """The Variant value a $data pointer names: `base` (the instance path it
+    starts from; a key is a string, an array index an int) then the
+    pointer's own steps `rel`.  Every step must be static, so the value is
+    bound once per row like any other statically addressed value.  A digit
+    step of the pointer reads an array element or an object member named
+    by the digits, whichever the document holds (the Python backend's
+    get-in), so it binds both paths and takes the one that is present;
+    past two such steps (four paths) the compile falls back."""
+    paths = ["$"]
+    steps = [(seg,) for seg in base] + [(seg, str(seg)) if isinstance(seg, int) else (seg,) for seg in rel]
+    if sum(len(alts) > 1 for alts in steps) > 2:
+        raise ColumnBackendUnsupported(f"$data pointer {ref!r} has too many digit steps")
+    for alts in steps:
+        if any(isinstance(a, Column) for a in alts):
+            raise ColumnBackendUnsupported(f"$data pointer {ref!r} passes through a lambda variable")
+        segs = [_path_seg(a) for a in alts]
+        if None in segs:
+            raise ColumnBackendUnsupported(f"$data pointer {ref!r} has a key the Variant path cannot spell")
+        paths = [p + s for p in paths for s in segs]
+    if isinstance(root, _Bound):
+        values = [root._binder.bind(p) for p in paths]
+    else:
+        values = [F.try_variant_get(root, p, "variant") for p in paths]
+    return values[0] if len(values) == 1 else F.coalesce(*values)
+
+
+def _maybe_data(value, ctx: Ctx, variant_bound: bool = False):
     """Detect the v5 `{"$data": "<pointer>"}` form ($data-pointer,
-    core.clj:126-127). Returns (resolved Column, dtype) or None."""
+    core.clj:126-127). Returns (resolved Column, dtype) or None.  On a
+    Variant root only a consumer that reads a Variant bound
+    (`variant_bound`) resolves the pointer; every other one falls back to
+    the Python backend there."""
     if isinstance(value, dict) and "$data" in value:
+        if _is_variant(ctx.root_dtype) and not variant_bound:
+            raise ColumnBackendUnsupported("this $data consumer on a Variant value needs the Python backend")
         return _resolve_data_pointer(value["$data"], ctx)
     return None
 
@@ -743,7 +797,10 @@ def make_comparator(
         eff_op = op
         if exclusive is True:
             eff_op = {"ge": "gt", "le": "lt"}[op]
-        data = _maybe_data(value, ctx)
+        data = _maybe_data(value, ctx, variant_bound=bound_is_ok is _is_number_py)
+        if data is not None and _is_variant(data[1]):
+            return _variant_bound_check(data[0], _as(family, target, ctx.dtype), ctx, keyword,
+                                        eff_op, value_expr, message, exclusive if broken_flag else None)
         if data is not None:
             bound_col, bound_dt = data
             # cond order mirrors core.clj:106-117: a null runtime bound
@@ -788,6 +845,33 @@ def make_comparator(
         return simple_check(ok, ctx.schema_path, ctx.instance_path, keyword, msg, sev)
 
     return fn
+
+
+def _variant_bound_check(bound: Column, view, ctx: Ctx, keyword: str, op: str,
+                         value_expr, message: str, broken_flag) -> Compiled:
+    """A comparator whose numeric bound is a Variant read per row from the
+    document, in the Python backend's order (core.clj:106-117): an absent
+    or JSON-null bound passes; a bound of another JSON type is the
+    could-not-compare error (told by its type tag: a cast reads "5" and
+    true as numbers); then a broken exclusive flag (`broken_flag`, the
+    flag itself, or None) fails; then `view` (:func:`_as` of the target,
+    None when it can never apply) is compared."""
+    vt = T.VariantType()
+    number = _vtag_is("number", bound)
+    if broken_flag is not None:
+        last, shown = F.lit(False), F.lit(f"exclusive flag should be boolean, got {broken_flag}")
+    elif view is None:
+        last, shown = F.lit(True), F.lit("")
+    else:
+        val, dt, skip = view
+        v = value_expr(val, dt)
+        last = F.when(skip, F.lit(True)).otherwise(
+            getattr(operator, op)(v, _value(bound, vt, T.DoubleType())))
+        shown = F.concat(F.lit(f"expected{message} "), v.cast("string"),
+                         F.lit(f" {_op_sym(op)} "), bound.cast("string"))
+    ok = F.when(~_present(bound, vt), F.lit(True)).when(~number, F.lit(False)).otherwise(last)
+    msg = F.when(number, shown).otherwise(F.concat(F.lit(" could not compare with "), bound.cast("string")))
+    return simple_check(ok, ctx.schema_path, ctx.instance_path, keyword, msg, ctx.severity(keyword))
 
 
 def _op_sym(op: str) -> str:
@@ -2013,9 +2097,6 @@ def compile_schema(schema, target: Column, ctx: Ctx) -> Compiled:
             f"Invalid schema {schema}", ctx.severity("schema"),
         )
     variant = _is_variant(ctx.dtype)
-    if variant and any(isinstance(v, dict) and "$data" in v for v in schema.values()):
-        # a Variant compile has no typed row to resolve the pointer in
-        raise ColumnBackendUnsupported("$data on a Variant value needs the Python backend")
     comps = []
     for k, v in schema.items():
         if k in NOOP_KEYWORDS:
@@ -2063,7 +2144,8 @@ def compile_for_json(
     else:
         binder = _Binder(parsed_name)
         v = binder.bind("$")
-    ctx = Ctx(config=config or {}, root_schema=schema, dtype=T.VariantType())
+    ctx = Ctx(config=config or {}, root_schema=schema, dtype=T.VariantType(),
+              root_col=v, root_dtype=T.VariantType())
     inner = compile_schema(schema, v, ctx)
     malformed = json_col.isNotNull() & v.isNull()
     parse_check = simple_check(

@@ -283,3 +283,99 @@ def test_trailing_text_after_a_value_agrees_on_both_tiers(spark):
 def test_duplicate_object_keys_agree_on_both_tiers(spark):
     got = _both_tiers(spark, ['{"a": 1, "a": 2}'], {"type": "object"})
     assert got["python"] == got["variant"]
+
+
+def _paths(got):
+    """{backend: [(valid, sorted (instance_path, severity) records)]}."""
+    return {b: [(ok, sorted((tuple(ip), sev) for _, ip, _, _, sev in vs)) for ok, vs in rows]
+            for b, rows in got.items()}
+
+
+#: `hi` as written in a document: a number, absent, JSON null, or a
+#: value whose cast to double would succeed although it is no number
+HI = ["7", "3", "4.5", None, "null", '"2"', "true", '{"a": 1}', "[1]"]
+
+
+def _with_hi(lo: str):
+    """One document per `HI`, each with `lo` as written."""
+    return ['{"lo": %s%s}' % (lo, "" if hi is None else f', "hi": {hi}') for hi in HI]
+
+
+@pytest.mark.parametrize("pointer", ["#/hi", "1/hi"])
+@pytest.mark.parametrize("lo", ["5", "5.5", '"x"'])
+def test_data_bound_agrees_on_both_tiers(spark, pointer, lo):
+    """A `$data` maximum read from the document compiles on the Variant
+    tier and gives the Python tier's verdicts: an absent or null bound
+    passes, a non-number bound is an error even where the value is no
+    number, and a numeric bound is compared."""
+    schema = {"properties": {"lo": {"maximum": {"$data": pointer}}}}
+    got = _paths(_both_tiers(spark, _with_hi(lo), schema))
+    assert got["python"] == got["variant"]
+    fails = [ok is False for ok, _ in got["python"]]
+    number = lo != '"x"'
+    assert fails == [False, number, number, False, False, True, True, True, True]
+
+
+@pytest.mark.parametrize("schema, docs", [
+    # two steps back from a nested object, every comparator family
+    ({"properties": {"a": {"properties": {
+        "n": {"minimum": {"$data": "2/lim"}, "exclusiveMaximum": {"$data": "2/top"}},
+        "s": {"minLength": {"$data": "2/lim"}},
+        "xs": {"maxItems": {"$data": "2/lim"}},
+        "o": {"minProperties": {"$data": "2/lim"}}}}}},
+     ['{"a": {"n": 2, "s": "ab", "xs": [1, 2], "o": {"k": 1, "j": 2}}, "lim": 2, "top": 3}',
+      '{"a": {"n": 1, "s": "a", "xs": [1, 2, 3], "o": {}}, "lim": 2, "top": 1}',
+      '{"a": {"n": 2, "s": "ab"}, "lim": "2", "top": true}',
+      '{"a": {"n": 2}, "lim": null}',
+      '{"a": 5, "lim": 1}']),
+    # a draft-4 exclusive flag, and a broken one
+    ({"properties": {"lo": {"maximum": {"$data": "1/hi"}, "exclusiveMaximum": True}}},
+     _with_hi("3")),
+    ({"properties": {"lo": {"maximum": {"$data": "1/hi"}, "exclusiveMaximum": 5}}},
+     _with_hi("3")),
+    # the key form: an array index is a number, an object key is not
+    ({"items": [{"minimum": {"$data": "0#"}}, {"minimum": {"$data": "0#"}}]},
+     ["[0, 1]", "[5, 0]", '["a", "b"]']),
+    ({"properties": {"k": {"minimum": {"$data": "0#"}}}}, ['{"k": 1}', '{"k": "x"}', "{}"]),
+    # a digit step reads an array element or an object member
+    ({"properties": {"lo": {"maximum": {"$data": "1/hi/0"}}}},
+     ['{"lo": 5, "hi": [4]}', '{"lo": 5, "hi": {"0": 6}}', '{"lo": 5, "hi": {"1": 4}}']),
+])
+def test_data_bound_forms_agree_on_both_tiers(spark, schema, docs):
+    got = _paths(_both_tiers(spark, docs, schema))
+    assert got["python"] == got["variant"]
+    assert any(ok is False for ok, _ in got["python"]) and any(ok for ok, _ in got["python"])
+
+
+@pytest.mark.parametrize("schema, docs", [
+    # a pointer through an array element named by a lambda variable
+    ({"properties": {"xs": {"items": {"properties": {"lo": {"maximum": {"$data": "1/hi"}}}}}}},
+     ['{"xs": [{"lo": 1, "hi": 2}]}', '{"xs": [{"lo": 1, "hi": 2}, {"lo": 3, "hi": 2}]}']),
+    ({"properties": {"n": {"multipleOf": {"$data": "1/d"}}}}, ['{"n": 6, "d": 3}', '{"n": 7, "d": 3}']),
+    ({"properties": {"n": {"enum": {"$data": "1/ok"}}}}, ['{"n": 1, "ok": [1, 2]}', '{"n": 3, "ok": [1]}']),
+])
+def test_data_consumers_without_variant_bound_fall_back(spark, schema, docs):
+    """Only the comparators read a Variant bound: other `$data` consumers
+    (and pointers through a lambda variable) still validate on the Python
+    tier, with its verdicts."""
+    from json_schema_clj_spark.plans.compiler import ColumnBackendUnsupported
+
+    df = spark.createDataFrame(list(enumerate(docs)), "i int, data_json string")
+    with pytest.raises(ColumnBackendUnsupported):
+        engine.validate_json_column(df, schema, force_backend="variant")
+    auto = engine.validate_json_column(df, schema).orderBy("i").collect()
+    assert [r["valid"] for r in auto] == [True, False]
+    assert [r["valid"] for r in auto] == [not engine.validate(schema, json.loads(d))["errors"] for d in docs]
+
+
+def test_crossfield_schema_runs_without_python(spark):
+    """A sibling-field `$data` bound (lo <= hi) compiles on the Variant
+    tier: no Python node in the plan, and the inverted pair fails."""
+    schema = {"type": "object", "required": ["lo", "hi"],
+              "properties": {"lo": {"type": "integer", "minimum": 0, "maximum": {"$data": "1/hi"}},
+                             "hi": {"type": "integer", "minimum": 0}}}
+    df = _df(spark, [{"lo": 1, "hi": 2}, {"lo": 3, "hi": 2}])
+    out = engine.validate_json_column(df, schema)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert [r["valid"] for r in out.collect()] == [True, False]

@@ -597,8 +597,8 @@ def test_python_tier_runs_its_udf_once(spark):
     docs = spark.createDataFrame(
         [(0, '{"lo": 1, "hi": 2}'), (1, '{"lo": 3, "hi": 2}')], "ingest_id long, doc_json string"
     )
-    schema = {"properties": {"lo": {"maximum": {"$data": "1/hi"}}}}  # $data: Python tier
-    out = validate_json_column(docs, schema, json_col="doc_json")
+    schema = {"properties": {"lo": {"maximum": {"$data": "1/hi"}}}}
+    out = validate_json_column(docs, schema, json_col="doc_json", force_backend="python")
     sink = violation_rows(out, ["ingest_id"], prefilter=~F.col("valid"))
     assert executed(sink).count("ArrowEvalPython") == 1, executed(sink)
     assert [r["ingest_id"] for r in sink.collect()] == [1]

@@ -1,11 +1,11 @@
-"""Variant-tier conformance: the full authored draft suite (+ the
+"""Variant-tier conformance: the full authored draft and v5 suites (+ the
 reference's v5/custom fixtures when that checkout is present) run as pure
 Catalyst over parsed Variant values.
 
 All compilable schemas are folded into ONE Spark job: every (schema_idx,
 doc) row evaluates `CASE schema_idx WHEN i THEN ok_i END` — the compile-
-once-run-everywhere shape.  Schemas the variant backend declines ($data,
-deep recursion, non-scalar enum members) must raise
+once-run-everywhere shape.  Schemas the variant backend declines ($data
+outside the comparators, deep recursion, non-scalar enum members) must raise
 ColumnBackendUnsupported and are counted as clean fallbacks, never wrong
 verdicts.
 """
@@ -39,8 +39,10 @@ def _all_cases():
             for p in sorted(glob.glob(f"{HERE}/fixtures/{d}/*.json"))
             if not p.endswith("/bignum.json")
         ]
+    # the authored v5 fixtures ($data, switch, custom keywords) always run;
     # the reference's own v5/custom fixtures ride along when the checkout
-    # is present; the authored corpus runs either way
+    # is present
+    paths += sorted(glob.glob(f"{HERE}/fixtures/v5/*.json"))
     paths += sorted(glob.glob(f"{REF}/test/v5/*.json"))
     paths += [p for p in [f"{REF}/test/custom-scenarios/nested_ref.json"] if os.path.exists(p)]
     return load_cases(paths)

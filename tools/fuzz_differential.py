@@ -126,6 +126,7 @@ def main() -> int:
 
     n_rows = 30
     bad_schemas = 0
+    on_variant = 0
     for si in range(start_seed, start_seed + n_schemas):
         rng = random.Random(si)
         schema = rand_schema(rng)
@@ -151,6 +152,7 @@ def main() -> int:
         try:
             var_out = engine.validate_json_column(jdf, schema, force_backend="variant")
             var_valid = [r["valid"] for r in var_out.collect()]
+            on_variant += 1
         except ColumnBackendUnsupported:
             var_valid = None
 
@@ -183,7 +185,8 @@ def main() -> int:
             )
 
     spark.stop()
-    print(f"[fuzz] done: {n_schemas} schemas from seed {start_seed}, {bad_schemas} disagreeing")
+    print(f"[fuzz] done: {n_schemas} schemas from seed {start_seed}, {bad_schemas} disagreeing, "
+          f"{on_variant} compiled on the Variant tier")
     return bad_schemas
 
 
