@@ -20,7 +20,8 @@ Workload (the same one benchmarked in BENCH/BASELINE.md):
 2. uniqueness on image_id and phash,
 3. magic-number format conformance on (bytes, fmt),
 4. per-column stats profile,
-5. KS/PSI drift of each partition's width distribution vs the corpus.
+5. drift (KS, PSI, chi-square, EMD) of each partition's width distribution
+   vs the pooled first half of the partitions, from one scan.
 
 Outputs land under --output as parquet; a single JSON summary line goes to
 stdout (and --output/summary.json) for orchestrators to scrape.
@@ -241,15 +242,8 @@ def main(argv=None):
         )
         # drift: first half of partitions is the baseline population
         half = df.agg((F.max(args.part_col) / 2).cast("int")).first()[0] or 0
-        base = DR.histogram_sketch(
-            df.where(F.col(args.part_col) <= half), "w", args.part_col, 0, 4200
-        ).withColumn("group", F.lit(0))
-        base = base.groupBy("group", "bucket").agg(F.sum("n").alias("n"))
-        cur = DR.histogram_sketch(df, "w", args.part_col, 0, 4200)
-        DR.drift_scores(
-            base.crossJoin(cur.select("group").distinct().withColumnRenamed("group", "g"))
-            .select(F.col("g").alias("group"), "bucket", "n"),
-            cur,
+        DR.pooled_drift_scores(
+            df, "w", args.part_col, F.col(args.part_col) <= half, 0, 4200
         ).write.mode("overwrite").parquet(f"{out}/drift")
 
         # triage view: k example rows per violated keyword path, derived

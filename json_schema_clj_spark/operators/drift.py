@@ -1,13 +1,15 @@
-"""Distribution-drift detection: two-sample KS and PSI over per-group
-histogram sketches (north-star extension; no analog in the single-document
-reference — golden fixtures come from the seeded generator, FIXTURES.md §5).
+"""Distribution-drift detection: two-sample KS, PSI, Pearson chi-square and
+Wasserstein-1 (EMD) over per-group histogram sketches (north-star
+extension; no analog in the single-document reference — golden fixtures
+come from the seeded generator, FIXTURES.md §5).
 
 Scale shape: the full table collapses to |groups| × |buckets| sketch rows
 in ONE partial-aggregated pass (`width_bucket`-style bucketing + count).
-The KS/PSI arithmetic then runs on that tiny sketch table — one
-`groupBy(group)` gathers each group's two bucket→count maps, and one
-`aggregate` walks their sorted bucket keys — so nothing is collected to the
-driver and the same code works when |groups| is large.
+All four lenses then run on that tiny sketch table — one `groupBy(group)`
+gathers each group's two bucket→count maps, and one `aggregate` walks their
+sorted bucket keys and folds every lens at once — so nothing is collected to
+the driver, no sketch is joined to another, and the same code works when
+|groups| is large.
 
 The fixed arithmetic is written as SQL strings (`selectExpr`/`F.expr`):
 under PySpark 4 every Column built in Python costs about a dozen Py4J round
@@ -16,7 +18,7 @@ trips for call-site capture, while a SQL string is parsed in the JVM.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -72,31 +74,75 @@ def histogram_sketch(
     )
 
 
-def _ks_psi(per_group: DataFrame, eps: float, *extra: str) -> DataFrame:
-    """(group, ks, psi, *extra) from one row per group carrying `base`/`cur`
-    bucket→count maps and their totals `tot_base`/`tot_cur`; `extra` are
-    SQL expressions over the scores `s.ks` and `s.psi`.
+# exact integer type of the EMD fold: cum·tot reaches 10^24 at 10^12 rows
+_DEC = "DECIMAL(38,0)"
 
-    Walks the sorted union of both maps' buckets (a bucket missing from one
-    side counts 0) with running CDFs, so each sum adds the same terms in the
-    same bucket order as a window cumsum over the full-outer-joined sketch
-    rows.  SQL `ln` is the same `Log` expression as `F.log`."""
+
+# every lens, as SQL over the walk's result `s` and the group totals
+_LENSES = (
+    "`group`",
+    "s.ks AS ks",
+    "s.psi AS psi",
+    "if(s.k > 0, s.chi2, NULL) AS chi2",
+    "if(s.k > 0, s.k - 1, NULL) AS dof",
+    "s.emd AS emd_x",
+    "tot_base",
+    "tot_cur",
+)
+
+
+def _scores(per_group: DataFrame, eps: float, cols=_LENSES) -> DataFrame:
+    """`cols` (default: group, ks, psi, chi2, dof, emd_x, tot_base, tot_cur)
+    from one row per group carrying `base`/`cur` bucket→count maps and their
+    totals `tot_base`/`tot_cur`.
+
+    `map_zip_with` pairs both maps' buckets (a bucket missing from one side
+    counts 0), and one `aggregate` walks the pairs sorted by bucket and
+    folds every lens in bucket order:
+
+    KS   = max_b |CDF_base(b) - CDF_cur(b)|
+    PSI  = Σ_b (p_b - q_b) · ln(p_b / q_b)   with ε-smoothed proportions
+    chi2 = Σ_b (n_cur_b - e_b)² / e_b,  e_b = tot_cur · n_base_b / tot_base,
+           over buckets with baseline mass; dof = (#such buckets) - 1, both
+           NULL for a group without baseline mass or without current mass
+           (no expected count is positive)
+    emd_x = Σ_b |cum_base(b)·tot_cur - cum_cur(b)·tot_base| · (b' - b)
+
+    `emd_x` is the integer numerator of the Wasserstein-1 distance between
+    the normalized histograms, W1 = bucket_width · emd_x / (tot_base ·
+    tot_cur); the division is left to the caller so two engines never
+    disagree by a ULP.  On a sparse sketch the CDF gap persists over absent
+    bucket indices, so the gap after bucket b is weighted by the distance
+    to the next present bucket b'.  The fold carries the previous bucket
+    and its gap, exact in DECIMAL(38,0); the last bucket's gap is 0 (both
+    cumulative counts have reached their totals).  SQL `ln` is the same
+    `Log` expression as `F.log`."""
     e = _dbl(eps)
     walk = f"""aggregate(
-        transform(
-            array_sort(array_distinct(concat(map_keys(base), map_keys(cur)))),
-            b -> named_struct(
-                'p', coalesce(base[b], 0) / greatest(tot_base, 1),
-                'q', coalesce(cur[b], 0) / greatest(tot_cur, 1))),
-        named_struct('cdf_p', 0D, 'cdf_q', 0D, 'ks', 0D, 'psi', 0D),
+        array_sort(map_values(map_zip_with(base, cur, (b, nb, nc) -> named_struct(
+            'b', CAST(b AS BIGINT),
+            'nb', coalesce(nb, 0L),
+            'nc', coalesce(nc, 0L),
+            'p', coalesce(nb, 0) / greatest(tot_base, 1),
+            'q', coalesce(nc, 0) / greatest(tot_cur, 1),
+            'e', CASE WHEN nb > 0 AND tot_cur > 0 THEN tot_cur * nb / tot_base END)))),
+        named_struct('cdf_p', 0D, 'cdf_q', 0D, 'ks', 0D, 'psi', 0D, 'chi2', 0D, 'k', 0L,
+                     'cum_b', 0L, 'cum_c', 0L, 'prev', 0L,
+                     'gap', CAST(0 AS {_DEC}), 'emd', CAST(0 AS {_DEC})),
         (acc, x) -> named_struct(
             'cdf_p', acc.cdf_p + x.p,
             'cdf_q', acc.cdf_q + x.q,
             'ks', greatest(acc.ks, abs((acc.cdf_p + x.p) - (acc.cdf_q + x.q))),
-            'psi', acc.psi + (x.p - x.q) * ln((x.p + {e}) / (x.q + {e})))) AS s"""
-    return per_group.selectExpr("`group`", walk).selectExpr(
-        "`group`", "s.ks AS ks", "s.psi AS psi", *extra
-    )
+            'psi', acc.psi + (x.p - x.q) * ln((x.p + {e}) / (x.q + {e})),
+            'chi2', if(x.e IS NULL, acc.chi2, acc.chi2 + (x.nc - x.e) * (x.nc - x.e) / x.e),
+            'k', acc.k + if(x.e IS NULL, 0L, 1L),
+            'cum_b', acc.cum_b + x.nb,
+            'cum_c', acc.cum_c + x.nc,
+            'prev', x.b,
+            'gap', abs(CAST(acc.cum_b + x.nb AS {_DEC}) * CAST(tot_cur AS {_DEC})
+                - CAST(acc.cum_c + x.nc AS {_DEC}) * CAST(tot_base AS {_DEC})),
+            'emd', acc.emd + acc.gap * CAST(x.b - acc.prev AS {_DEC}))) AS s"""
+    return per_group.selectExpr("`group`", "tot_base", "tot_cur", walk).selectExpr(*cols)
 
 
 def drift_scores(
@@ -104,13 +150,10 @@ def drift_scores(
     current_sketch: DataFrame,
     eps: float = 1e-6,
 ) -> DataFrame:
-    """Per-group two-sample KS statistic + PSI between a baseline sketch and
-    a current sketch (same bucketing, one row per (group, bucket) as
-    `histogram_sketch` gives).  A bucket missing from one sketch counts 0;
-    a NULL group is not scored.
-
-    KS  = max_b |CDF_base(b) - CDF_cur(b)|
-    PSI = Σ_b (p_b - q_b) · ln(p_b / q_b)   with ε-smoothed proportions.
+    """Per-group KS, PSI, chi-square and EMD (see `_scores` for the
+    columns) between a baseline sketch and a current sketch (same
+    bucketing, one row per (group, bucket) as `histogram_sketch` gives).
+    A bucket missing from one sketch counts 0; a NULL group is not scored.
 
     One tag-union of the two sketches and one `groupBy(group)` — no join.
     """
@@ -127,112 +170,20 @@ def drift_scores(
             F.expr("coalesce(sum(CASE WHEN NOT _base THEN n END), 0) AS tot_cur"),
         )
     )
-    return _ks_psi(per_group, eps)
+    return _scores(per_group, eps)
 
 
-def chi2_scores(
-    baseline_sketch: DataFrame,
-    current_sketch: DataFrame,
-) -> DataFrame:
-    """Per-group Pearson chi-square statistic of the current sample against
-    the baseline distribution (the third drift lens next to KS and PSI —
-    chi2 is the classic goodness-of-fit test on binned data and is the most
-    sensitive of the three to localized bucket shifts).
-
-    chi2 = Σ_b (observed_b − expected_b)² / expected_b  over buckets with
-    baseline mass, where expected_b = tot_cur · (n_base_b / tot_base);
-    `dof` = (#buckets with baseline mass) − 1.  Same scale shape as
-    drift_scores: runs entirely on the |groups|×|buckets| sketch table.
-    """
-    b = baseline_sketch.select("group", "bucket", F.col("n").alias("n_base"))
-    c = current_sketch.select("group", "bucket", F.col("n").alias("n_cur"))
-    j = b.join(c, on=["group", "bucket"], how="full_outer").fillna(
-        {"n_base": 0, "n_cur": 0}
-    )
-    tot = j.groupBy("group").agg(
-        F.sum("n_base").alias("tot_base"), F.sum("n_cur").alias("tot_cur")
-    )
-    j = j.join(tot, on="group").where(F.col("n_base") > 0)
-    e = F.col("tot_cur") * F.col("n_base") / F.col("tot_base")
-    term = (F.col("n_cur") - e) * (F.col("n_cur") - e) / e
-    return j.groupBy("group").agg(
-        F.sum(term).alias("chi2"),
-        (F.count(F.lit(1)) - F.lit(1)).alias("dof"),
-    )
-
-
-def emd_scores(
-    baseline_sketch: DataFrame,
-    current_sketch: DataFrame,
-) -> DataFrame:
-    """Per-group 1-D Wasserstein-1 (earth-mover's) distance between the
-    baseline and current histograms — the fourth drift lens next to
-    KS/PSI/chi2.  KS sees only the single worst CDF gap and PSI/chi2 are
-    re-binning-sensitive ratio tests; W1 integrates the WHOLE CDF gap, so
-    it is the lens that responds proportionally to a small mean shift
-    (the classic embedding/feature-drift signal).
-
-    On equal-width buckets, W1 between the normalized histograms is
-      (bucket_width / (tot_base · tot_cur)) · Σ_b |cum_base(b)·tot_cur −
-                                                   cum_cur(b)·tot_base|
-    This emits the integer numerator `emd_x = Σ_b |·|` plus the two totals
-    and leaves the division to the caller: every compared value is exact
-    integer arithmetic (order-free sums of products), so two engines can
-    never disagree by a ULP.  Products are carried as DECIMAL(38,0) —
-    cum·tot reaches 10^24 at 10^12-row scale, past BIGINT.
-
-    Runs entirely on the |groups|×|buckets| sketch table, like
-    drift_scores: a window cumsum + one agg; nothing is collected.
-    """
-    b = baseline_sketch.select("group", "bucket", F.col("n").alias("n_base"))
-    c = current_sketch.select("group", "bucket", F.col("n").alias("n_cur"))
-    j = b.join(c, on=["group", "bucket"], how="full_outer").fillna(
-        {"n_base": 0, "n_cur": 0}
-    )
-    tot = j.groupBy("group").agg(
-        F.sum("n_base").alias("tot_base"), F.sum("n_cur").alias("tot_cur")
-    )
-    j = j.join(tot, on="group")
-    w = Window.partitionBy("group").orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    dec = "decimal(38,0)"
-    cum_base = F.sum("n_base").over(w).cast(dec)
-    cum_cur = F.sum("n_cur").over(w).cast(dec)
-    diff = cum_base * F.col("tot_cur").cast(dec) - cum_cur * F.col("tot_base").cast(dec)
-    # The sketch is sparse (only buckets with mass appear), but the CDF gap
-    # persists across absent bucket indices — each row's |diff| covers the
-    # index range [bucket, next_present_bucket), so weight by that gap.
-    # The trailing row's diff is identically 0 (both CDFs have reached
-    # their totals), so the open-ended tail contributes nothing either way.
-    wl = Window.partitionBy("group").orderBy("bucket")
-    gap = (
-        F.coalesce(F.lead("bucket").over(wl), F.col("bucket") + 1) - F.col("bucket")
-    ).cast(dec)
-    scored = j.select("group", "tot_base", "tot_cur", (F.abs(diff) * gap).alias("d"))
-    return scored.groupBy("group").agg(
-        F.sum("d").cast(dec).alias("emd_x"),
-        F.first("tot_base").alias("tot_base"),
-        F.first("tot_cur").alias("tot_cur"),
-    )
-
-
-def detect_drift(
+def _pooled(
     df: DataFrame,
     value_col: str,
     group_col: str,
     baseline_filter: Column,
     lo: float,
     hi: float,
-    buckets: int = 64,
-    ks_threshold: float = 0.1,
-    psi_threshold: float = 0.2,
+    buckets: int,
 ) -> DataFrame:
-    """Compare EVERY group's distribution against the pooled baseline rows
-    (the FIXTURES.md §5 shape: baseline partitions pooled, each partition
-    scored against it; rows whose `baseline_filter` is NULL are not
-    baseline, a NULL group feeds the pool but is not scored); flags groups
-    exceeding either threshold.
+    """One row per non-NULL group with its `cur` bucket→count map and
+    `tot_cur`, beside the pooled baseline's `base` map and `tot_base`.
 
     One scan: a single (group, bucket) sketch counts every row and the
     baseline rows side by side, and one `groupBy(group)` folds it into each
@@ -268,8 +219,47 @@ def detect_drift(
         "transform_values(counts, (b, c) -> c.n) AS cur",
         "aggregate(map_values(counts), 0L, (t, c) -> t + c.n) AS tot_cur",
     )
-    return _ks_psi(
-        per_group.crossJoin(pooled.hint("broadcast")),
+    return per_group.crossJoin(pooled.hint("broadcast"))
+
+
+def pooled_drift_scores(
+    df: DataFrame,
+    value_col: str,
+    group_col: str,
+    baseline_filter: Column,
+    lo: float,
+    hi: float,
+    buckets: int = 64,
+) -> DataFrame:
+    """Score EVERY group's distribution against the pooled baseline rows
+    (the FIXTURES.md §5 shape: baseline partitions pooled, each partition
+    scored against it; rows whose `baseline_filter` is NULL are not
+    baseline, a NULL group feeds the pool but is not scored), reading the
+    table once.  Same columns as `drift_scores`."""
+    return _scores(_pooled(df, value_col, group_col, baseline_filter, lo, hi, buckets), 1e-6)
+
+
+def detect_drift(
+    df: DataFrame,
+    value_col: str,
+    group_col: str,
+    baseline_filter: Column,
+    lo: float,
+    hi: float,
+    buckets: int = 64,
+    ks_threshold: float = 0.1,
+    psi_threshold: float = 0.2,
+) -> DataFrame:
+    """(group, ks, psi, drifted): `pooled_drift_scores`' KS and PSI with a
+    flag on the groups exceeding either threshold, selected straight from
+    the walk (one projection, not a second one over all the lenses)."""
+    return _scores(
+        _pooled(df, value_col, group_col, baseline_filter, lo, hi, buckets),
         1e-6,
-        f"s.ks > {_dbl(ks_threshold)} OR s.psi > {_dbl(psi_threshold)} AS drifted",
+        (
+            "`group`",
+            "s.ks AS ks",
+            "s.psi AS psi",
+            f"s.ks > {_dbl(ks_threshold)} OR s.psi > {_dbl(psi_threshold)} AS drifted",
+        ),
     )

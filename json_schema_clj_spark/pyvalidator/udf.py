@@ -32,6 +32,9 @@ from .validator import compile_schema
 #: the record of a document that does not parse, as on the Variant tier
 PARSE_VIOLATION = ([], [], "$parse", "malformed JSON", "error")
 
+#: the record of a document nested too deep for the validator to walk
+DEPTH_VIOLATION = ([], [], "$depth", "nested beyond the validator's recursion limit", "error")
+
 
 def _reject_constant(name: str):
     raise ValueError(f"{name} is not JSON")
@@ -53,7 +56,13 @@ def make_validate_udf(schema: dict, config: Optional[dict] = None, loader=None):
                 # the recursion limit: a per-row record, never a job abort
                 violations.append([PARSE_VIOLATION])
                 continue
-            res = validator(value)
+            try:
+                res = validator(value)
+            except RecursionError:
+                # a document (or a recursive `$ref`) deeper than the
+                # interpreter's stack: a per-row record, never a job abort
+                violations.append([DEPTH_VIOLATION])
+                continue
             violations.append(
                 [
                     ([], [str(p) for p in e["path"]], None, e["message"], sev)

@@ -2984,25 +2984,14 @@ SELECT * FROM (
 # ---------------------------------------------------------------------------
 # 23. chi-square drift (third lens next to KS/PSI): Pearson goodness-of-fit
 # of each group's bucket counts against the pooled-baseline distribution,
-# on the same |groups|×|buckets| sketch table as drift_ks_psi_orders.
+# folded in the same sketch walk as drift_ks_psi_orders.
 
 
 def q_drift_chi2_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = t(spark, sf_dir, "orders")
-    pooled = (
-        DR.histogram_sketch(
-            df.where(F.col("o_orderkey") % 2 == 0),
-            "o_totalprice", "o_orderpriority", _DRIFT_LO, _DRIFT_HI, _DRIFT_BUCKETS,
-        )
-        .groupBy("bucket")
-        .agg(F.sum("n").alias("n"))
+    scores = DR.pooled_drift_scores(
+        t(spark, sf_dir, "orders"), "o_totalprice", "o_orderpriority",
+        F.col("o_orderkey") % 2 == 0, _DRIFT_LO, _DRIFT_HI, _DRIFT_BUCKETS,
     )
-    per_group = DR.histogram_sketch(
-        df, "o_totalprice", "o_orderpriority", _DRIFT_LO, _DRIFT_HI, _DRIFT_BUCKETS
-    )
-    groups = per_group.select("group").distinct()
-    base = groups.crossJoin(F.broadcast(pooled))
-    scores = DR.chi2_scores(base, per_group)
     return scores.select(
         "group", F.round("chi2", 6).alias("chi2"), "dof"
     ).orderBy("group")
@@ -4448,26 +4437,15 @@ ORDER BY shard, "column", keyword
 # ---------------------------------------------------------------------------
 # 40. Wasserstein-1 (EMD) drift — fourth lens next to KS/PSI/chi2: the
 # integral of the CDF gap, integer-exact via cross-multiplied cumulative
-# counts (operators/drift.py emd_scores).  Same pooled-baseline-vs-group
-# sketch construction as the other drift queries.
+# counts, folded in the same pooled-baseline sketch walk as the other drift
+# queries (operators/drift.py pooled_drift_scores).
 
 
 def q_drift_emd_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = t(spark, sf_dir, "orders")
-    pooled = (
-        DR.histogram_sketch(
-            df.where(F.col("o_orderkey") % 2 == 0),
-            "o_totalprice", "o_orderpriority", _DRIFT_LO, _DRIFT_HI, _DRIFT_BUCKETS,
-        )
-        .groupBy("bucket")
-        .agg(F.sum("n").alias("n"))
+    scores = DR.pooled_drift_scores(
+        t(spark, sf_dir, "orders"), "o_totalprice", "o_orderpriority",
+        F.col("o_orderkey") % 2 == 0, _DRIFT_LO, _DRIFT_HI, _DRIFT_BUCKETS,
     )
-    per_group = DR.histogram_sketch(
-        df, "o_totalprice", "o_orderpriority", _DRIFT_LO, _DRIFT_HI, _DRIFT_BUCKETS
-    )
-    groups = per_group.select("group").distinct()
-    base = groups.crossJoin(F.broadcast(pooled))
-    scores = DR.emd_scores(base, per_group)
     return scores.select(
         "group",
         F.col("emd_x").cast("long").alias("emd_x"),

@@ -1,11 +1,12 @@
 """Streaming distribution-drift monitoring — the streaming lift of the
-batch KS/PSI/chi2 detectors (an extension; the reference is batch-only,
+batch KS/PSI/chi2/EMD detectors (an extension; the reference is batch-only,
 SURVEY.md §2.7).
 
 Per micro-batch the raw rows collapse to a |groups|×|buckets| histogram
 sketch which is appended to an epoch-keyed parquet store; drift is then
 scored on the CUMULATIVE sketch (sum over epochs) against a static
-baseline sketch.  Two properties make this the 10^12-row shape:
+baseline sketch, every lens in the one `drift_scores` walk.  Two
+properties make this the 10^12-row shape:
 
 * per-epoch cost is O(|batch| + |store sketch rows|) — old batches are
   never rescanned, only their already-aggregated bucket counts are summed;
@@ -20,20 +21,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.drift import chi2_scores, drift_scores, histogram_sketch
+from ..operators.drift import drift_scores, histogram_sketch
 
 
 def cumulative_drift_scores(
     baseline_sketch: DataFrame, cumulative_sketch: DataFrame
 ) -> DataFrame:
-    """(group, ks, psi, chi2, dof): all three drift lenses on a sketch pair.
-    The baseline is |buckets| rows — replicated per group via a broadcast
-    cross join, never a shuffle of the sketch store."""
+    """(group, ks, psi, chi2, dof, emd_x, tot_base, tot_cur): every drift
+    lens on a sketch pair, from one `drift_scores` walk — no join between
+    lenses.  The baseline is |buckets| rows — replicated per group via a
+    broadcast cross join, never a shuffle of the sketch store."""
     groups = cumulative_sketch.select("group").distinct()
     base = groups.crossJoin(F.broadcast(baseline_sketch.select("bucket", "n")))
-    kp = drift_scores(base, cumulative_sketch)
-    c2 = chi2_scores(base, cumulative_sketch)
-    return kp.join(c2, on="group")
+    return drift_scores(base, cumulative_sketch)
 
 
 def drift_stream(
@@ -53,8 +53,9 @@ def drift_stream(
     the epoch's store subdir, score the cumulative store against
     `baseline_sketch` (a static (bucket, n) DataFrame — e.g. the pooled
     histogram of a reference period), and overwrite the epoch's scores
-    subdir with (group, ks, psi, chi2, dof).  Restart resumes from
-    `checkpoint_dir`; a replayed epoch rewrites its own subdirs."""
+    subdir with every lens (the `cumulative_drift_scores` columns).
+    Restart resumes from `checkpoint_dir`; a replayed epoch rewrites its
+    own subdirs."""
     base_local = baseline_sketch.select("bucket", "n")
 
     def process(batch_df: DataFrame, epoch_id: int):

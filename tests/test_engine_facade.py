@@ -231,6 +231,32 @@ def test_hostile_rows_are_records_on_both_tiers(spark):
     assert got["python"][len(HOSTILE) - 1] == (True, [])
 
 
+@pytest.mark.parametrize("backend", [None, "python"])
+def test_deep_recursion_is_a_record_not_an_abort(spark, backend):
+    """A document nested deeper than the validator can recurse, under a
+    recursive `$ref` the Variant tier declines (so auto dispatch lands on
+    the Arrow-Python tier too), gets a per-row `$depth` record: no
+    PythonException escapes, and the shallow row in the same batch gets
+    the result it gets alone."""
+    from pyspark.errors import PythonException
+
+    schema = {"type": "array", "items": {"$ref": "#"}}
+    deep, shallow = "[" * 300 + "]" * 300, "[[], [1]]"
+    df = spark.createDataFrame([(0, deep), (1, shallow)], "i int, data_json string")
+
+    def run(frame):
+        try:
+            rows = engine.validate_json_column(frame, schema, force_backend=backend).orderBy("i").collect()
+        except PythonException as e:
+            raise AssertionError(f"a deep row aborted the job: {e}")
+        return [(r["valid"], [tuple(v) for v in r["violations"]]) for r in rows]
+
+    got = run(df)
+    assert got[0] == (False, [([], [], "$depth", "nested beyond the validator's recursion limit", "error")])
+    assert got[1] == run(df.where("i = 1"))[0]
+    assert got[1][0] is False and [v[1] for v in got[1][1]] == [["1", "0"]]
+
+
 def _both_tiers(spark, docs, schema, config=None):
     """{backend: [(valid, violation records)]} over `docs` in order."""
     df = spark.createDataFrame(list(enumerate(docs)), "i int, data_json string")

@@ -5,8 +5,9 @@ self-validation) — pure driver-side, no Spark session needed.
 Fixture provenance: /root/reference/test/v5/*.json,
 /root/reference/test/v5/$data/*.json,
 /root/reference/test/custom-scenarios/nested_ref.json,
-/root/reference/resources/core-schema.json (all test DATA, loaded
-read-only; the validator implementation is from scratch).
+and the draft-04 meta-schema, authored by hand from the published spec as
+tests/fixtures/draft-04-schema.json (all test DATA, loaded read-only; the
+validator implementation is from scratch).
 """
 
 import glob
@@ -55,13 +56,15 @@ def test_custom_scenarios():
     _run_files([f"{REF}/test/custom-scenarios/nested_ref.json"])
 
 
-@needs_reference
 def test_meta_schema_self_validation():
-    # draft-04 meta-schema validates itself (core_test.clj:37-41)
-    with open(f"{REF}/resources/core-schema.json") as f:
+    # draft-04 meta-schema validates itself (core_test.clj:37-41) and
+    # rejects malformed schemas
+    with open(os.path.join(os.path.dirname(__file__), "fixtures", "draft-04-schema.json")) as f:
         meta = json.load(f)
     res = validate(meta, meta)
     assert res["errors"] == []
+    for bad in ({"type": "text"}, {"minLength": -1}, {"required": []}, {"exclusiveMinimum": True}):
+        assert validate(meta, bad)["errors"], bad
 
 
 def test_blank_string_quirk():

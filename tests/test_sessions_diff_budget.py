@@ -110,7 +110,7 @@ def _sketch(spark, rows):
 
 def test_emd_zero_for_identical_sketches(spark):
     s = _sketch(spark, [("g", 0, 10), ("g", 3, 5), ("g", 7, 1)])
-    out = DR.emd_scores(s, s).collect()
+    out = DR.drift_scores(s, s).collect()
     assert len(out) == 1 and int(out[0]["emd_x"]) == 0
 
 
@@ -121,13 +121,13 @@ def test_emd_hand_computed_with_sparse_gap(spark):
     # (gap weight 3 = next present bucket 3 - 0); at b=3 diff=0.
     base = _sketch(spark, [("g", 0, 2)])
     cur = _sketch(spark, [("g", 3, 2)])
-    out = DR.emd_scores(base, cur).collect()[0]
+    out = DR.drift_scores(base, cur).collect()[0]
     assert int(out["emd_x"]) == 12
     assert (out["tot_base"], out["tot_cur"]) == (2, 2)
     # shift sensitivity: W1 grows linearly with shift distance; KS would
     # stay flat at its max for any disjoint pair
     cur2 = _sketch(spark, [("g", 1, 2)])
-    assert int(DR.emd_scores(base, cur2).collect()[0]["emd_x"]) == 4
+    assert int(DR.drift_scores(base, cur2).collect()[0]["emd_x"]) == 4
 
 
 # ---------------------------------------------------------------------------

@@ -2,17 +2,25 @@
 golden expectations derived from the seeded images generator."""
 
 import math
+import os
 from collections import Counter, defaultdict
 
+import pytest
 from pyspark.sql import functions as F
 
-from json_schema_clj_spark.operators.drift import detect_drift, drift_scores, histogram_sketch
+from json_schema_clj_spark.operators.drift import (
+    detect_drift,
+    drift_scores,
+    histogram_sketch,
+    pooled_drift_scores,
+)
 from json_schema_clj_spark.operators.referential import coverage, dangling, referential_violations
 from json_schema_clj_spark.operators.stats import column_profile
 from json_schema_clj_spark.operators.uniqueness import duplicates, uniqueness_violations
 from json_schema_clj_spark.sources.images import images_df
 
 N = 10_000
+SF01 = "/root/testdata/sf0.01"
 
 
 def test_column_profile(spark):
@@ -155,29 +163,57 @@ def test_drift_detection(spark):
 
 
 def _drift_reference(base, cur, eps=1e-6):
-    """Pure-Python KS/PSI per group from {group: Counter(bucket -> n)}
-    baseline and current counts: missing buckets count 0, CDFs summed in
-    bucket order."""
+    """Pure-Python (ks, psi, chi2, dof, emd_x, tot_base, tot_cur) per group
+    from {group: Counter(bucket -> n)} baseline and current counts: missing
+    buckets count 0, sums run in bucket order, chi2/dof are None without
+    baseline or current mass, and each bucket's CDF gap is weighted by the
+    distance to the next present bucket."""
     out = {}
     for g in set(base) | set(cur):
         b, c = base.get(g, Counter()), cur.get(g, Counter())
-        tb, tc = max(sum(b.values()), 1), max(sum(c.values()), 1)
-        cdf_b = cdf_c = ks = psi = 0.0
-        for k in sorted(set(b) | set(c)):
+        nb, nc = sum(b.values()), sum(c.values())
+        tb, tc = max(nb, 1), max(nc, 1)
+        cdf_b = cdf_c = ks = psi = chi2 = 0.0
+        dof, cum_b, cum_c, emd = -1, 0, 0, 0
+        keys = sorted(set(b) | set(c))
+        for i, k in enumerate(keys):
             p, q = b[k] / tb, c[k] / tc
             cdf_b += p
             cdf_c += q
             ks = max(ks, abs(cdf_b - cdf_c))
             psi += (p - q) * math.log((p + eps) / (q + eps))
-        out[g] = (ks, psi)
+            if b[k] and nc:
+                e = nc * b[k] / nb
+                chi2 += (c[k] - e) * (c[k] - e) / e
+                dof += 1
+            cum_b, cum_c = cum_b + b[k], cum_c + c[k]
+            nxt = keys[i + 1] if i + 1 < len(keys) else k + 1
+            emd += abs(cum_b * nc - cum_c * nb) * (nxt - k)
+        out[g] = (ks, psi, *((chi2, dof) if dof >= 0 else (None, None)), emd, nb, nc)
     return out
 
 
+def _assert_drift_rows(got, want):
+    """Spark rows keyed by group against `_drift_reference`: floats within
+    1e-12 (relative past 1), integers and NULLs exactly."""
+    assert set(got) == set(want)
+    for g, ref in want.items():
+        r = got[g]
+        row = (r["ks"], r["psi"], r["chi2"], r["dof"], int(r["emd_x"]), r["tot_base"], r["tot_cur"])
+        for x, y in zip(row, ref):
+            if isinstance(y, float):
+                assert abs(x - y) <= 1e-12 * max(1.0, abs(y)), (g, row, ref)
+            else:
+                assert x == y, (g, row, ref)
+
+
 def test_drift_matches_python_reference_on_edge_rows(spark):
-    """detect_drift and drift_scores against a pure-Python KS/PSI: a NULL
-    group feeds the pooled baseline but is not scored, NULL values count
-    nowhere, a NULL baseline flag is not baseline, out-of-range values clamp
-    into the edge buckets, and a group may lack baseline buckets."""
+    """detect_drift, pooled_drift_scores and drift_scores against a
+    pure-Python reference of every lens: a NULL group feeds the pooled
+    baseline but is not scored, NULL values count nowhere, a NULL baseline
+    flag is not baseline, out-of-range values clamp into the edge buckets,
+    a group may lack baseline mass or exist only in the baseline sketch,
+    and absent bucket indices leave gaps between present ones."""
     lo, hi, nb = 0.0, 10.0, 5
     rows = (
         [("a", float(v), True) for v in (0.5, 1.5, 1.7, 3.2, 9.9)]
@@ -208,13 +244,23 @@ def test_drift_matches_python_reference_on_edge_rows(spark):
     assert [f.dataType.simpleString() for f in got.schema.fields] == ["string", "double", "double", "boolean"]
     by_group = {r["group"]: r for r in got.collect()}
     assert set(by_group) == set(want)
-    for g, (ks, psi) in want.items():
+    for g, (ks, psi, *_) in want.items():
         r = by_group[g]
         assert abs(r["ks"] - ks) <= 1e-12 and abs(r["psi"] - psi) <= 1e-12, (g, r, ks, psi)
         assert r["drifted"] == (ks > 0.5 or psi > 100.0)
 
-    # drift_scores on two sketches: per-group baselines, one group present
-    # only in the baseline, and NULL groups on both sides
+    pooled_scores = pooled_drift_scores(df, "v", "g", F.col("base"), lo, hi, nb)
+    assert pooled_scores.columns == [
+        "group", "ks", "psi", "chi2", "dof", "emd_x", "tot_base", "tot_cur"
+    ]
+    assert [f.dataType.simpleString() for f in pooled_scores.schema.fields] == [
+        "string", "double", "double", "double", "bigint", "decimal(38,0)", "bigint", "bigint"
+    ]
+    _assert_drift_rows({r["group"]: r for r in pooled_scores.collect()}, want)
+
+    # drift_scores on two sketches: per-group baselines, "c" without
+    # baseline mass, "z" only in the baseline, NULL groups on both sides,
+    # and "s" with disjoint sparse buckets
     sk = histogram_sketch(df, "v", "g", lo, hi, nb)
     base_sk = sk.where("`group` IS NULL OR `group` <> 'c'").selectExpr(
         "coalesce(`group`, 'z') AS `group`", "bucket", "n"
@@ -223,11 +269,23 @@ def test_drift_matches_python_reference_on_edge_rows(spark):
     for g, v, _ in rows:
         if v is not None and g != "c":
             base[g or "z"][bucket(v)] += 1
+    sparse = {"s": (Counter({0: 2, 2: 1}), Counter({3: 2, 4: 1}))}
+    for g, (b, c) in sparse.items():
+        base[g], cur[g] = b, c
+        base_sk = base_sk.unionByName(_counts_sketch(spark, g, b))
+        sk = sk.unionByName(_counts_sketch(spark, g, c))
     want = _drift_reference(base, cur)
-    got = {r["group"]: (r["ks"], r["psi"]) for r in drift_scores(base_sk, sk).collect()}
-    assert set(got) == {"a", "b", "c", "z"} == set(want)
-    for g, (ks, psi) in want.items():
-        assert abs(got[g][0] - ks) <= 1e-12 and abs(got[g][1] - psi) <= 1e-12, (g, got[g], ks, psi)
+    assert want["c"][2:4] == want["z"][2:4] == (None, None) and want["s"][4] > 0
+    got = {r["group"]: r for r in drift_scores(base_sk, sk).collect()}
+    assert set(got) == {"a", "b", "c", "s", "z"}
+    _assert_drift_rows(got, want)
+
+
+def _counts_sketch(spark, group, counts):
+    """A (group, bucket, n) sketch of one group's bucket counts."""
+    return spark.createDataFrame(
+        [(group, k, n) for k, n in counts.items()], "group string, bucket bigint, n bigint"
+    )
 
 
 def _final_plan(df) -> str:
@@ -262,6 +320,18 @@ def test_detect_drift_plan_reads_the_table_once(spark, tmp_path):
     plan = _final_plan(scores)
     assert plan.count("FileScan") == 1, plan
     assert "SortMergeJoin" not in plan, plan
+
+
+@pytest.mark.skipif(not os.path.isdir(SF01), reason="driver testdata not present")
+@pytest.mark.parametrize("query", ["drift_ks_psi_orders", "drift_chi2_orders", "drift_emd_orders"])
+def test_drift_queries_read_orders_once(spark, query):
+    """Every drift lens comes from the one pooled sketch walk: one scan of
+    `orders`, no join of sketches, no window."""
+    from json_schema_clj_spark.queries import QUERIES
+
+    plan = _final_plan(QUERIES[query](spark, SF01))
+    assert plan.count("FileScan") == 1, plan
+    assert "SortMergeJoin" not in plan and "Window" not in plan, plan
 
 
 def test_duplicates_plan_is_one_exchange(spark):
@@ -394,8 +464,6 @@ def test_quantile_interpolation_matches_continuous_definition(spark):
 
 
 def test_chi2_scores_identical_and_shifted(spark):
-    from json_schema_clj_spark.operators.drift import chi2_scores, histogram_sketch
-
     rows = [("a", float(i % 10)) for i in range(1000)]
     shifted = [("b", float((i % 10) if i % 5 else 9.0)) for i in range(1000)]
     df = spark.createDataFrame(rows + shifted, ["g", "v"])
@@ -407,7 +475,7 @@ def test_chi2_scores_identical_and_shifted(spark):
     base_rep = (
         both.select("group").distinct().crossJoin(SF.broadcast(base))
     )
-    out = {r["group"]: r for r in chi2_scores(base_rep, both).collect()}
+    out = {r["group"]: r for r in drift_scores(base_rep, both).collect()}
     # identical distribution → chi2 exactly 0; shifted → strictly positive
     assert out["a"]["chi2"] == 0.0
     assert out["b"]["chi2"] > 100.0

@@ -65,7 +65,7 @@ CALLOUTS = {
     "drift_ks_psi_orders": "one (group, bucket) sketch counts all rows and "
     "baseline rows together; its subtree shows twice here (per-group scores "
     "and the pooled one-row broadcast), AQE runs its exchange once and "
-    "reuses it; no SortMergeJoin",
+    "reuses it; one aggregate walk folds every lens; no SortMergeJoin, no Window",
     "tpch_q1_pricing_summary": "PushedFilters + partial/final HashAggregate",
     "join_revenue_by_nation": "broadcast dims, shuffle only on the fact agg",
     "dedup_minhash_lsh": "single ArrowEvalPython/MapInPandas stage for "

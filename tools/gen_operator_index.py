@@ -3,9 +3,8 @@
 Everything is derived mechanically so the table cannot drift from the
 registry: query names and order from `json_schema_clj_spark.queries.QUERIES`,
 the implementing module from each callable, oracle coverage from `ORACLES` /
-`__spark_entry__.oracle_sql()`, driver-green rounds from the recorded
-`CORRECTNESS_r0*.json`, and per-query clean floors from the newest
-`BENCH/bench_clean_r*.json`.  Re-run after registry changes:
+`__spark_entry__.oracle_sql()`, and driver-green rounds from the recorded
+`CORRECTNESS_r0*.json`.  Re-run after registry changes:
 
     python tools/gen_operator_index.py
 """
@@ -112,12 +111,6 @@ def main() -> None:
             ):
                 greens[q].append(f"r{rnd}")
 
-    floors: dict[str, float] = {}
-    clean_files = sorted(glob.glob(os.path.join(REPO, "BENCH", "bench_clean_r*.json")))
-    if clean_files:
-        with open(clean_files[-1]) as f:
-            floors = json.load(f)["queries"]
-
     lines = [
         "# OPERATORS — query → implementation → oracle → evidence",
         "",
@@ -126,13 +119,11 @@ def main() -> None:
         "query AND its DuckDB oracle SQL and compares rows + schema + value hash",
         "(`rows-only` = non-SQL-expressible, weaker row-count check);",
         "**driver-green** = rounds whose recorded CORRECTNESS file has the fully",
-        "green row; **floor s** = per-query clean-window minimum at sf0.1,",
-        f"local[32] ({os.path.basename(clean_files[-1]) if clean_files else 'n/a'});",
-        "**plan/correctness tests** = the audits that pin the physical plan and",
+        "green row; **plan/correctness tests** = the audits that pin the physical plan and",
         "operator semantics (tests/ paths).",
         "",
-        "| # | query | module | oracle | driver-green | floor s | plan/correctness tests |",
-        "|---|---|---|---|---|---|---|",
+        "| # | query | module | oracle | driver-green | plan/correctness tests |",
+        "|---|---|---|---|---|---|",
     ]
     for i, (name, fn) in enumerate(QUERIES.items()):
         mods = _modules_used(fn)
@@ -144,11 +135,9 @@ def main() -> None:
                 for t in MODULE_TESTS.get(m, MODULE_TESTS["queries"]).split(", ")
             )
         )
-        floor = floors.get(name)
         lines.append(
             f"| {i} | `{name}` | {', '.join(mods)} | {oracle} | "
-            f"{', '.join(greens[name]) or '—'} | "
-            f"{floor if floor is not None else '—'} | {tests} |"
+            f"{', '.join(greens[name]) or '—'} | {tests} |"
         )
 
     n_green = sum(1 for g in greens.values() if g)
