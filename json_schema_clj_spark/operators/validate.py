@@ -34,42 +34,30 @@ def with_validation(
     df: DataFrame,
     schema: dict,
     config: Optional[dict] = None,
-    out_col: str = "violations",
 ) -> DataFrame:
-    """Annotate every row with `violations array<struct>` + `valid boolean`.
+    """Annotate every row with `violations array<struct>` + `valid boolean`,
+    in one projection for every config.
 
-    `valid` counts only error-severity violations, matching the reference's
-    `valid == (empty? errors)` contract (warnings and deferreds don't fail
-    a document — utils.clj:50-71, custom_extensions_test.clj:91-128).
-
-    Without `config` both columns are added in one projection (one
-    analysis of the check tree); with `config`, `valid` reads the added
-    violations column, so it is a second step.
+    `valid` is the compiled `ok`, which only an error-severity check can
+    fail (``ir.simple_check``), so it matches the reference's
+    `valid == (empty? errors)` contract: warnings and deferreds are
+    recorded but never fail a document (utils.clj:50-71,
+    custom_extensions_test.clj:91-128).  A consumer that reads only
+    `valid` (verdict rollups) never touches the violation structs, and
+    Catalyst prunes their construction — ~2× on the flagship table scan.
+    The coalesce reads a residual NULL ok (custom register_keyword checks
+    under 3VL) as invalid, or valid=NULL rows would escape every ~valid
+    prefilter while carrying violations.
     """
     compiled: Compiled = compile_for_table(schema, df.schema, config=config)
-    if not config:
-        # no warnings rerouting → every violation is error-severity, so the
-        # compiled ok-conjunction IS validity.  Consumers that only read
-        # `valid` (verdict rollups) then never touch the violation structs
-        # and Catalyst prunes their construction entirely — ~2× on the
-        # flagship table scan.
-        # coalesce: a residual NULL ok (custom register_keyword checks
-        # under 3VL) must read as invalid, or valid=NULL rows escape every
-        # ~valid prefilter while carrying violations
-        return df.withColumns(
-            {out_col: compiled.violations, "valid": F.coalesce(compiled.ok, F.lit(False))}
-        )
-    annotated = df.withColumn(out_col, compiled.violations)
-    return annotated.withColumn(
-        "valid",
-        F.size(F.filter(F.col(out_col), lambda v: v["severity"] == F.lit("error"))) == F.lit(0),
+    return df.withColumns(
+        {"violations": compiled.violations, "valid": F.coalesce(compiled.ok, F.lit(False))}
     )
 
 
 def violation_rows(
     validated: DataFrame,
     id_cols: list[str],
-    out_col: str = "violations",
     prefilter=None,
     with_ordinal: bool = False,
 ) -> DataFrame:
@@ -89,13 +77,13 @@ def violation_rows(
     with map-side partials, instead of a count_distinct over a row-id
     (which at 10^9 violation rows is a full dedup aggregation of the sink).
     """
-    cond = prefilter if prefilter is not None else (F.size(F.col(out_col)) > 0)
+    cond = prefilter if prefilter is not None else (F.size(F.col("violations")) > 0)
     filtered = validated.where(cond)
     if not with_ordinal:
         # the violation struct's fields are the output columns, in order
-        return filtered.select(*id_cols, F.inline(F.col(out_col)))
+        return filtered.select(*id_cols, F.inline(F.col("violations")))
     return filtered.select(
-        *id_cols, F.posexplode(F.col(out_col)).alias("v_ord", "v")
+        *id_cols, F.posexplode(F.col("violations")).alias("v_ord", "v")
     ).select(*id_cols, "v_ord", "v.*")
 
 
@@ -103,7 +91,6 @@ def violation_examples(
     validated: DataFrame,
     id_cols: list[str],
     k: int = 3,
-    out_col: str = "violations",
     prefilter=None,
 ) -> DataFrame:
     """k deterministic EXAMPLE rows per violated keyword path — the "show
@@ -129,7 +116,7 @@ def violation_examples(
     (keyword_path, keyword, severity, rank 1..k, *id_cols, instance_path,
     message), rank ordered by the id tuple.
     """
-    rows = violation_rows(validated, id_cols, out_col=out_col, prefilter=prefilter)
+    rows = violation_rows(validated, id_cols, prefilter=prefilter)
     return violation_examples_from_rows(rows, id_cols, k=k)
 
 
@@ -161,11 +148,7 @@ def violation_examples_from_rows(
     )
 
 
-def verdicts(
-    validated: DataFrame,
-    part_col: str,
-    out_col: str = "violations",
-) -> DataFrame:
+def verdicts(validated: DataFrame, part_col: str) -> DataFrame:
     """Per-partition pass/fail rollup `(part, n_rows, n_fail, pass)`.
 
     Spark's hash aggregate does map-side partial aggregation automatically,
@@ -182,16 +165,12 @@ def verdicts(
     )
 
 
-def keyword_breakdown(
-    validated: DataFrame,
-    out_col: str = "violations",
-    prefilter=None,
-) -> DataFrame:
+def keyword_breakdown(validated: DataFrame, prefilter=None) -> DataFrame:
     """Violation counts per violated keyword path — the aggregate view a
     100 TB run actually reads first.  `violation_rows` (failing rows
     only), then a partial-aggregated groupBy on a low-cardinality key."""
     return (
-        violation_rows(validated, [], out_col, prefilter)
+        violation_rows(validated, [], prefilter)
         .groupBy(F.array_join("keyword_path", "/").alias("keyword_path"), "keyword", "severity")
         .agg(F.count(F.lit(1)).alias("n_violations"))
     )

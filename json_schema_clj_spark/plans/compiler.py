@@ -58,7 +58,8 @@ from pyspark.sql import types as T
 from pyspark.sql.classic.column import Column as _ClassicColumn
 
 from ..functions import formats
-from .ir import Compiled, Ctx, PathSeg, _typed_empty_array, merge, simple_check, violation
+from .ir import COMPARATOR_WORDING, Compiled, Ctx, PathSeg, _typed_empty_array, merge, render
+from .ir import simple_check, type_route, violation
 
 # ---------------------------------------------------------------------------
 
@@ -553,14 +554,15 @@ def _type_ok(tname, target: Column, dtype, ctx: Ctx) -> Column:
 
 @register_keyword("type")
 def _compile_type(value, schema, target: Column, ctx: Ctx) -> Compiled:
-    sev = ctx.severity("type")
+    sev = ctx.severity(type_route(value))  # the record's keyword stays `type`
     members = value if isinstance(value, list) else [value]
     oks = []
     for m in members:
         ok = _type_ok(m, target, ctx.dtype, ctx)
         if ok is None:
             # "Broken schema: unknown type" (core.clj:344-348)
-            return _const_fail(ctx, "type", f"Broken schema: unknown type {m}")
+            return simple_check(F.lit(False), ctx.schema_path, ctx.instance_path, "type",
+                                f"Broken schema: unknown type {m}", sev)
         oks.append(ok)
     ok_all = functools.reduce(operator.or_, oks)
     if isinstance(value, list):
@@ -729,7 +731,8 @@ def _compile_enum(value, schema, target: Column, ctx: Ctx) -> Compiled:
 
 def _compile_const(keyword: str):
     def fn(value, schema, target: Column, ctx: Ctx) -> Compiled:
-        sev = ctx.severity(keyword)
+        # both spellings route as `constant` (the reference's add-error key)
+        sev = ctx.severity("constant")
         data = _maybe_data(value, ctx)
         if data is not None:
             ref_col, ref_dt = data
@@ -779,8 +782,9 @@ def make_comparator(
     family: str,  # the JSON type family the keyword applies to
     value_expr: Callable[[Column, Any], Column],  # (value, dtype) -> compared
     bound_is_ok,  # predicate on a literal bound's python type
-    message: str,
 ):
+    noun, shown_op = COMPARATOR_WORDING[keyword]
+
     def fn(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled]:
         sev = ctx.severity(keyword)
         exclusive = None
@@ -799,8 +803,8 @@ def make_comparator(
             eff_op = {"ge": "gt", "le": "lt"}[op]
         data = _maybe_data(value, ctx, variant_bound=bound_is_ok is _is_number_py)
         if data is not None and _is_variant(data[1]):
-            return _variant_bound_check(data[0], _as(family, target, ctx.dtype), ctx, keyword,
-                                        eff_op, value_expr, message, exclusive if broken_flag else None)
+            return _variant_bound_check(data[0], target, family, ctx, keyword,
+                                        eff_op, value_expr, exclusive if broken_flag else None)
         if data is not None:
             bound_col, bound_dt = data
             # cond order mirrors core.clj:106-117: a null runtime bound
@@ -814,7 +818,7 @@ def make_comparator(
             if broken_flag:
                 return simple_check(
                     bound_col.isNull(), ctx.schema_path, ctx.instance_path, keyword,
-                    F.lit(f"exclusive flag should be boolean, got {exclusive}"), sev,
+                    F.lit(f"exclusive flag should be boolean, got {render(exclusive)}"), sev,
                 )
         else:
             if value is None:
@@ -822,12 +826,12 @@ def make_comparator(
             if not bound_is_ok(value):
                 return simple_check(
                     F.lit(False), ctx.schema_path, ctx.instance_path, keyword,
-                    f" could not compare with {value}", sev,
+                    f" could not compare with {render(value)}", sev,
                 )
             if broken_flag:
                 return simple_check(
                     F.lit(False), ctx.schema_path, ctx.instance_path, keyword,
-                    f"exclusive flag should be boolean, got {exclusive}", sev,
+                    f"exclusive flag should be boolean, got {render(exclusive)}", sev,
                 )
         view = _as(family, target, ctx.dtype)
         if view is None:
@@ -835,31 +839,33 @@ def make_comparator(
         val, dt, skip = view
         v = value_expr(val, dt)
         if data is not None:
-            shown = [F.lit(f" {_op_sym(eff_op)} "), bound_col.cast("string")]
+            shown = [F.lit(shown_op), bound_col.cast("string")]
             skip = bound_col.isNull() | skip
         else:
             bound_col = F.lit(_i64_guard(value))
-            shown = [F.lit(f" {_op_sym(eff_op)} {value}")]
+            shown = [F.lit(f"{shown_op}{render(value)}")]
         ok = F.when(skip, F.lit(True)).otherwise(getattr(operator, eff_op)(v, bound_col))
-        msg = F.concat(F.lit(f"expected{message} "), v.cast("string"), *shown)
+        msg = F.concat(F.lit(f"expected{noun} "), _shown_value(v, target, value_expr), *shown)
         return simple_check(ok, ctx.schema_path, ctx.instance_path, keyword, msg, sev)
 
     return fn
 
 
-def _variant_bound_check(bound: Column, view, ctx: Ctx, keyword: str, op: str,
-                         value_expr, message: str, broken_flag) -> Compiled:
+def _variant_bound_check(bound: Column, target: Column, family: str, ctx: Ctx, keyword: str,
+                         op: str, value_expr, broken_flag) -> Compiled:
     """A comparator whose numeric bound is a Variant read per row from the
     document, in the Python backend's order (core.clj:106-117): an absent
     or JSON-null bound passes; a bound of another JSON type is the
     could-not-compare error (told by its type tag: a cast reads "5" and
     true as numbers); then a broken exclusive flag (`broken_flag`, the
-    flag itself, or None) fails; then `view` (:func:`_as` of the target,
-    None when it can never apply) is compared."""
+    flag itself, or None) fails; then the target, where it is a `family`
+    value, is compared."""
     vt = T.VariantType()
     number = _vtag_is("number", bound)
+    view = _as(family, target, ctx.dtype)
+    noun, shown_op = COMPARATOR_WORDING[keyword]
     if broken_flag is not None:
-        last, shown = F.lit(False), F.lit(f"exclusive flag should be boolean, got {broken_flag}")
+        last, shown = F.lit(False), F.lit(f"exclusive flag should be boolean, got {render(broken_flag)}")
     elif view is None:
         last, shown = F.lit(True), F.lit("")
     else:
@@ -867,15 +873,18 @@ def _variant_bound_check(bound: Column, view, ctx: Ctx, keyword: str, op: str,
         v = value_expr(val, dt)
         last = F.when(skip, F.lit(True)).otherwise(
             getattr(operator, op)(v, _value(bound, vt, T.DoubleType())))
-        shown = F.concat(F.lit(f"expected{message} "), v.cast("string"),
-                         F.lit(f" {_op_sym(op)} "), bound.cast("string"))
+        shown = F.concat(F.lit(f"expected{noun} "), _shown_value(v, target, value_expr),
+                         F.lit(shown_op), bound.cast("string"))
     ok = F.when(~_present(bound, vt), F.lit(True)).when(~number, F.lit(False)).otherwise(last)
     msg = F.when(number, shown).otherwise(F.concat(F.lit(" could not compare with "), bound.cast("string")))
     return simple_check(ok, ctx.schema_path, ctx.instance_path, keyword, msg, ctx.severity(keyword))
 
 
-def _op_sym(op: str) -> str:
-    return {"ge": ">=", "gt": ">", "le": "<=", "lt": "<"}[op]
+def _shown_value(v: Column, target: Column, value_expr) -> Column:
+    """The compared value as the message prints it: the target itself
+    where it is compared as it is, so a Variant number prints its JSON
+    text (5, as the reference's `str` does, not its double view 5.0)."""
+    return (target if value_expr is _ident else v).cast("string")
 
 
 def bound_is_ok_dtype(dt, bound_is_ok) -> bool:
@@ -908,17 +917,17 @@ _ident = lambda c, dt: c  # noqa: E731
 _length = lambda c, dt: F.length(c)  # noqa: E731
 _size = lambda c, dt: F.size(c)  # noqa: E731
 
-for _kw, _op, _family, _expr, _msg in [
-    ("minimum", "ge", "number", _ident, ""),
-    ("maximum", "le", "number", _ident, ""),
-    ("minLength", "ge", "string", _length, " string length"),
-    ("maxLength", "le", "string", _length, " string length"),
-    ("minItems", "ge", "array", _size, " array length"),
-    ("maxItems", "le", "array", _size, " array length"),
-    ("minProperties", "ge", "object", _count_props, " number of properties"),
-    ("maxProperties", "le", "object", _count_props, " number of properties"),
+for _kw, _op, _family, _expr in [
+    ("minimum", "ge", "number", _ident),
+    ("maximum", "le", "number", _ident),
+    ("minLength", "ge", "string", _length),
+    ("maxLength", "le", "string", _length),
+    ("minItems", "ge", "array", _size),
+    ("maxItems", "le", "array", _size),
+    ("minProperties", "ge", "object", _count_props),
+    ("maxProperties", "le", "object", _count_props),
 ]:
-    register_keyword(_kw, make_comparator(_kw, _op, _family, _expr, _is_number_py, _msg))
+    register_keyword(_kw, make_comparator(_kw, _op, _family, _expr, _is_number_py))
 _TIME_TZ_RE = r"(Z|[+-]\d+:\d+)$"
 
 
@@ -928,9 +937,9 @@ def _format_bound(keyword: str, op: str):
     and `format: "time"` strips the trailing timezone from BOTH the value
     and the bound before the lexicographic compare
     (compile-format-coerce, core.clj:1104-1105)."""
-    plain = make_comparator(keyword, op, "string", _ident, _is_str_py, "")
+    plain = make_comparator(keyword, op, "string", _ident, _is_str_py)
     timed = make_comparator(
-        keyword, op, "string", lambda c, dt: F.regexp_replace(c, _TIME_TZ_RE, ""), _is_str_py, ""
+        keyword, op, "string", lambda c, dt: F.regexp_replace(c, _TIME_TZ_RE, ""), _is_str_py
     )
 
     def fn(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled]:
@@ -969,9 +978,9 @@ def _exclusive_numeric(keyword: str, op: str, absorbed_by: str):
             # name, consistent with our numeric-standalone tagging)
             return simple_check(
                 F.lit(False), ctx.schema_path, ctx.instance_path, keyword,
-                f" could not compare with {str(value).lower()}", ctx.severity(keyword),
+                f" could not compare with {render(value)}", ctx.severity(keyword),
             )
-        return make_comparator(keyword, op, "number", _ident, _is_number_py, "")(
+        return make_comparator(keyword, op, "number", _ident, _is_number_py)(
             value, schema, target, ctx
         )
 
@@ -1301,12 +1310,11 @@ def _compile_discriminator(value, schema, target: Column, ctx: Ctx) -> Optional[
         return Compiled.passed()
     tag_col = _value(fd[0], fd[1], T.StringType())
     # unresolvable tag → error
-    unresolved = violation(
-        ctx.schema_path, ctx.instance_path, "discriminator",
+    unresolved = simple_check(
+        F.lit(False), ctx.schema_path, ctx.instance_path, "discriminator",
         F.concat(F.lit("Could not resolve #/definitions/"), tag_col), sev,
     )
-    ok_expr = F.lit(False)
-    viol_expr = unresolved
+    ok_expr, viol_expr = unresolved.ok, unresolved.violations
     for name in reversed(list(defs.keys())):
         child = compile_schema(
             defs[name], target, replace(ctx, schema_path=ctx.schema_path + ("definitions", name))
@@ -1456,22 +1464,12 @@ def _compile_additional_properties(value, schema, target: Column, ctx: Ctx) -> O
             return cond
 
         if value is False:
-            extras = F.filter(F.map_keys(obj), is_extra)
-
-            def viol_for(k):
-                return F.struct(
-                    F.array(*[F.lit(s) for s in ctx.schema_path]).alias("keyword_path"),
-                    F.array(*([F.lit(str(s)) if not isinstance(s, Column) else s.cast("string")
-                               for s in ctx.instance_path] + [k])).alias("instance_path"),
-                    F.lit("additionalProperties").alias("keyword"),
-                    F.lit("extra property").alias("message"),
-                    F.lit(sev).alias("severity"),
+            def entry(e):
+                return simple_check(
+                    F.lit(False), ctx.schema_path, ctx.instance_path + (e["key"],),
+                    "additionalProperties", "extra property", sev,
                 )
-
-            return _guard(
-                skip, Compiled(ok=F.size(extras) == 0, violations=F.transform(extras, viol_for))
-            )
-        if isinstance(value, dict):
+        elif isinstance(value, dict):
             def entry(e):
                 return compile_schema(
                     value,
@@ -1479,9 +1477,9 @@ def _compile_additional_properties(value, schema, target: Column, ctx: Ctx) -> O
                     replace(ctx, instance_path=ctx.instance_path + (e["key"],),
                             dtype=dt.valueType),
                 )
-
-            return _guard(skip, _per_entry(F.map_entries(obj), entry, is_extra, ctx))
-        return None
+        else:
+            return None
+        return _guard(skip, _per_entry(F.map_entries(obj), entry, is_extra, ctx))
     raise ColumnBackendUnsupported("additionalProperties needs a struct or map target")
 
 
@@ -1703,7 +1701,7 @@ def _compile_items(value, schema, target: Column, ctx: Ctx) -> Optional[Compiled
                     ctx.instance_path,
                     "additionalItems",
                     "no additional items allowed",
-                    ctx.severity("additionalItems"),
+                    sev,  # routed by `items`, as the reference's add-error is
                 )
             )
         elif isinstance(ai, dict):
@@ -2160,14 +2158,13 @@ def compile_for_json(
     )
 
 
-def _compile_table(schema: dict, table_schema: T.StructType, config: Optional[dict],
-                   extra_root: Optional[dict]) -> Compiled:
+def _compile_table(schema: dict, table_schema: T.StructType, config: Optional[dict]) -> Compiled:
     row = F.struct(*[F.col(f.name).alias(f.name) for f in table_schema.fields])
     ctx = Ctx(
         schema_path=(),
         instance_path=(),
         config=config or {},
-        root_schema=extra_root or schema,
+        root_schema=schema,
         dtype=table_schema,
         root_col=row,
         root_dtype=table_schema,
@@ -2180,7 +2177,7 @@ def parsed_col_name(json_col: str) -> str:
     return f"__parsed_{json_col}"
 
 
-def _build(schema, table_schema, json_col, config, extra_root):
+def _build(schema, table_schema, json_col, config):
     """Compile for a table (`table_schema`) or a JSON column (`json_col`);
     a declined compile comes back as its exception, so it is memoized too."""
     try:
@@ -2188,7 +2185,7 @@ def _build(schema, table_schema, json_col, config, extra_root):
             return compile_for_json(
                 schema, F.col(json_col), config, parsed_name=parsed_col_name(json_col)
             )
-        return _compile_table(schema, table_schema, config, extra_root)
+        return _compile_table(schema, table_schema, config)
     except ColumnBackendUnsupported as e:
         return e
 
@@ -2199,15 +2196,14 @@ COMPILE_MEMO_SIZE = 256
 
 @functools.lru_cache(maxsize=COMPILE_MEMO_SIZE)
 def _memo(schema_json: str, table_json: Optional[str], json_col: Optional[str],
-          config_json: str, extra_json: str, registry: tuple):
+          config_json: str, registry: tuple):
     """The compile memo, keyed by JSON text.  `registry` (unused in the
     body) keys the registered keyword set, so a (re)registration misses."""
     table = T.StructType.fromJson(json.loads(table_json)) if table_json else None
-    return _build(json.loads(schema_json), table, json_col, json.loads(config_json),
-                  json.loads(extra_json))
+    return _build(json.loads(schema_json), table, json_col, json.loads(config_json))
 
 
-def _compiled(schema, table_schema=None, json_col=None, config=None, extra_root=None) -> Compiled:
+def _compiled(schema, table_schema=None, json_col=None, config=None) -> Compiled:
     """Memoized compile: building a check tree costs one Py4J round trip
     (~3 ms) per Column op, so a mid-sized schema spends seconds of driver
     time per compile — paid once per process this way, like the
@@ -2220,11 +2216,10 @@ def _compiled(schema, table_schema=None, json_col=None, config=None, extra_root=
             table_schema.json() if table_schema is not None else None,
             json_col,
             json.dumps(config or {}),
-            json.dumps(extra_root),
             tuple((k, id(v)) for k, v in sorted(KEYWORD_COMPILERS.items())),
         )
     except TypeError:  # not JSON-serialisable: compile without the memo
-        out = _build(schema, table_schema, json_col, config, extra_root)
+        out = _build(schema, table_schema, json_col, config)
     else:
         out = _memo(*key)
     if isinstance(out, ColumnBackendUnsupported):
@@ -2232,14 +2227,13 @@ def _compiled(schema, table_schema=None, json_col=None, config=None, extra_root=
     return out
 
 
-def compile_for_table(schema: dict, table_schema: T.StructType, config: Optional[dict] = None,
-                      extra_root: Optional[dict] = None) -> Compiled:
+def compile_for_table(schema: dict, table_schema: T.StructType, config: Optional[dict] = None) -> Compiled:
     """Compile a schema against a whole table row (memoized).
 
     The row presents as the instance object: columns are its keys.  Returns
     a :class:`Compiled` whose expressions reference the table's columns
     directly — Catalyst prunes unused ones."""
-    return _compiled(schema, table_schema=table_schema, config=config, extra_root=extra_root)
+    return _compiled(schema, table_schema=table_schema, config=config)
 
 
 def compile_json_column(schema: dict, json_col: str, config: Optional[dict] = None) -> Compiled:

@@ -9,9 +9,9 @@ path of the violating value (/root/reference/src/json_schema/core.clj:42-48,
 Our Spark-native analog: a schema compiles into a :class:`Compiled` pair of
 Catalyst ``Column`` expressions —
 
-* ``ok``          — boolean, True iff the value passes (the "probe" view that
-                    combinators like anyOf/oneOf/not use, mirroring the
-                    scratch-:errors trick at core.clj:781,799),
+* ``ok``          — boolean, True iff no error-severity check fails (the
+                    "probe" view that combinators like anyOf/oneOf/not use,
+                    mirroring the scratch-:errors trick at core.clj:781,799),
 * ``violations``  — ``array<struct<...>>`` of violation records (empty array
                     = pass), the analog of the accumulated ``:errors``.
 
@@ -21,12 +21,15 @@ codegens them; nothing here executes Python per row.
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass, field, replace
 from typing import Optional, Sequence, Union
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions import formats
 
 # The violation record emitted for every failing check.  Mirrors the
 # reference's `{:path [...] :message "..."}` error maps plus the v2 engine's
@@ -43,6 +46,53 @@ VIOLATION_FIELDS = [
     ("severity", T.StringType()),
 ]
 VIOLATION_TYPE = T.StructType([T.StructField(n, t) for n, t in VIOLATION_FIELDS])
+
+
+def render(value) -> str:
+    """A schema or document value as a violation message prints it, the
+    way the reference's `str` does: a string bare, an integer as written,
+    true/false/null, and an array or object as its compact JSON text (the
+    text a Variant value casts to)."""
+    if isinstance(value, str):
+        return value
+    if type(value) in (int, float):  # the common case, and the same text as json.dumps
+        return str(value)
+    return json.dumps(value, ensure_ascii=False, separators=(",", ":"))
+
+
+#: how each comparator words its violation, ``expected{noun} {value}{op}{bound}``,
+#: as the reference prints it (compile-comparator, core.clj:93-124); the
+#: printed operator is the reference's own, reversed for the size keywords
+COMPARATOR_WORDING = {
+    "maximum": ("", " <= "),
+    "minimum": ("", " >= "),
+    "exclusiveMaximum": ("", " < "),
+    "exclusiveMinimum": ("", " > "),
+    "maxLength": (" string length", " < "),
+    "minLength": (" string length", " > "),
+    "maxItems": (" array length", " >= "),
+    "minItems": (" array length", " <= "),
+    "maxProperties": (" number of properties", " >= "),
+    "minProperties": (" number of properties", " <= "),
+    "formatMaximum": (" value", " <= "),
+    "formatMinimum": (" value", " >= "),
+}
+
+#: the type names a single named `type` member routes its severity by
+_TYPE_NAMES = {"string", "boolean", "number", "integer", "object", "array", "null", "any",
+               *formats.TYPE_REGEX}
+
+
+def type_route(value) -> str:
+    """The config key a `type` violation routes its severity by, as the
+    reference's add-error does (core.clj:42-45): a single named member's
+    type name (`null` for `nil`, `unknown-type` for a name no type has),
+    and `type` for a union or an inline-schema member."""
+    if isinstance(value, (list, dict, bool)):
+        return "type"
+    t = "null" if str(value) == "nil" else str(value)
+    return t if t in _TYPE_NAMES else "unknown-type"
+
 
 # Path segments into the instance: compile-time strings (map keys) or runtime
 # Columns (array indices produced by higher-order functions).
@@ -124,7 +174,12 @@ def simple_check(
     """Pass/fail check emitting a single violation on failure.
 
     The analog of one reference validator closure calling add-error
-    (core.clj:42-45).
+    (core.clj:42-45), and the one place a routed severity takes effect:
+    the record carries `severity`, and only an error-severity check can
+    fail `ok`.  So `ok` means "no error-severity record" in every subtree,
+    which is what the combinators' probes read, like the reference's
+    scratch-:errors probes (core.clj:738,758,781,799,1387): a warning
+    never fails a document or a probe.
     """
     viol = F.when(ok, _typed_empty_array()).otherwise(
         violation(keyword_path, instance_path, keyword, message, severity)
@@ -143,14 +198,11 @@ def simple_check(
             F.lit(severity).alias("severity"),
         ),
     )
-    # ok is coalesced to False here, not just in the unit/violations
-    # branches: a NULL ok (possible for custom register_keyword checks)
-    # otherwise propagates through merge's conjunction into
-    # with_validation's `valid` fast path, producing valid=NULL alongside a
-    # non-empty violations array — breaking the reference's
-    # valid == (empty? errors) contract and silently dropping the row from
-    # ~valid prefilters.
-    return Compiled(ok=F.coalesce(ok, F.lit(False)), violations=viol, unit=unit)
+    # an error's ok is coalesced too: a NULL would otherwise reach
+    # with_validation's `valid` as valid=NULL beside a record, and drop the
+    # row from every ~valid prefilter
+    return Compiled(ok=F.coalesce(ok, F.lit(False)) if severity == "error" else F.lit(True),
+                    violations=viol, unit=unit)
 
 
 def merge(compiled: Sequence[Compiled], units: bool = True) -> Compiled:

@@ -4,9 +4,12 @@ For schemaless JSON documents (a string column of raw JSON), the compiled
 validator tree is applied inside a pandas UDF: Arrow moves batches of
 documents to Python once per batch (never per row), the closure tree —
 compiled once on the driver and shipped inside the UDF closure — evaluates
-each document, and its violations come back as one Arrow array-of-structs
+each document, and its records come back as one Arrow array-of-structs
 column with exactly the same record shape as the Catalyst tiers', so all
-backends share the sinks in operators/validate.py.  The UDF returns only
+backends share the sinks in operators/validate.py.  The records are the
+validator's own (:class:`~.validator.Run`), in check order, with their
+keyword and the severity the validator routed; only the instance path is
+stringified here, and `keyword_path` stays empty.  The UDF returns only
 that column: `engine.validate_json_column` derives `valid` from it the
 same way on both JSON tiers.
 
@@ -57,18 +60,14 @@ def make_validate_udf(schema: dict, config: Optional[dict] = None, loader=None):
                 violations.append([PARSE_VIOLATION])
                 continue
             try:
-                res = validator(value)
+                run = validator.run(value)
             except RecursionError:
                 # a document (or a recursive `$ref`) deeper than the
                 # interpreter's stack: a per-row record, never a job abort
                 violations.append([DEPTH_VIOLATION])
                 continue
             violations.append(
-                [
-                    ([], [str(p) for p in e["path"]], None, e["message"], sev)
-                    for sev, lst in (("error", res["errors"]), ("warning", res["warnings"]))
-                    for e in lst
-                ]
+                [([], [str(p) for p in path], kw, msg, sev) for path, kw, msg, sev in run.records]
             )
         return pd.Series(violations, dtype=object)
 

@@ -49,6 +49,9 @@ import re
 from fractions import Fraction
 from typing import Any, Callable, Optional
 
+from ..functions import formats
+from ..plans.ir import COMPARATOR_WORDING, render, type_route
+
 # ---------------------------------------------------------------------------
 # run state
 
@@ -56,36 +59,50 @@ from typing import Any, Callable, Optional
 class Run:
     """Mutable validation state for one document — the analog of the
     reference's threaded ctx map `{:path :errors :warnings :deferreds
-    :doc :config}` (core.clj:1484-1502)."""
+    :doc :config}` (core.clj:1484-1502).  `records` holds every violation
+    and deferred annotation in check order, as `(path, keyword, message,
+    severity)`; `deferreds` the reference-shaped deferred entries."""
 
-    __slots__ = ("doc", "config", "errors", "warnings", "deferreds")
+    __slots__ = ("doc", "config", "records", "deferreds")
 
     def __init__(self, doc, config=None):
         self.doc = doc
         self.config = config or {}
-        self.errors: list[dict] = []
-        self.warnings: list[dict] = []
+        self.records: list[tuple] = []
         self.deferreds: list[dict] = []
 
     def child(self) -> "Run":
         return Run(self.doc, self.config)
+
+    def failed(self) -> bool:
+        """Has an error-severity record: a warning never fails a probe."""
+        return any(r[3] == "error" for r in self.records)
+
+    def views(self) -> dict:
+        """The reference's `{:errors :warnings :deferreds}`: the records
+        split by severity, each list in check order."""
+        out = {"errors": [], "warnings": []}
+        for path, _, message, severity in self.records:
+            if severity != "deferred":
+                out[severity + "s"].append({"path": list(path), "message": message})
+        out["deferreds"] = self.deferreds
+        return out
 
 
 # a compiled validator: (value, path tuple, run) -> None
 Validator = Callable[[Any, tuple, Run], None]
 
 
-def _add_error(run: Run, keyword: str, path: tuple, message: str):
-    bucket = run.config.get(keyword, "errors")
-    rec = {"path": list(path), "message": message}
-    if bucket in ("warnings", "warning"):
-        run.warnings.append(rec)
-    else:
-        run.errors.append(rec)
+def _add_error(run: Run, keyword: str, path: tuple, message: str, route: Optional[str] = None):
+    """Record one violation of `keyword`, its severity routed by the
+    config key the reference's add-error uses (core.clj:42-45): `route`
+    where that key is not the keyword itself."""
+    routed = run.config.get(route or keyword) in ("warnings", "warning")
+    run.records.append((path, keyword, message, "warning" if routed else "error"))
 
 
 def _probe(vfn: Validator, value, path: tuple, run: Run) -> Run:
-    """Run a child with scratch error lists (the anyOf/oneOf/not/contains
+    """Run a child on a scratch record list (the anyOf/oneOf/not/contains
     probe trick, core.clj:781,799,758,1387)."""
     scratch = run.child()
     vfn(value, path, scratch)
@@ -214,49 +231,14 @@ def _data_ref(x):
 
 
 # ---------------------------------------------------------------------------
-# regex tables (same semantic constants as functions/formats.py, here as
-# compiled Python patterns)
+# regex tables: functions/formats.py's, compiled as Python patterns.  The
+# one override is the `oid` type: Java parses the reference's `^[[0-9]+\.]*$`
+# (core.clj:270) as a NESTED character class = {0-9, +, .} repeated; Python
+# has no nested classes, so it gets the Java-equivalent expansion (rlike on
+# the Catalyst tiers uses the original literally — the reference's dialect).
 
-TYPE_REGEX = {
-    "date": re.compile(r"^-?[0-9]{4}(-(0[1-9]|1[0-2])(-(0[0-9]|[1-2][0-9]|3[0-1]))?)?$"),
-    "datetime": re.compile(
-        r"^-?[0-9]{4}(-(0[1-9]|1[0-2])(-(0[0-9]|[1-2][0-9]|3[0-1])(T([01][0-9]|2[0-3]):[0-5][0-9]:[0-5][0-9](\\.[0-9]+)?(Z|[+-]((0[0-9]|1[0-3]):[0-5][0-9]|14:00))?)?)?)?$"
-    ),
-    "time": re.compile(r"^([01][0-9]|2[0-3]):[0-5][0-9]:[0-5][0-9](\\.[0-9]+)?$"),
-    "uri": re.compile(r"^([^:]+)://[-a-zA-Z0-9+&@#/%?=~_|!:,.;]*[-a-zA-Z0-9+&@#/%=~_|]$"),
-    # Java parses the reference's `^[[0-9]+\.]*$` (core.clj:270) as a NESTED
-    # character class = {0-9, +, .} repeated; Python has no nested classes,
-    # so this is the Java-equivalent expansion (rlike on the Column backend
-    # uses the original literally — same JVM dialect as the reference).
-    "oid": re.compile(r"^[0-9+.]*$"),
-    "uuid": re.compile(r"^([a-f\d]{8}(-[a-f\d]{4}){3}-[a-f\d]{12}?)$"),
-    "email": re.compile(r"^[^@]+@[^.]+\..*$"),
-}
-
-FORMAT_REGEX = {
-    "date": re.compile(r"^(\d{4})-(\d{2})-(\d{2})$"),
-    "time": re.compile(r"^(\d{2}):(\d{2}):(\d{2})(\.\d+)?([zZ]|(\+|\-)(\d{2}):(\d{2}))?$"),
-    "email": re.compile(r"[^@]+@[^.]+\..*"),
-    "hostname": re.compile(r"^([-a-zA-Z0-9]{0,64}\.)+[-a-zA-Z0-9]{0,64}$"),
-    "host-name": re.compile(r"^([-a-zA-Z0-9]{0,64}\.)+[-a-zA-Z0-9]{0,64}$"),
-    "ipv4": re.compile(r"^(?:(?:25[0-5]|2[0-4][0-9]|[01]?[0-9][0-9]?)\.){3}(?:25[0-5]|2[0-4][0-9]|[01]?[0-9][0-9]?)$"),
-    "ip-address": re.compile(r"^(?:(?:25[0-5]|2[0-4][0-9]|[01]?[0-9][0-9]?)\.){3}(?:25[0-5]|2[0-4][0-9]|[01]?[0-9][0-9]?)$"),
-    "ipv6": re.compile(
-        r"^(([0-9a-fA-F]{1,4}:){7,7}[0-9a-fA-F]{1,4}|([0-9a-fA-F]{1,4}:){1,7}:|([0-9a-fA-F]{1,4}:){1,6}:[0-9a-fA-F]{1,4}|([0-9a-fA-F]{1,4}:){1,5}(:[0-9a-fA-F]{1,4}){1,2}|([0-9a-fA-F]{1,4}:){1,4}(:[0-9a-fA-F]{1,4}){1,3}|([0-9a-fA-F]{1,4}:){1,3}(:[0-9a-fA-F]{1,4}){1,4}|([0-9a-fA-F]{1,4}:){1,2}(:[0-9a-fA-F]{1,4}){1,5}|[0-9a-fA-F]{1,4}:((:[0-9a-fA-F]{1,4}){1,6})|:((:[0-9a-fA-F]{1,4}){1,7}|:)|fe80:(:[0-9a-fA-F]{0,4}){0,4}%[0-9a-zA-Z]{1,}|::(ffff(:0{1,4}){0,1}:){0,1}((25[0-5]|(2[0-4]|1{0,1}[0-9]){0,1}[0-9])\.){3,3}(25[0-5]|(2[0-4]|1{0,1}[0-9]){0,1}[0-9])|([0-9a-fA-F]{1,4}:){1,4}:((25[0-5]|(2[0-4]|1{0,1}[0-9]){0,1}[0-9])\.){3,3}(25[0-5]|(2[0-4]|1{0,1}[0-9]){0,1}[0-9]))$"
-    ),
-    "idn-hostname": re.compile(r"^.*$"),
-    "iri-reference": re.compile(r"^.*$"),
-    "iri": re.compile(r"^.*$"),
-    "idn-email": re.compile(r"^.*@.*$"),
-    "relative-json-pointer": re.compile(r"^.*$"),
-    "unknownformat": re.compile(r"^.*$"),
-    "unknown": re.compile(r"^.*$"),
-    "uri-reference": re.compile(r".*"),
-    "uri-template": re.compile(r".*"),
-    "color": re.compile(
-        r"^(#(?:[0-9a-fA-F]{2}){2,3}|#[0-9a-fA-F]{3}|(?:rgba?|hsla?)\((?:\d+%?(?:deg|rad|grad|turn)?(?:,|\s)+){2,3}[\s/]*[\d.]+%?\)|black|silver|gray|white|maroon|red|purple|fuchsia|green|lime|olive|yellow|navy|blue|teal|aqua|orange)$"
-    ),
-}
+TYPE_REGEX = {t: re.compile(r"^[0-9+.]*$" if t == "oid" else rx) for t, rx in formats.TYPE_REGEX.items()}
+FORMAT_REGEX = {f: re.compile(rx) for f, rx in formats.FORMAT_REGEX.items()}
 
 
 def _jvm_regex_to_python(x: str) -> str:
@@ -432,35 +414,35 @@ def keyword(name: str):
 def _type_check(tname, cc: "CompileCtx"):
     if isinstance(tname, (dict, bool)):
         sub = _compile(tname, cc.push("type"), cc)
-        return lambda v, path, run: len(_probe(sub, v, path, run).errors) == 0
+        return lambda v, path, run: "type mismatch" if _probe(sub, v, path, run).failed() else True
 
     t = str(tname)
 
     if t == "string":
         def chk(v, path, run):
             if not isinstance(v, str):
-                return ("string", "expected type of string")
+                return "expected type of string"
             if v.strip() == "":
-                return ("string", "expected not empty string")
+                return "expected not empty string"
             return True
     elif t == "boolean":
         def chk(v, path, run):
-            return True if isinstance(v, bool) else ("boolean", "expected boolean")
+            return True if isinstance(v, bool) else "expected boolean"
     elif t == "number":
         def chk(v, path, run):
-            return True if is_number(v) else ("number", "expected number")
+            return True if is_number(v) else "expected number"
     elif t == "integer":
         def chk(v, path, run):
-            return True if is_integer(v) else ("integer", f"expected integer, got {v}")
+            return True if is_integer(v) else f"expected integer, got {v}"
     elif t == "object":
         def chk(v, path, run):
-            return True if isinstance(v, dict) else ("object", "expected object")
+            return True if isinstance(v, dict) else "expected object"
     elif t == "array":
         def chk(v, path, run):
-            return True if isinstance(v, list) else ("array", "expected array")
+            return True if isinstance(v, list) else "expected array"
     elif t in ("null", "nil"):
         def chk(v, path, run):
-            return True if v is None else ("null", "expected null")
+            return True if v is None else "expected null"
     elif t == "any":
         def chk(v, path, run):
             return True
@@ -470,15 +452,15 @@ def _type_check(tname, cc: "CompileCtx"):
 
         def chk(v, path, run):
             if not isinstance(v, str):
-                return (kind, f"{kind} should be encoded as string")
+                return f"{kind} should be encoded as string"
             if kind == "uri" and v.strip() == "":
-                return (kind, "expected not empty string")
+                return "expected not empty string"
             if not rx.fullmatch(v):
-                return (kind, f"wrong {kind} format")
+                return f"wrong {kind} format"
             return True
     else:
         def chk(v, path, run):
-            return ("unknown-type", f"Broken schema: unknown type {tname}")
+            return f"Broken schema: unknown type {tname}"
 
     return chk
 
@@ -487,23 +469,17 @@ def _type_check(tname, cc: "CompileCtx"):
 def _k_type(value, schema, cc: "CompileCtx"):
     members = value if isinstance(value, list) else [value]
     checks = [_type_check(m, cc) for m in members]
-    union = isinstance(value, list)
+    route = type_route(value)
+    union = f"expected one of types {', '.join(str(m) for m in members)}" if isinstance(value, list) else None
 
     def vfn(v, path, run):
-        results = []
+        fails = []
         for chk in checks:
             r = chk(v, path, run)
             if r is True:
                 return
-            results.append(r)
-        if union:
-            _add_error(run, "type", path, f"expected one of types {', '.join(str(m) for m in members)}")
-        else:
-            r = results[0]
-            if r is False:
-                _add_error(run, "type", path, "type mismatch")
-            else:
-                _add_error(run, r[0], path, r[1])
+            fails.append(r)
+        _add_error(run, "type", path, union or fails[0], route=route)
 
     return vfn
 
@@ -535,26 +511,27 @@ def _k_enum(value, schema, cc):
 
 
 def _const_impl(kw):
+    """Both spellings route as `constant`, the reference's add-error key."""
     def compile_kw(value, schema, cc):
         ptr = _data_ref(value)
         if ptr is not None:
             def vfn(v, path, run):
                 cv = ptr(run, path)
                 if not json_eq(cv, v):
-                    _add_error(run, kw, path, f"expected {cv}, but {v}")
+                    _add_error(run, kw, path, f"expected {cv}, but {v}", route="constant")
 
             return vfn
 
         def vfn(v, path, run):
             if not json_eq(value, v):
-                _add_error(run, kw, path, f"expected {value}, but {v}")
+                _add_error(run, kw, path, f"expected {value}, but {v}", route="constant")
 
         return vfn
 
     return compile_kw
 
 
-KEYWORDS["const"] = _const_impl("constant")
+KEYWORDS["const"] = _const_impl("const")
 KEYWORDS["constant"] = _const_impl("constant")
 
 
@@ -569,11 +546,10 @@ def make_comparator(
     applicable_bound,
     bound,
     exclusive=None,
-    message: str = "",
-    message_op: str = "",
     direction: int = 1,
     coerce_bound=None,
 ):
+    noun, op = COMPARATOR_WORDING[name]
     bound_ptr = _data_ref(bound) if isinstance(bound, dict) else None
     excl_ptr = _data_ref(exclusive) if isinstance(exclusive, dict) else None
 
@@ -585,36 +561,24 @@ def make_comparator(
         if b is None:
             return
         if not applicable_bound(b):
-            _add_error(run, name, path, f" could not compare with {b}")
+            _add_error(run, name, path, f" could not compare with {render(b)}")
             return
         if ex is not None and not isinstance(ex, bool):
-            _add_error(run, name, path, f"exclusive flag should be boolean, got {ex}")
+            _add_error(run, name, path, f"exclusive flag should be boolean, got {render(ex)}")
             return
         if not applicable_value(v):
             return
         cv = coerce_value(v)
         # direction=1: upper bound (v <= b); direction=-1: lower (v >= b)
-        if b > cv if direction == 1 else b < cv:
-            diff = 1
-        elif json_cmp_eq(b, cv):
-            diff = 0
-        else:
-            diff = -1
-        ok = (diff > 0) if ex is True else (diff >= 0)
-        if not ok:
-            _add_error(run, name, path, f"expected{message} {cv}{message_op}{b}")
+        within = b > cv if direction == 1 else b < cv
+        if not (within or (ex is not True and b == cv)):
+            _add_error(run, name, path, f"expected{noun} {render(cv)}{op}{render(b)}")
 
     return vfn
 
 
-def json_cmp_eq(a, b) -> bool:
-    if is_number(a) and is_number(b):
-        return a == b
-    return a == b
-
-
 def _cmp_keyword(name, applicable_value, coerce_value, applicable_bound,
-                 message, message_op, direction, exclusive_key=None, coerce_fmt=False):
+                 direction, exclusive_key=None, coerce_fmt=False):
     def compile_kw(value, schema, cc):
         exclusive = schema.get(exclusive_key) if exclusive_key else None
         coerce_bound = None
@@ -627,8 +591,7 @@ def _cmp_keyword(name, applicable_value, coerce_value, applicable_bound,
             coerce_bound = coerce
         return make_comparator(
             name, applicable_value, coerce, applicable_bound, value,
-            exclusive=exclusive, message=message, message_op=message_op,
-            direction=direction, coerce_bound=coerce_bound,
+            exclusive=exclusive, direction=direction, coerce_bound=coerce_bound,
         )
 
     return compile_kw
@@ -647,37 +610,21 @@ def _strlen(v):
     # string-utf8-length (core.clj:1060-1062)
 
 
-KEYWORDS["maximum"] = _cmp_keyword(
-    "maximum", is_number, lambda v: v, is_number, "", " <= ", 1, "exclusiveMaximum"
-)
-KEYWORDS["minimum"] = _cmp_keyword(
-    "minimum", is_number, lambda v: v, is_number, "", " >= ", -1, "exclusiveMinimum"
-)
-KEYWORDS["maxLength"] = _cmp_keyword(
-    "maxLength", lambda v: isinstance(v, str), _strlen, is_number, " string length", " < ", 1
-)
-KEYWORDS["minLength"] = _cmp_keyword(
-    "minLength", lambda v: isinstance(v, str), _strlen, is_number, " string length", " > ", -1
-)
-KEYWORDS["maxItems"] = _cmp_keyword(
-    "maxItems", lambda v: isinstance(v, list), len, is_number, " array length", " >= ", 1
-)
-KEYWORDS["minItems"] = _cmp_keyword(
-    "minItems", lambda v: isinstance(v, list), len, is_number, " array length", " <= ", -1
-)
-KEYWORDS["maxProperties"] = _cmp_keyword(
-    "maxProperties", lambda v: isinstance(v, dict), len, is_number, " number of properties", " >= ", 1
-)
-KEYWORDS["minProperties"] = _cmp_keyword(
-    "minProperties", lambda v: isinstance(v, dict), len, is_number, " number of properties", " <= ", -1
-)
+KEYWORDS["maximum"] = _cmp_keyword("maximum", is_number, lambda v: v, is_number, 1, "exclusiveMaximum")
+KEYWORDS["minimum"] = _cmp_keyword("minimum", is_number, lambda v: v, is_number, -1, "exclusiveMinimum")
+KEYWORDS["maxLength"] = _cmp_keyword("maxLength", lambda v: isinstance(v, str), _strlen, is_number, 1)
+KEYWORDS["minLength"] = _cmp_keyword("minLength", lambda v: isinstance(v, str), _strlen, is_number, -1)
+KEYWORDS["maxItems"] = _cmp_keyword("maxItems", lambda v: isinstance(v, list), len, is_number, 1)
+KEYWORDS["minItems"] = _cmp_keyword("minItems", lambda v: isinstance(v, list), len, is_number, -1)
+KEYWORDS["maxProperties"] = _cmp_keyword("maxProperties", lambda v: isinstance(v, dict), len, is_number, 1)
+KEYWORDS["minProperties"] = _cmp_keyword("minProperties", lambda v: isinstance(v, dict), len, is_number, -1)
 KEYWORDS["formatMaximum"] = _cmp_keyword(
     "formatMaximum", lambda v: isinstance(v, str), lambda v: v, lambda b: isinstance(b, str),
-    " value", " <= ", 1, "exclusiveFormatMaximum", coerce_fmt=True
+    1, "exclusiveFormatMaximum", coerce_fmt=True
 )
 KEYWORDS["formatMinimum"] = _cmp_keyword(
     "formatMinimum", lambda v: isinstance(v, str), lambda v: v, lambda b: isinstance(b, str),
-    " value", " >= ", -1, "exclusiveFormatMinimum", coerce_fmt=True
+    -1, "exclusiveFormatMinimum", coerce_fmt=True
 )
 
 
@@ -694,16 +641,12 @@ def _exclusive_standalone(name, direction):
             # bare draft-4 flag, no absorbing bound: the reference compiles
             # a comparator whose BOUND is the boolean, which fails
             # bound-applicability on every value (core.clj:1006-1023,113-114)
-            bval = "true" if value else "false"
-
             def vfn(v, path, run):
-                _add_error(run, name, path, f" could not compare with {bval}")
+                _add_error(run, name, path, f" could not compare with {render(value)}")
 
             return vfn
-        op = " > " if name == "exclusiveMinimum" else " < "
         return make_comparator(
-            name, is_number, lambda v: v, is_number, value,
-            exclusive=True, message="", message_op=op, direction=direction,
+            name, is_number, lambda v: v, is_number, value, exclusive=True, direction=direction,
         )
 
     return compile_kw
@@ -972,8 +915,8 @@ def _k_property_names(value, schema, cc):
             return
         for k in v:
             scratch = _probe(sub, k, path, run)
-            if scratch.errors:
-                msgs = "; ".join(e["message"] for e in scratch.errors)
+            if scratch.failed():
+                msgs = "; ".join(m for _, _, m, sev in scratch.records if sev == "error")
                 _add_error(run, "propertyNames", path, f"Invalid property name - {k}: {msgs}")
 
     return vfn
@@ -1122,7 +1065,7 @@ def _k_contains(value, schema, cc):
 
     def vfn(v, path, run):
         if isinstance(v, list) and not any(
-            not _probe(sub, vv, path, run).errors for vv in v
+            not _probe(sub, vv, path, run).failed() for vv in v
         ):
             _add_error(run, "contains", path, f"expected contains {value}")
 
@@ -1175,7 +1118,7 @@ def _k_any_of(value, schema, cc):
     subs = [_compile(o, cc.push("anyOf"), cc) for o in value]
 
     def vfn(v, path, run):
-        if not any(not _probe(sub, v, path, run).errors for sub in subs):
+        if not any(not _probe(sub, v, path, run).failed() for sub in subs):
             _add_error(run, "anyOf", path, "Non alternatives are valid")
 
     return vfn
@@ -1190,13 +1133,14 @@ def _k_one_of(value, schema, cc):
         winner = None
         for sub in subs:
             res = _probe(sub, v, path, run)
-            if not res.errors:
+            if not res.failed():
                 if cnt > 0:
                     _add_error(run, "oneOf", path, f"expected one of {value}, but more then one are valid")
                     return
                 cnt, winner = 1, res
         if cnt == 1:
             # winner's deferreds merge back (core.clj:797)
+            run.records.extend(r for r in winner.records if r[3] == "deferred")
             run.deferreds.extend(winner.deferreds)
         else:
             _add_error(run, "oneOf", path, f"expected one of {value}, but no one is valid")
@@ -1209,7 +1153,7 @@ def _k_not(value, schema, cc):
     sub = _compile(value, cc.push("not"), cc)
 
     def vfn(v, path, run):
-        if not _probe(sub, v, path, run).errors:
+        if not _probe(sub, v, path, run).failed():
             _add_error(run, "not", path, f"Expected not {value}")
 
     return vfn
@@ -1221,7 +1165,7 @@ def _k_disallow(value, schema, cc):
     subs = [_compile({"type": o} if isinstance(o, str) else o, cc.push("disallow"), cc) for o in opts]
 
     def vfn(v, path, run):
-        if any(not _probe(sub, v, path, run).errors for sub in subs):
+        if any(not _probe(sub, v, path, run).failed() for sub in subs):
             _add_error(run, "disallow", path, f"Disallowed by {json.dumps(value)}")
 
     return vfn
@@ -1244,7 +1188,7 @@ def _k_if(value, schema, cc):
     el = _compile(_coerce(schema.get("else")), cc, cc)
 
     def vfn(v, path, run):
-        if not _probe(pred, v, path, run).errors:
+        if not _probe(pred, v, path, run).failed():
             th(v, path, run)
         else:
             el(v, path, run)
@@ -1264,7 +1208,7 @@ def _k_switch(value, schema, cc):
     def vfn(v, path, run):
         for cl, cif, cthen_v in clauses:
             if cif is not None:
-                if _probe(cif, v, path, run).errors:
+                if _probe(cif, v, path, run).failed():
                     continue
                 th = cl.get("then")
                 if th is False:
@@ -1379,7 +1323,11 @@ def _external(uri: str, reg: dict, loader, cc):
 
 @keyword("deferred")
 def _k_deferred(value, schema, cc):
+    # the record the Catalyst tiers emit, then the reference-shaped entry
+    text = json.dumps(value)
+
     def vfn(v, path, run):
+        run.records.append((path, "deferred", text, "deferred"))
         run.deferreds.append({"path": list(path), "value": v, "deferred": value})
 
     return vfn
@@ -1481,17 +1429,23 @@ def _compile(schema, cc: CompileCtx, parent_cc: Optional[CompileCtx] = None) -> 
 
 def compile_schema(schema, config: Optional[dict] = None, loader=None):
     """Compile once, validate many: returns fn(value, config=None) →
-    {"errors": [...], "warnings": [...], "deferreds": [...]}."""
+    {"errors": [...], "warnings": [...], "deferreds": [...]}, views of the
+    run's records (:meth:`Run.views`); its `run(value, config=None)`
+    returns the :class:`Run` itself."""
     cc = CompileCtx(registry={}, loader=loader)
     vfn = _compile(schema, cc)
     base_config = config or {}
 
+    def run(value, run_config: Optional[dict] = None) -> Run:
+        r = Run(value, {**base_config, **(run_config or {})})
+        vfn(value, (), r)
+        return r
+
     def run_validator(value, run_config: Optional[dict] = None):
-        run = Run(value, {**base_config, **(run_config or {})})
-        vfn(value, (), run)
-        return {"errors": run.errors, "warnings": run.warnings, "deferreds": run.deferreds}
+        return run(value, run_config).views()
 
     run_validator.registry = cc.registry
+    run_validator.run = run
     return run_validator
 
 

@@ -185,6 +185,33 @@ def rand_schema(rng: random.Random):
     return schema
 
 
+#: members whose keys are names (properties, definitions), not keywords
+_NAMED = ("properties", "patternProperties", "patternGroups", "definitions", "dependencies")
+
+
+def schema_keywords(node, out: set) -> set:
+    """Every keyword `node` uses, plus the names of its `type` members."""
+    if isinstance(node, list):
+        for x in node:
+            schema_keywords(x, out)
+    elif isinstance(node, dict):
+        for k, v in node.items():
+            out.add(k)
+            if k == "type":
+                out.update(t for t in (v if isinstance(v, list) else [v]) if isinstance(t, str))
+            if k in _NAMED and isinstance(v, dict):
+                schema_keywords(list(v.values()), out)
+            else:
+                schema_keywords(v, out)
+    return out
+
+
+def rand_config(rng: random.Random, schema) -> dict:
+    """Route a random half of the schema's keywords (and type names) to
+    warnings, the reference's `{:config {<keyword> :warnings}}`."""
+    return {k: "warnings" for k in sorted(schema_keywords(schema, set())) if rng.random() < 0.5}
+
+
 def rand_row(rng: random.Random):
     def maybe(v):
         return None if rng.random() < 0.25 else v
@@ -268,6 +295,33 @@ def test_differential_variant_backend(spark):
                 f"errors={v(docs[i])['errors']}"
             )
     assert n_covered >= n_schemas // 2, n_covered  # variant path genuinely exercised
+
+
+def test_differential_warnings_config(spark):
+    """A random half of each schema's keywords (and of its type names)
+    routed to warnings: all four backends give the driver-side verdicts,
+    so a warning fails neither a document nor a combinator's probe."""
+    from json_schema_clj_spark.plans.compiler import ColumnBackendUnsupported
+
+    rng = random.Random(20261020)
+    for si in range(12):
+        schema = rand_schema(rng)
+        config = rand_config(rng, schema)
+        rows = [rand_row(rng) for _ in range(30)]
+        docs = [row_to_doc(r) for r in rows]
+        v = engine.compile(schema, config=config)
+        want = [not v(d)["errors"] for d in docs]
+        df = spark.createDataFrame(rows, TABLE_SCHEMA)
+        got = {"col": [r["valid"] for r in engine.with_validation(df, schema, config=config).collect()]}
+        jdf = spark.createDataFrame([(json.dumps(d),) for d in docs], "data_json string")
+        for backend in ("python", "variant"):
+            try:
+                out = engine.validate_json_column(jdf, schema, config=config, force_backend=backend)
+            except ColumnBackendUnsupported:
+                continue
+            got[backend] = [r["valid"] for r in out.collect()]
+        for tier, valid in got.items():
+            assert valid == want, f"schema#{si} {tier}\nschema={json.dumps(schema)}\nconfig={config}"
 
 
 def test_differential_map_object_keywords(spark):

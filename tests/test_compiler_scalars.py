@@ -137,6 +137,16 @@ def test_warnings_routing(spark):
     rows = out.collect()
     assert rows[0]["valid"] is True  # warnings don't fail the document
     assert [v["severity"] for v in rows[0]["violations"]] == ["warning"]
+    # nor a combinator's probe: anyOf passes on its warned branch
+    schema = {"properties": {"x": {"anyOf": [{"minimum": 10}, {"type": "string"}]}}}
+    out = _validate(spark, [("a", 1)], "k string, x long", schema, config={"minimum": "warnings"})
+    assert [(r["valid"], r["violations"]) for r in out.collect()] == [(True, [])]
+    # a single named type member routes by its type name; the record keeps `type`
+    schema = {"properties": {"x": {"type": "string"}}}
+    for config, severity in (({"string": "warnings"}, "warning"), ({"type": "warnings"}, "error")):
+        [row] = _validate(spark, [("a", 1)], "k string, x long", schema, config=config).collect()
+        assert row["valid"] is (severity == "warning")
+        assert [(v["keyword"], v["severity"]) for v in row["violations"]] == [("type", severity)]
 
 
 def test_violation_paths(spark):

@@ -276,27 +276,63 @@ def test_null_document_is_json_null_on_both_tiers(spark, schema):
     """A NULL document validates as the JSON null on both tiers: a definite
     verdict with the schema's violations, never valid=NULL (which every
     `where(~valid)` sink would drop).  Records are compared without
-    keyword_path/keyword, which the Arrow-Python tier does not fill yet."""
+    keyword_path, which the Arrow-Python tier leaves empty."""
     got = _both_tiers(spark, [None, "null"], schema)
-    strip = {b: [(ok, [(ip, msg, sev) for _, ip, _, msg, sev in vs]) for ok, vs in rows]
-             for b, rows in got.items()}
+    strip = {b: [(ok, [v[1:] for v in vs]) for ok, vs in rows] for b, rows in got.items()}
     assert strip["python"] == strip["variant"]
     assert strip["python"][0] == strip["python"][1]
-    expected = (False, [([], "expected object", "error")]) if schema else (True, [])
+    expected = (False, [([], "type", "expected object", "error")]) if schema else (True, [])
     assert strip["python"][0] == expected
 
 
-def test_warnings_config_agrees_on_both_tiers(spark):
-    """A keyword routed to warnings leaves the document valid on both
-    tiers, with the same warning records.  Records are compared without
-    keyword_path/keyword, which the Arrow-Python tier does not fill yet."""
-    schema = {"type": "object", "properties": {"age": {"minimum": 0}}}
-    docs = ['{"age": -1}', '{"age": 5}']
-    got = _both_tiers(spark, docs, schema, config={"minimum": "warnings"})
-    strip = {b: [(ok, [(ip, sev) for _, ip, _, _, sev in vs]) for ok, vs in rows]
-             for b, rows in got.items()}
-    assert strip["python"] == strip["variant"]
-    assert strip["python"] == [(True, [(["age"], "warning")]), (True, [])]
+def _three_tiers(spark, docs, schema, ddl, config=None):
+    """`_both_tiers`, plus the typed tier: `with_validation` over the
+    documents read into columns `ddl`."""
+    got = _both_tiers(spark, docs, schema, config)
+    typed = (spark.createDataFrame(list(enumerate(docs)), "i int, data_json string")
+             .select("i", F.from_json("data_json", ddl).alias("t")).select("i", "t.*"))
+    got["typed"] = [(r["valid"], [tuple(v) for v in r["violations"]])
+                    for r in engine.with_validation(typed, schema, config=config).orderBy("i").collect()]
+    return got
+
+
+TUPLE = {"items": [{"type": "integer"}], "additionalItems": False}
+X_INT = {"properties": {"x": {"type": "integer"}}}
+
+
+@pytest.mark.parametrize("schema, doc, ddl, config, valid, records", [
+    ({"minimum": 0}, "-1", "v long", {"minimum": "warnings"}, True, [(["v"], "minimum", "warning")]),
+    # a warning never fails a combinator's probe
+    ({"anyOf": [{"minimum": 5}, {"type": "string"}]}, "3", "v long", {"minimum": "warnings"}, True, []),
+    # a single named type member routes by its type name, not by `type`
+    (X_INT, '{"x": "nope"}', "v struct<x: string>", {"integer": "warnings"},
+     True, [(["v", "x"], "type", "warning")]),
+    (X_INT, '{"x": "nope"}', "v struct<x: string>", {"type": "warnings"},
+     False, [(["v", "x"], "type", "error")]),
+    # tuple additionalItems: false routes by `items`; its records differ in
+    # shape between the tiers, so only `valid` is compared
+    (TUPLE, "[1, 2]", "v array<long>", {"items": "warnings"}, True, None),
+    (TUPLE, "[1, 2]", "v array<long>", {"additionalItems": "warnings"}, False, None),
+])
+def test_warnings_config_agrees_on_all_tiers(spark, schema, doc, ddl, config, valid, records):
+    """A config that routes a keyword to warnings gives the Arrow-Python
+    tier's verdict and records on the Variant and typed tiers too: the
+    records compared as (instance_path, keyword, severity)."""
+    got = _three_tiers(spark, ['{"v": %s}' % doc], {"properties": {"v": schema}}, ddl, config)
+    for tier, [(ok, vs)] in got.items():
+        assert ok is valid, (tier, got)
+        if records is not None:
+            assert [(ip, kw, sev) for _, ip, kw, _, sev in vs] == records, (tier, got)
+
+
+def test_deferred_record_agrees_on_all_tiers(spark):
+    """A `deferred` annotation is one record, the same on every tier, and
+    never fails the document."""
+    schema = {"properties": {"a": {"deferred": "check-later"}}}
+    got = _three_tiers(spark, ['{"a": 1}'], schema, "a long")
+    for tier, [(ok, vs)] in got.items():
+        assert ok is True, (tier, got)
+        assert [v[1:] for v in vs] == [(["a"], "deferred", '"check-later"', "deferred")], (tier, got)
 
 
 @pytest.mark.xfail(strict=True, reason="try_parse_json accepts trailing text after a value")
@@ -312,8 +348,8 @@ def test_duplicate_object_keys_agree_on_both_tiers(spark):
 
 
 def _paths(got):
-    """{backend: [(valid, sorted (instance_path, severity) records)]}."""
-    return {b: [(ok, sorted((tuple(ip), sev) for _, ip, _, _, sev in vs)) for ok, vs in rows]
+    """{backend: [(valid, sorted (instance_path, message, severity) records)]}."""
+    return {b: [(ok, sorted((tuple(ip), msg, sev) for _, ip, _, msg, sev in vs)) for ok, vs in rows]
             for b, rows in got.items()}
 
 

@@ -14,12 +14,17 @@ Any disagreement is appended as one JSON line to BENCH/fuzz_findings.jsonl
 with the schema, doc, and per-backend verdicts — enough to replay as a
 fixture.  Exit code is the number of distinct disagreeing schemas.
 
-Usage: python tools/fuzz_differential.py [start_seed] [n_schemas] [bias: ref|data|refdata]
+Usage: python tools/fuzz_differential.py [start_seed] [n_schemas] [bias: ref|data|refdata|config]
 
 `bias=ref` post-processes each random schema to push subschemas behind
 definitions + $ref, sometimes pointing the $ref INTO a combinator node
 (`#/definitions/x/anyOf` resolves to the first-registered branch — the
 registry-shadowing surface where the last three root-cause bugs lived).
+
+`bias=config` routes a random half of each schema's keywords, and the
+names of its `type` members, to warnings, and gives that config to all
+four backends: a warning must never fail a document or a combinator's
+probe on any of them.
 """
 
 from __future__ import annotations
@@ -109,6 +114,7 @@ def main() -> int:
     from json_schema_clj_spark.plans.compiler import ColumnBackendUnsupported
     from test_backend_differential import (
         TABLE_SCHEMA,
+        rand_config,
         rand_row,
         rand_schema,
         row_to_doc,
@@ -134,23 +140,25 @@ def main() -> int:
             schema = bias_ref(schema, rng)
         if bias in ("data", "refdata"):
             schema = bias_data(schema, rng)
+        config = rand_config(rng, schema) if bias == "config" else None
         rows = [rand_row(rng) for _ in range(n_rows)]
         docs = [row_to_doc(r) for r in rows]
 
-        v = engine.compile(schema)
+        v = engine.compile(schema, config=config)
         py_valid = [not v(d)["errors"] for d in docs]
 
         df = spark.createDataFrame(rows, TABLE_SCHEMA)
-        col_valid = [r["valid"] for r in engine.with_validation(df, schema).collect()]
+        col_valid = [r["valid"] for r in engine.with_validation(df, schema, config=config).collect()]
 
         jdf = spark.createDataFrame([(json.dumps(d),) for d in docs], "data_json string")
         udf_valid = [
             r["valid"]
-            for r in engine.validate_json_column(jdf, schema, force_backend="python").collect()
+            for r in engine.validate_json_column(jdf, schema, config=config, force_backend="python").collect()
         ]
 
         try:
-            var_out = engine.validate_json_column(jdf, schema, force_backend="variant")
+            var_out = engine.validate_json_column(jdf, schema, config=config,
+                                                  force_backend="variant")
             var_valid = [r["valid"] for r in var_out.collect()]
             on_variant += 1
         except ColumnBackendUnsupported:
@@ -169,6 +177,7 @@ def main() -> int:
                             {
                                 "seed": si,
                                 "schema": schema,
+                                "config": config,
                                 "doc": d,
                                 "verdicts": verdicts,
                                 "py_errors": v(d)["errors"],
